@@ -5,13 +5,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.checkpoint import latest_done
 from crawspark.sources.tables import TableBackend
 
 
 def run_report(spark: SparkSession, backend: TableBackend,
                checkpoint_table: str = "checkpoint") -> DataFrame:
-    """Per-run rollup: partitions done, docs in/out, spans, drop rate."""
-    ck = backend.read(spark, checkpoint_table)
+    """Per-run rollup of each partition's latest done row: partitions
+    done, docs in/out, spans, drop rate."""
+    ck = latest_done(backend.read(spark, checkpoint_table))
     return (ck.groupBy("run_id")
             .agg(F.count("*").alias("partitions_done"),
                  F.sum("docs_in").alias("docs_in"),

@@ -8,8 +8,8 @@ Usage:
   # or a generated corpus (scaling runs):
   spark-submit ... jobs/extract.py --synthetic 200000 --data-root /tmp/out ...
 
-Resumable: rerunning the same --run-id skips partitions already
-checkpointed with a matching input fingerprint.
+Resumable: rerunning the same --run-id skips partitions whose latest
+checkpoint row has a matching input fingerprint.
 """
 
 from __future__ import annotations
@@ -30,8 +30,12 @@ def main() -> None:
     ap.add_argument("--data-root", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--completed-ts", required=True,
-                    help="injected lineage timestamp (determinism)")
-    ap.add_argument("--n-parts", type=int, default=256)
+                    help="injected lineage timestamp (determinism); must "
+                         "grow from one rerun of a --run-id to the next")
+    ap.add_argument("--n-parts", type=int, default=256,
+                    help="logical partitions: the resume granularity, i.e. "
+                         "the unit a rerun skips or redoes; the extraction "
+                         "runs in min(n-parts, defaultParallelism) tasks")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--master", default=None)
     ap.add_argument("--native", action="store_true",

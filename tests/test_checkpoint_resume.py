@@ -102,3 +102,92 @@ def test_input_drift_invalidates_checkpoint(spark, docs_df, tmp_path):
     r = ck.run(spark, df2, run_id="r1", completed_ts="2026-01-01 01:00:00")
     assert r["partitions_processed"] == 4
     assert r["docs_out"] == 30
+
+
+def _rows(spark, backend):
+    return sorted(tuple(r) for r in backend.read(spark, "extracted_spans")
+                  .select("partition_key", "doc_id", "n_spans", "lang")
+                  .collect())
+
+
+def test_inputs_a_b_a_equal_single_run_on_a(spark, docs_df, tmp_path):
+    # B drops a few documents; the third run sees A again. The partitions
+    # B changed hold B's output although an older done row matches A, so
+    # only the latest done row may decide the skip.
+    single = CheckpointedExtraction(ParquetBackend(str(tmp_path / "single")),
+                                    n_parts=8)
+    single.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+
+    ck = CheckpointedExtraction(ParquetBackend(str(tmp_path / "aba")),
+                                n_parts=8)
+    ck.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+    b = ck.run(spark, docs_df.filter(~docs_df.doc_id.isin(
+        [make_doc(42, i)["doc_id"] for i in range(3)])),
+        run_id="r1", completed_ts="2026-01-01 01:00:00")
+    assert 0 < b["partitions_processed"] < 8
+    a = ck.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 02:00:00")
+    assert _rows(spark, ck.backend) == _rows(spark, single.backend)
+    assert a["partitions_processed"] == b["partitions_processed"]
+
+
+def _python_stages(spark, group):
+    """Task counts of the stages that ran a Python operator in the group's
+    jobs, read from the status tracker and each stage's RDD graph."""
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+
+    def scopes(cluster):
+        kids = cluster.childClusters()
+        return [cluster.name()] + [n for i in range(kids.size())
+                                   for n in scopes(kids.apply(i))]
+
+    out = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            names = scopes(store.operationGraphForStage(sid).rootCluster())
+            if any(op in n for n in names
+                   for op in ("Python", "InArrow", "InPandas")):
+                info = tracker.getStageInfo(sid)
+                if info.numCompletedTasks:  # skipped stages run nothing
+                    out.append(info.numTasks)
+    return out
+
+
+def test_resume_runs_at_most_default_parallelism_python_tasks(
+        spark, docs_df, tmp_path):
+    sc = spark.sparkContext
+    n_parts = 4 * sc.defaultParallelism
+    ck = CheckpointedExtraction(ParquetBackend(str(tmp_path / "w")),
+                                n_parts=n_parts)
+    ck.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00",
+           max_partitions=1)
+    try:
+        sc.setJobGroup("resume-pending", "resume with pending partitions")
+        r = ck.run(spark, docs_df, run_id="r1",
+                   completed_ts="2026-01-01 01:00:00")
+        sc.setJobGroup("resume-nothing", "resume with nothing pending")
+        r0 = ck.run(spark, docs_df, run_id="r1",
+                    completed_ts="2026-01-01 02:00:00")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["partitions_processed"] == n_parts - 1
+    tasks = _python_stages(spark, "resume-pending")
+    assert tasks and max(tasks) <= sc.defaultParallelism
+    assert r0["partitions_processed"] == 0
+    assert not _python_stages(spark, "resume-nothing")
+
+
+def test_checkpoint_done_rows_bounded_by_n_parts(spark, docs_df, tmp_path,
+                                                 caplog):
+    root = str(tmp_path / "bound")
+    CheckpointedExtraction(ParquetBackend(root), n_parts=8).run(
+        spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+    # Fewer logical partitions under the same run_id would leave the old
+    # partitions' results behind; the done-row collect refuses it.
+    with caplog.at_level("INFO", logger="crawspark.checkpoint"):
+        with pytest.raises(RuntimeError, match="exceed the bound 4"):
+            CheckpointedExtraction(ParquetBackend(root), n_parts=4).run(
+                spark, docs_df, run_id="r1",
+                completed_ts="2026-01-01 01:00:00")
+    assert "input fingerprint rows: 4 rows collected (bound 4)" in caplog.text
+    assert "checkpoint done rows: 8 rows collected (bound 4)" in caplog.text

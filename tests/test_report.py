@@ -23,6 +23,17 @@ def test_run_and_extraction_reports(spark, tmp_path):
     assert row["docs_in"] == row["docs_out"] == 30
     assert row["spans_out"] > 0
 
+    # Input drift re-runs every partition under the same run_id; the
+    # rollup counts each partition's latest row once.
+    drift = [make_doc(43, i) for i in range(20)]
+    job.run(spark, spark.createDataFrame(
+        [(d["doc_id"], d["spans"]) for d in drift],
+        schema=DOCUMENTS_INTERLEAVED),
+        run_id="r9", completed_ts="2026-02-01 01:00:00")
+    row = run_report(spark, backend).collect()[0]
+    assert row["partitions_done"] == 4
+    assert row["docs_in"] == row["docs_out"] == 20
+
     ext = extraction_report(extract_documents(df)).collect()
     kinds = {r["kind"] for r in ext}
     assert "text" in kinds and "title" in kinds
