@@ -22,4 +22,8 @@ behavioral loci cited as ``[R: path::symbol]`` are reconstructions of the
 public cortext/crawtext + python-goose behavior from SURVEY.md §2.
 """
 
+from crawspark import zipcache
+
 __version__ = "0.1.0"
+
+zipcache.install()

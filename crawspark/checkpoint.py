@@ -14,9 +14,10 @@ Design:
   changed run again. The input is filtered with ``partition_key IN``.
 - The extraction runs in ``min(n_parts, defaultParallelism)`` tasks:
   ``n_parts`` sets the resume granularity, not the task count. A Python
-  task costs ≈0.23 CPU-s before any work (4-core box, PySpark 4.1,
-  CPython 3.11: ``setup_spark_files`` → ``importlib.invalidate_caches()``
-  → zipimport re-reads ``pyspark.zip``'s directory).
+  task still costs ≈40 CPU-ms before any work (4-core Xeon, PySpark 4.1,
+  CPython 3.11; ≈170 CPU-ms before ``crawspark.zipcache`` stopped each
+  task re-reading the worker's zip archives). Tasks beyond the core
+  count add that cost and no parallelism, so the width stays capped.
 - Results are written with dynamic partition overwrite keyed on
   ``partition_key``: re-processing a partition REPLACES its output files,
   so a crash between the results write and the checkpoint write cannot
@@ -54,23 +55,26 @@ def partition_fingerprints(df: DataFrame) -> DataFrame:
                  F.count("*").alias("docs_in")))
 
 
-def latest_done(ckpt: DataFrame) -> DataFrame:
-    """The latest ``done`` row per (run_id, partition_key) of a checkpoint
-    table: the state its last completed run left the partition in."""
+def latest_done(ckpt: DataFrame, key: str = "partition_key") -> DataFrame:
+    """The latest ``done`` row per (run_id, ``key``) of a checkpoint table:
+    the state its last completed run left the partition (or file) in."""
     return (ckpt.filter(F.col("status") == "done")
-            .groupBy("run_id", "partition_key")
+            .groupBy("run_id", key)
             .agg(F.max_by(F.struct(*ckpt.columns), "completed_ts").alias("r"))
             .select("r.*"))
 
 
-def _collect_by_key(df: DataFrame, what: str, bound: int) -> dict[str, Row]:
+def collect_by_key(df: DataFrame, what: str, bound: int,
+                   key: str = "partition_key") -> dict[str, Row]:
+    """Collect ``df`` keyed on ``key``; log its size and raise past ``bound``."""
     rows = df.collect()
     logging.getLogger(__name__).info("%s: %d rows collected (bound %d)",
                                      what, len(rows), bound)
     if len(rows) > bound:
         raise RuntimeError(f"{what}: {len(rows)} rows exceed the bound {bound}"
-                           " (a larger n_parts earlier under this run_id?)")
-    return {r["partition_key"]: r for r in rows}
+                           " (a wider key space earlier under this run_id,"
+                           " e.g. a larger n_parts?)")
+    return {r[key]: r for r in rows}
 
 
 class CheckpointedExtraction:
@@ -92,12 +96,12 @@ class CheckpointedExtraction:
         Returns counters for the run report.
         """
         keyed = with_partition_key(docs, self.n_parts)
-        fps = _collect_by_key(partition_fingerprints(keyed),
-                              "input fingerprint rows", self.n_parts)
+        fps = collect_by_key(partition_fingerprints(keyed),
+                             "input fingerprint rows", self.n_parts)
         done = {}
         if self.backend.exists(spark, self.checkpoint_table):
             ckpt = self.backend.read(spark, self.checkpoint_table)
-            done = {k: r.input_fingerprint for k, r in _collect_by_key(
+            done = {k: r.input_fingerprint for k, r in collect_by_key(
                 latest_done(ckpt.filter(F.col("run_id") == run_id)),
                 "checkpoint done rows", self.n_parts).items()}
         pending = sorted(k for k, r in fps.items()

@@ -15,7 +15,9 @@ Scale notes (100 TB):
 - the Sparser-style pre-filter (PAPERS.md:L6) short-circuits payloads with
   no markup before tokenization, inside the same batch loop;
 - per-batch memory is bounded by TARGET_BATCH_BYTES regardless of input
-  batch sizing.
+  batch sizing;
+- per-task worker setup re-reads no unchanged zip archive:
+  ``crawspark.zipcache`` guards PySpark's ``importlib.invalidate_caches()``.
 """
 
 from __future__ import annotations

@@ -35,6 +35,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.checkpoint import collect_by_key, latest_done
+
 METRICS_SCHEMA = ("file string, docs_in long, docs_out long, spans_out long, "
                   "input_fingerprint string")
 
@@ -267,19 +269,21 @@ def run_native_checkpointed(spark: SparkSession, input_path: str,
                             run_id: str, completed_ts: str) -> dict:
     """Resumable wrapper: skip files already checkpointed for this run.
 
-    A file is only skipped when its RECORDED fingerprint matches the file's
+    A file is only skipped when its LATEST recorded fingerprint (by
+    ``completed_ts``, as in ``checkpoint.latest_done``) matches the file's
     CURRENT fingerprint — drift (a rewritten input shard) forces re-extract.
     The fingerprint re-check is itself distributed (doc_id-column-only scan
     via mapInArrow) so the driver never reads payload bytes."""
     done: set[str] = set()
     if os.path.isdir(checkpoint_path) and os.listdir(checkpoint_path):
+        files = list_parquet_files(input_path)
+        names = [os.path.basename(f) for f in files]
         ck = spark.read.parquet(checkpoint_path)
-        recorded = {r["file"]: r["input_fingerprint"] for r in
-                    (ck.filter((F.col("run_id") == run_id)
-                               & (F.col("status") == "done"))
-                     .select("file", "input_fingerprint").collect())}
-        candidates = [f for f in list_parquet_files(input_path)
-                      if os.path.basename(f) in recorded]
+        recorded = {k: r["input_fingerprint"] for k, r in collect_by_key(
+            latest_done(ck.filter((F.col("run_id") == run_id)
+                                  & F.col("file").isin(names)), key="file"),
+            "native checkpoint done rows", len(names), key="file").items()}
+        candidates = [f for f, n in zip(files, names) if n in recorded]
         if candidates:
             cdf = (spark.createDataFrame([(f,) for f in candidates],
                                          "path string")

@@ -200,19 +200,21 @@ def approx_distinct_urls_hll(spark, sf_dir):
 """)
 def window_dedup_first(spark, sf_dir):
     # Keep-latest-version semantics [R: page.save upsert-by-url].
-    # r6: max_by with the (ts, -event_id) comparator instead of a
+    # r6: max_by with the (ts, ~event_id) comparator instead of a
     # row_number window — an AGGREGATE does partial (map-side) reduction
     # so only one candidate row per (partition, user) reaches the
     # exchange, where the window shuffled and sorted every event row
     # (guide §2.3 "aggregate before you shuffle"; measured 1.03s →
     # 0.25s at sf1.0). max(ts) then min(event_id) is exactly the
-    # rn=1 row of ORDER BY ts DESC, event_id.
+    # rn=1 row of ORDER BY ts DESC, event_id. bitwise_not (-x - 1) is
+    # strictly decreasing over every long; -event_id overflows at
+    # Long.MIN_VALUE (an ANSI-mode error).
     return (_t(spark, sf_dir, "events")
             .groupBy("user_id")
             .agg(F.max_by(
                 F.struct("event_id", "event_type"),
                 F.struct(F.col("ts"),
-                         (-F.col("event_id")).alias("neg"))).alias("m"))
+                         F.bitwise_not("event_id").alias("inv"))).alias("m"))
             .select("user_id",
                     F.col("m.event_id").alias("event_id"),
                     F.col("m.event_type").alias("event_type")))

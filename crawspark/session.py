@@ -7,6 +7,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{max(1, min(48, ram_gb // 2))}g"
+
+
 def get_spark(master: str | None = None, app: str = "crawspark",
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -32,9 +37,12 @@ def get_spark(master: str | None = None, app: str = "crawspark",
         # Local-mode JVM handles scan + arrow conversion + shuffle for all
         # cores at once; a small heap GC-thrashes under the nested spans
         # payload (measured: 2x throughput variance). On a real cluster
-        # these become per-executor settings in spark-submit.
+        # these become per-executor settings in spark-submit. The default
+        # is capped at half the machine's RAM: a heap allowed past it
+        # lets G1 grow until the kernel's OOM killer takes the JVM (seen
+        # at 15.1 GB resident on a 16 GB box).
         .config("spark.driver.memory",
-                os.environ.get("CRAWSPARK_DRIVER_MEM", "48g"))
+                os.environ.get("CRAWSPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.driver.extraJavaOptions",
                 "-XX:+UseG1GC -XX:G1HeapRegionSize=32m "
                 "-XX:InitiatingHeapOccupancyPercent=60")

@@ -172,3 +172,39 @@ def test_native_checkpoint_resume(spark, tmp_path):
     assert r2["files_processed"] == 0 and r2["files_skipped"] == 4
     after = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     assert before == after and len(before) == 40
+
+
+def test_native_inputs_a_b_a_equal_single_run_on_a(spark, tmp_path):
+    # One input file rewritten A -> B -> A under one run_id: the third run
+    # must compare against B's (latest) fingerprint and re-extract, so the
+    # output equals a single run on A, not B's stale shard.
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    inp = str(tmp_path / "in")
+    os.makedirs(inp)
+    path = os.path.join(inp, "part-0.parquet")
+
+    def write(seed):
+        docs = [make_doc(seed, i) for i in range(8)]
+        pq.write_table(pa.Table.from_pylist(
+            [{"doc_id": d["doc_id"], "spans": d["spans"]} for d in docs]),
+            path)
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    runs = []
+    for hour, seed in enumerate((42, 43, 42)):
+        write(seed)
+        runs.append(run_native_checkpointed(
+            spark, inp, out, ck, "r1", f"2026-01-01 0{hour}:00:00"))
+    assert [r["files_processed"] for r in runs] == [1, 1, 1]
+    single = str(tmp_path / "single")
+    run_native_checkpointed(spark, inp, single, str(tmp_path / "ck1"), "r1",
+                            "2026-01-01 00:00:00")
+
+    def rows(p):
+        return sorted((r["doc_id"], r["lang"], r["n_spans"], str(r["spans"]))
+                      for r in spark.read.parquet(p).collect())
+    assert rows(out) == rows(single)

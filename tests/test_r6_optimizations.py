@@ -89,6 +89,40 @@ def test_window_dedup_first_plan_has_no_window(spark):
     assert "max_by" in plan, plan[:1200]
 
 
+def test_window_dedup_first_ts_tie_at_long_min(spark, tmp_path):
+    # The comparator must not negate event_id: -Long.MIN_VALUE overflows
+    # (an error under ANSI mode). Ties on ts keep the smallest event_id,
+    # as the DuckDB oracle's ORDER BY ts DESC, event_id does.
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crawspark.registry import load_all
+
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    t0, t1 = datetime.datetime(2026, 1, 1), datetime.datetime(2026, 1, 2)
+    events = [(5, t1, 1), (lo, t1, 1), (3, t0, 1),
+              (hi, t1, 2), (lo, t1, 2),
+              (lo, t0, 3), (-7, t1, 3), (0, t1, 3)]
+    pq.write_table(pa.table({
+        "event_id": pa.array([e[0] for e in events], pa.int64()),
+        "ts": pa.array([e[1] for e in events], pa.timestamp("us")),
+        "user_id": pa.array([e[2] for e in events], pa.int64()),
+        "event_type": [f"t{i}" for i in range(len(events))],
+        "value": [1.0] * len(events),
+        "props": [None] * len(events),
+    }), str(tmp_path / "events.parquet"))
+    spec = load_all()["window_dedup_first"]
+    got = sorted(tuple(r) for r in spec.spark(spark, str(tmp_path)).collect())
+    assert got == [(1, lo, "t1"), (2, lo, "t4"), (3, -7, "t6")]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/events.parquet')")
+    assert sorted(con.execute(spec.render_sql(str(tmp_path))).fetchall()) == got
+
+
 def test_winnowing_fp_plan_is_map_only(spark):
     # The array-side selection removed the lag/lead Window and the
     # distinct: the fingerprint pass must plan no Window and no
