@@ -12,7 +12,7 @@ Order matters and is fixed: remove-tags → bad-attr drop → unwrap → div→p
 
 from __future__ import annotations
 
-from crawspark.oracle.dom import Node
+from crawspark.oracle.dom import Document, Node
 from crawspark.rules import (
     BLOCK_TAGS,
     RE_BAD_ATTR,
@@ -22,28 +22,28 @@ from crawspark.rules import (
 )
 
 
-def clean_document(root: Node) -> Node:
+def clean_document(root: Document) -> Document:
     _remove_bad_nodes(root)
+    root.by_tag = None  # the tree stops matching the parser's index
     _unwrap_inline(root)
     _divs_to_paragraphs(root)
     return root
 
 
-def _remove_bad_nodes(root: Node) -> None:
-    # Single snapshot pass evaluating both drop rules (tag blacklist, then
-    # bad-id/class regex with article rescue) — same outcome as two passes:
-    # nodes inside an already-removed subtree are detached no-ops either way.
-    for node in root.iter():
-        if node.parent is None:
-            continue
-        if node.tag in REMOVE_TAGS:
-            node.parent.remove_child(node)
-            continue
-        if node.tag in ("html", "body", "#root"):
-            continue
-        ic = node.id_class()
-        if ic and RE_BAD_ATTR.search(ic) and not RE_GOOD_ATTR.search(ic):
-            node.parent.remove_child(node)
+def _remove_bad_nodes(root: Document) -> None:
+    # Both drop rules (tag blacklist, then bad-id/class regex with article
+    # rescue) depend only on a node's own tag and attributes, so the
+    # dropped set, and the tree left after detaching it, do not depend on
+    # the order of removal: read the nodes from the parser's tag index.
+    for tag, nodes in root.index().items():
+        if tag in REMOVE_TAGS:
+            for node in nodes:
+                node.parent.remove_child(node)
+        elif tag not in ("html", "body", "#root"):
+            for node in nodes:
+                ic = node.id_class()
+                if ic and RE_BAD_ATTR.search(ic) and not RE_GOOD_ATTR.search(ic):
+                    node.parent.remove_child(node)
 
 
 def _unwrap_inline(root: Node) -> None:

@@ -39,6 +39,7 @@ from crawspark.oracle.meta import (
 )
 from crawspark.oracle.pdfparse import extract_pdf_text
 from crawspark.oracle.scorer import merge_siblings, score_nodes
+from crawspark.rules import STOPWORDS
 
 _RE_MOJIBAKE = re.compile(r"Ã[\x80-\xbf-¿]|â€")
 # Sparser-style raw pre-filter (PAPERS.md:L6): a payload with no tag at all
@@ -107,11 +108,15 @@ def extract_document(doc_id: str, spans: list[InSpan]) -> dict:
             root = parse_html(payload)
             meta = extract_meta(root)
         title = extract_title(root)
-        body = root.find_first("body") or root
-        lang = detect_lang(meta["lang"], body.text())
+        lang = meta["lang"]
+        if lang not in STOPWORDS:
+            # detect_lang keeps a meta lang it has stopwords for without
+            # reading the text, so build the body text only for the vote
+            body = root.first("body") or root
+            lang = detect_lang(lang, body.text())
         base_url = meta["base_href"] or meta["canonical"]
         # date + tags read PRE-clean (the tag bar / footer anchors they
-        # live in are exactly what the cleaner strips), in one tree walk
+        # live in are exactly what the cleaner strips)
         publish_date, tags = extract_publish_date_and_tags(root)
         clean_document(root)
         # one stats memo for the whole post-clean pipeline (tree is

@@ -9,7 +9,9 @@ Mirrored stdlib behaviors:
 - convert_charrefs: inter-tag text arrives entity-decoded, as one chunk;
 - script/style content is CDATA (raw text until the literal end tag,
   not entity-decoded, to EOF when unclosed);
-- tolerant attr syntax via html.parser's own ``attrfind_tolerant`` regex;
+- tolerant attr syntax via html.parser's own ``attrfind_tolerant`` regex
+  (a run of plain ``name="value"`` pairs takes one ``findall`` that
+  reads them the same way);
 - comments / doctypes / PIs / marked sections dropped;
 - ``<tag .../>`` → startendtag;
 - markup-like ``<``-runs the scanner cannot consume (truncated tags,
@@ -30,7 +32,7 @@ from html.parser import (  # stdlib's own tolerant start-tag grammar
     tagfind_tolerant,
 )
 
-from crawspark.oracle.dom import Node, _TreeBuilder, parse_html
+from crawspark.oracle.dom import Document, _TreeBuilder, attr_dict, parse_html
 
 # Tag-name char class copied from html.parser's tagfind_tolerant. The `*+`
 # is load-bearing: without a possessive quantifier the final '>' requirement
@@ -75,6 +77,18 @@ _CDATA_CLOSE = {
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
     "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
 }
+
+
+# An attribute run of only ``name="value"`` pairs (plus an optional
+# trailing '/'), with plain names and values free of '"', '<' and '>'. On
+# such a run the candidate span is exactly stdlib's span and its
+# attrfind_tolerant loop reads each pair as (name.lower(), unescape(value)),
+# so one findall replaces _parse_starttag's per-tag and per-attribute
+# regexes. Separators are the HTML whitespace set, a subset of the ``\s``
+# html.parser accepts.
+_WF_ATTRS = re.compile(
+    r'(?:[\t\n\r\f ]+[a-zA-Z][-a-zA-Z0-9_:.]*="[^"<>]*")+[\t\n\r\f ]*/?')
+_WF_ATTR = re.compile(r'([a-zA-Z][-a-zA-Z0-9_:.]*)="([^"<>]*)"')
 
 
 def _parse_starttag(payload: str, s: int):
@@ -133,7 +147,7 @@ def _needs_reference_parser(payload: str) -> bool:
     return False
 
 
-def parse_html_fast(payload: str) -> Node:
+def parse_html_fast(payload: str) -> Document:
     """Single-pass scanner building the same tree as dom.parse_html."""
     if _needs_reference_parser(payload):
         return parse_html(payload)
@@ -152,39 +166,44 @@ def parse_html_fast(payload: str) -> Node:
                 break
             s, e = m.span()
             if s > pos:
-                if _STALL.search(payload, pos, s) is not None:
+                gap = payload[pos:s]
+                if "<" in gap and _STALL.search(gap) is not None:
                     # incomplete markup in the gap (e.g. an unterminated
                     # quoted attr whose value contains a real tag later):
                     # delegate — html.parser may re-enter the scan mid-run
                     # and emit elements the swallow-to-EOF rule would lose
                     return parse_html(payload)
-                b.handle_data(unescape(payload[pos:s]))
+                b.handle_data(unescape(gap))
             pos = e
-            end = m.group("end") or m.group("endws")
-            start = m.group("start")
-            if end is not None:
-                b.handle_endtag(end.lower())
-            elif start is not None:
-                raw_attrs = m.group("attrs")
+            kind = m.lastgroup
+            if kind == "end" or kind == "endws":
+                b.handle_endtag(m.group(kind).lower())
+            elif kind == "attrs":
+                start, raw_attrs = m.group("start", "attrs")
+                tag = start.lower()
                 if not raw_attrs or raw_attrs.isspace():
                     # attr-less tag (the common case): the candidate span IS
                     # the stdlib span — skip the verification regexes
-                    tag = start.lower()
-                    b.handle_starttag(tag, [])
+                    b.add_element(tag, {})
                 else:
-                    parsed = _parse_starttag(payload, s)
-                    if parsed is None:
-                        # stdlib takes a recovery path here — delegate
-                        return parse_html(payload)
-                    tag, attrs, endpos, selfclose = parsed
-                    # stdlib may close the tag EARLIER than the candidate
-                    # span (a '>' inside a quote-run it doesn't treat as a
-                    # value) — rescan the remainder exactly like goahead
-                    pos = endpos
+                    if _WF_ATTRS.fullmatch(raw_attrs) is not None:
+                        attrs = [(k.lower(), unescape(v) if "&" in v else v)
+                                 for k, v in _WF_ATTR.findall(raw_attrs)]
+                        selfclose = raw_attrs[-1] == "/"
+                    else:
+                        parsed = _parse_starttag(payload, s)
+                        if parsed is None:
+                            # stdlib takes a recovery path here — delegate
+                            return parse_html(payload)
+                        tag, attrs, endpos, selfclose = parsed
+                        # stdlib may close the tag EARLIER than the
+                        # candidate span (a '>' inside a quote-run it
+                        # doesn't treat as a value) — rescan the remainder
+                        # exactly like goahead
+                        pos = endpos
+                    b.add_element(tag, attr_dict(attrs), selfclose)
                     if selfclose:
-                        b.handle_startendtag(tag, attrs)
                         continue
-                    b.handle_starttag(tag, attrs)
                 closer = _CDATA_CLOSE.get(tag)
                 if closer is not None:
                     # CDATA mode: raw (never entity-decoded) text until the

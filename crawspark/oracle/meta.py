@@ -9,19 +9,19 @@ from __future__ import annotations
 
 import re
 
-from crawspark.oracle.dom import Node
+from crawspark.oracle.dom import Document, Node
 from crawspark.oracle.stats import tokenize, tokenize_for_lang
 from crawspark.rules import STOPWORDS, TITLE_SPLITTERS, VOTE_LANGS
 
 _RE_LANG = re.compile(r"^[a-zA-Z]{2}")
 
 
-def extract_title(root: Node) -> str:
+def extract_title(root: Document) -> str:
     """<title> text with the site-name fragment stripped: split on the
     first splitter present, keep the LONGEST fragment [R: get_title]."""
-    tnode = root.find_first("title")
+    tnode = root.first("title")
     if tnode is None:
-        h1 = root.find_first("h1")
+        h1 = root.first("h1")
         return h1.text() if h1 is not None else ""
     title = tnode.text()
     for splitter in TITLE_SPLITTERS:
@@ -34,16 +34,16 @@ def extract_title(root: Node) -> str:
     return title.strip()
 
 
-def extract_meta(root: Node) -> dict[str, str]:
+def extract_meta(root: Document) -> dict[str, str]:
     """description / keywords / lang / canonical / base_href / charset."""
     out = {"description": "", "keywords": "", "lang": "", "canonical": "",
            "base_href": "", "charset": ""}
-    html = root.find_first("html")
+    html = root.first("html")
     if html is not None and html.attr("lang"):
         m = _RE_LANG.match(html.attr("lang"))
         if m:
             out["lang"] = m.group(0).lower()
-    for meta in root.find_all("meta"):
+    for meta in root.elements("meta"):
         name = meta.attr("name").lower()
         http_equiv = meta.attr("http-equiv").lower()
         content = meta.attr("content")
@@ -63,10 +63,10 @@ def extract_meta(root: Node) -> dict[str, str]:
                 out["lang"] = m.group(0).lower()
         elif http_equiv == "content-type" and "charset=" in content.lower():
             out["charset"] = content.lower().split("charset=")[-1].strip()
-    for link in root.find_all("link"):
+    for link in root.elements("link"):
         if link.attr("rel").lower() == "canonical" and not out["canonical"]:
             out["canonical"] = link.attr("href").strip()
-    base = root.find_first("base")
+    base = root.first("base")
     if base is not None:
         out["base_href"] = base.attr("href").strip()
     return out
@@ -110,43 +110,26 @@ def _tags_from(anchors: list[Node]) -> list[str]:
     return out
 
 
-def extract_publish_date_and_tags(root: Node) -> tuple[str, list[str]]:
-    """Publish date + article tags in ONE tree walk (the hot extraction
-    path calls this; separate find walks measured ~5% of whole-document
-    extraction). Semantics: see extract_publish_date / extract_tags."""
-    metas: list[Node] = []
-    anchors: list[Node] = []
-    time_el: Node | None = None
-    for n in root.iter():
-        if n.tag == "meta":
-            metas.append(n)
-        elif n.tag == "a":
-            anchors.append(n)
-        elif n.tag == "time" and time_el is None:
-            time_el = n
-    return _date_from(metas, time_el), _tags_from(anchors)
+def extract_publish_date_and_tags(root: Document) -> tuple[str, list[str]]:
+    """Publish date + article tags, read from the parser's tag index.
+    Semantics: see extract_publish_date / extract_tags."""
+    return (_date_from(root.elements("meta"), root.first("time")),
+            _tags_from(root.elements("a")))
 
 
-def extract_publish_date(root: Node) -> str:
+def extract_publish_date(root: Document) -> str:
     """Publish date from known meta tags (priority order), falling back to
     the first ``<time datetime=...>`` element. Returns the raw trimmed
     attribute value ('' when absent) — normalization is the consumer's
     job; determinism is this function's."""
-    metas: list[Node] = []
-    time_el: Node | None = None
-    for n in root.iter():
-        if n.tag == "meta":
-            metas.append(n)
-        elif n.tag == "time" and time_el is None:
-            time_el = n
-    return _date_from(metas, time_el)
+    return extract_publish_date_and_tags(root)[0]
 
 
-def extract_tags(root: Node) -> list[str]:
+def extract_tags(root: Document) -> list[str]:
     """Article tags: text of anchors carrying rel="tag" (word match) or a
     '/tag/' path segment [R: goose/extractors.py::extract_tags — the
     a[rel=tag] CSS walk]. Document order, deduped, empty texts dropped."""
-    return _tags_from(root.find_all("a"))
+    return extract_publish_date_and_tags(root)[1]
 
 
 def detect_lang(meta_lang: str, text: str) -> str:

@@ -67,6 +67,16 @@ def test_valid_declaration_honored():
     assert decode_bytes(data, "cp1252") == ACCENTED
 
 
+def test_undeclared_cp1252_bytes_valid_as_utf8_decode_as_utf8():
+    # "Ã©" in cp1252 is b"\xc3\xa9", which is also valid UTF-8 for "é".
+    # With no BOM, meta or declaration the strict-UTF-8 probe runs before
+    # statistical detection and wins.
+    data = "Ã©".encode("cp1252")
+    assert data == "é".encode("utf-8")
+    assert decode_bytes(data) == "é"
+    assert decode_bytes(b"caf" + data + b" au lait") == "café au lait"
+
+
 def test_unknown_declared_charset_ignored():
     assert decode_bytes(b"plain ascii", "klingon-8") == "plain ascii"
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from crawspark.corpus import make_corpus, make_doc, make_pdf
 from crawspark.oracle.cleaner import clean_document
 from crawspark.oracle.dom import parse_html
@@ -199,6 +201,20 @@ def test_publish_date_priority_and_fallback():
     assert extract_publish_date(parse_html(
         "<body><time datetime='2022-02-02'>x</time></body>")) == "2022-02-02"
     assert extract_publish_date(parse_html("<p>no date</p>")) == ""
+
+
+def test_pre_clean_readers_raise_on_cleaned_root():
+    from crawspark.oracle.meta import extract_meta, extract_publish_date_and_tags
+
+    root = parse_html("<html lang='de'><head><title>T</title></head>"
+                      "<body><div class='sidebar'><a rel='tag'>x</a></div>"
+                      "<p>text</p></body></html>")
+    assert extract_meta(root)["lang"] == "de"
+    assert extract_publish_date_and_tags(root) == ("", ["x"])
+    clean_document(root)  # drops the sidebar and its anchor
+    for reader in (extract_meta, extract_title, extract_publish_date_and_tags):
+        with pytest.raises(RuntimeError, match="clean_document"):
+            reader(root)
 
 
 def test_tags_rel_and_href_paths():
