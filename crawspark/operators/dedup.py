@@ -72,41 +72,18 @@ def dedup_exact(spark, sf_dir):
                  F.count("*").alias("n_copies")))
 
 
-def shingle_rows_capped(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) with distinct word-3-gram shingles, hot shingles
-    (df > DF_CAP) dropped. The explode output is the inverted index."""
-    spark = docs.sparkSession
-    docs = (docs.repartition(spark.sparkContext.defaultParallelism)
-            .withColumn("toks", F.expr(_TOKS))
-            .filter(F.size("toks") >= 3)
-            .withColumn("shingles", F.expr(_SHINGLES))
-            .select("doc_id", "shingles"))
-    sh = docs.select("doc_id", F.explode("shingles").alias("shingle"))
-    hot = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
-           .filter(F.col("df") > DF_CAP).select("shingle"))
-    # hot is tiny (only boilerplate keys) → broadcast anti-join, no shuffle
-    # of the full posting list.
-    return sh.join(F.broadcast(hot), "shingle", "left_anti")
-
-
-def _shingle_table(spark, sf_dir) -> DataFrame:
-    return shingle_rows_capped(read_testdata(spark, sf_dir, "documents"))
-
-
 def capped_shingle_arrays(docs: DataFrame) -> DataFrame:
     """(doc_id, shs): each doc's DISTINCT post-cap shingle set as an
-    ARRAY, computed map-side — the r6 shape for every consumer that
-    needs per-doc shingle sets or signatures. The hot set (df > DF_CAP)
-    is aggregated once (the only exchange), collected into a single-row
-    array (bounded: only boilerplate keys survive the cap), broadcast,
-    and array_except'd from each doc's distinct shingle array — so the
-    per-doc set/signature pipeline never shuffles by doc_id at all
-    (the r5 shape exploded to (doc_id, shingle) rows and re-aggregated
-    them back per doc: one full posting-table exchange both ways).
-    Docs whose every shingle is hot drop (same as having no post-cap
-    posting rows). The base arrays are checkpointed: the hot aggregate
-    and the except pass both consume them, and the tokenize+shingle
-    HOFs are the dominant CPU."""
+    ARRAY, computed map-side — the ONE post-cap shingle constructor every
+    dedup query reads (pair joins explode it, signatures hash it). The
+    hot set (df > DF_CAP) is aggregated once (the only exchange),
+    collected into a single-row array (bounded: only boilerplate keys
+    survive the cap), broadcast, and array_except'd from each doc's
+    distinct shingle array — so the per-doc set/signature pipeline never
+    shuffles by doc_id at all. Docs whose every shingle is hot drop.
+    The base arrays are checkpointed: the hot aggregate and the except
+    pass both consume them, and the tokenize+shingle HOFs are the
+    dominant CPU."""
     spark = docs.sparkSession
     base = (docs.repartition(spark.sparkContext.defaultParallelism)
             .withColumn("toks", F.expr(_TOKS))
@@ -123,6 +100,35 @@ def capped_shingle_arrays(docs: DataFrame) -> DataFrame:
                     F.array_except("shs", F.coalesce(
                         "hot", F.expr("array()"))).alias("shs"))
             .filter(F.size("shs") > 0))
+
+
+def _shared_shingle_pairs(arrays: DataFrame) -> DataFrame:
+    """(doc_a < doc_b, n_sh_a, n_sh_b, n_common, jaccard) for every doc
+    pair that shares a post-cap shingle: the inverted-index self-join over
+    (doc_id, shs) arrays — the shuffle key is the shingle, so only docs
+    sharing one ever meet, and DF_CAP bounds any posting list's pair
+    fanout. Each posting row CARRIES its doc's set size, which rides in
+    the group key (functionally dependent on the doc_id), so one
+    aggregation emits n_common AND both sizes, and the exact post-cap
+    Jaccard needs no join back to a sizes table. Eager localCheckpoint,
+    not cache(): both join sides read the posting table, it materializes
+    exactly once, and ContextCleaner reclaims the blocks when the
+    DataFrame is unreferenced."""
+    ex = (arrays.select("doc_id", F.size("shs").alias("n_sh"),
+                        F.explode("shs").alias("shingle"))
+          .localCheckpoint(eager=True))
+    a = ex.alias("a")
+    b = ex.alias("b")
+    return (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b"),
+                     F.col("a.n_sh").alias("n_sh_a"),
+                     F.col("b.n_sh").alias("n_sh_b"))
+            .agg(F.count("*").alias("n_common"))
+            .withColumn("jaccard", F.col("n_common").cast("double")
+                        / (F.col("n_sh_a") + F.col("n_sh_b")
+                           - F.col("n_common"))))
 
 
 @register("dedup_ngram_jaccard", sql=f"""
@@ -143,39 +149,14 @@ def capped_shingle_arrays(docs: DataFrame) -> DataFrame:
     WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.05
 """)
 def dedup_ngram_jaccard(spark, sf_dir):
-    # Word-3-gram Jaccard near-dup over the FULL table: explode distinct
-    # shingles, self-join on the shingle (the classic inverted-index pair
-    # generation — shuffle key is the shingle, so only docs sharing a
-    # shingle ever meet; DF_CAP bounds any posting list's pair fanout).
-    # r6 rework (guide §2.3/§2.4): postings explode from the MAP-SIDE
-    # capped arrays and each row CARRIES its doc's post-cap shingle
-    # count, so the pair aggregation emits n_common AND both sizes in
-    # one pass — the r5 plan joined the (much larger) overlap table
-    # against `sizes` twice, re-shuffling every candidate pair by doc_a
-    # and again by doc_b. n_sh rides in the GROUP KEY (functionally
-    # dependent on the doc_id) — plan: pair path is 2 exchanges, not 4.
-    # Eager localCheckpoint, not cache(): both join sides read the
-    # posting table, it materializes exactly once, and ContextCleaner
-    # reclaims the blocks when the DataFrame is unreferenced.
-    docs = read_testdata(spark, sf_dir, "documents")
-    ex = (capped_shingle_arrays(docs)
-          .select("doc_id", F.size("shs").alias("n_sh"),
-                  F.explode("shs").alias("shingle"))
-          .localCheckpoint(eager=True))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    overlap = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                      & (F.col("a.doc_id") < F.col("b.doc_id")))
-               .groupBy(F.col("a.doc_id").alias("doc_a"),
-                        F.col("b.doc_id").alias("doc_b"),
-                        F.col("a.n_sh").alias("n_sh_a"),
-                        F.col("b.n_sh").alias("n_sh_b"))
-               .agg(F.count("*").alias("n_common")))
-    jac = (F.col("n_common").cast("double")
-           / (F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")))
+    # Word-3-gram Jaccard near-dup over the FULL table: every pair the
+    # inverted-index self-join meets, scored from the sizes it carries.
+    overlap = _shared_shingle_pairs(
+        capped_shingle_arrays(read_testdata(spark, sf_dir, "documents")))
     return (overlap
-            .filter(jac >= 0.05)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard")))
+            .filter(F.col("jaccard") >= 0.05)
+            .select("doc_a", "doc_b",
+                    F.round("jaccard", 4).alias("jaccard")))
 
 
 # ---------------------------------------------------------------------------
@@ -194,29 +175,14 @@ RESOLVE_N_HASHES = 32
 RESOLVE_BANDS = 16
 
 
-def _signatures_from_rows(sh_rows: DataFrame, n_hashes: int) -> DataFrame:
-    """(doc_id, shingle) rows → doc_id + n_hashes minhash columns.
-
-    The shingle string is hashed ONCE; the hash functions re-hash that
-    8-byte value (xxhash64(h, i)) — long hashing in codegen instead of n
-    string hashes (ANSI-safe: no overflowing arithmetic). min() over a
-    multiset equals min() over its set, so duplicate shingle rows cannot
-    change a minhash."""
-    h = sh_rows.withColumn("h", F.xxhash64("shingle"))
-    aggs = [F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh{i}")
-            for i in range(n_hashes)]
-    return h.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_signatures(df: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """doc_id → n_hashes minhash values, computed ARRAY-SIDE (r6): the
-    per-doc distinct shingle array is hashed once, and each minhash is
-    array_min over re-hashes of those longs — all map-side codegen, so
-    the signature pipeline has ZERO exchanges (the r5 shape exploded
-    ~n_tokens rows per doc and re-aggregated them by doc_id). min over
-    the distinct set equals min over the raw multiset, so signatures are
-    bit-identical to the row-aggregation form (same xxhash64(h, i)
-    chain; pinned by tests/test_recall.py's recall floors)."""
+    """doc_id → n_hashes minhash values, computed ARRAY-SIDE: the per-doc
+    distinct shingle array is hashed once, and each minhash is array_min
+    over re-hashes of those longs — all map-side codegen, so the
+    signature pipeline has ZERO exchanges. min over the distinct set
+    equals min over the raw multiset, so signatures equal a per-shingle
+    row aggregation of the same xxhash64(h, i) chain (pinned by
+    tests/test_r6_optimizations.py against a test-local reference)."""
     spark = df.sparkSession
     base = (df.repartition(spark.sparkContext.defaultParallelism)
             .withColumn("toks", F.expr(_TOKS))
@@ -230,7 +196,10 @@ def minhash_signatures(df: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
 def _sig_cols_from_arrays(base: DataFrame, n_hashes: int,
                           keep: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, hs: array<long>) → doc_id [, keep...] + mh0..mhN columns
-    via array_min(transform(hs, h -> xxhash64(h, i)))."""
+    via array_min(transform(hs, h -> xxhash64(h, i))). Each shingle
+    string is hashed ONCE (into hs); the hash functions re-hash that
+    8-byte value — long hashing in codegen instead of n string hashes
+    (ANSI-safe: no overflowing arithmetic)."""
     cols = [F.array_min(F.expr(f"transform(hs, h -> xxhash64(h, {i}))"))
             .alias(f"mh{i}") for i in range(n_hashes)]
     return base.select("doc_id", *keep, *cols)
@@ -238,10 +207,13 @@ def _sig_cols_from_arrays(base: DataFrame, n_hashes: int,
 
 def _band_table_from_sig(sig: DataFrame, n_hashes: int,
                          bands: int) -> DataFrame:
-    """doc_id + mh0..mhN columns → (doc_id, band_id, band_hash) rows."""
+    """doc_id + mh0..mhN columns → (doc_id, band_id, band_hash): one row
+    per (doc, band). Docs agreeing on any full band hash become
+    candidate pairs — near-dup candidate generation shuffles only these
+    small derived keys."""
     rows_per_band = n_hashes // bands
     # One pass: band hashes as columns, then a single stack() explode —
-    # a per-band union would recompute the signature aggregation B times.
+    # a per-band union would recompute the signature columns B times.
     band_cols = [F.xxhash64(*[F.col(f"mh{b * rows_per_band + r}")
                               for r in range(rows_per_band)]).alias(f"bh{b}")
                  for b in range(bands)]
@@ -251,36 +223,12 @@ def _band_table_from_sig(sig: DataFrame, n_hashes: int,
     return wide.select("doc_id", F.expr(stack_expr))
 
 
-def band_table_from_rows(sh_rows: DataFrame, n_hashes: int,
-                         bands: int) -> DataFrame:
-    """(doc_id, band_id, band_hash): one row per (doc, band). Docs agreeing
-    on any full band hash become candidate pairs — the 100 TB near-dup
-    candidate generation shuffles only these small derived keys."""
-    return _band_table_from_sig(
-        _signatures_from_rows(sh_rows, n_hashes), n_hashes, bands)
-
-
 def lsh_band_table(df: DataFrame, n_hashes: int = N_HASHES,
                    bands: int = BANDS) -> DataFrame:
-    # Array-side signatures (r6): the band table is now map-only — the
-    # only exchange in an LSH query is the band self-join itself.
+    # Array-side signatures: the band table is map-only — the only
+    # exchange in an LSH query is the band self-join itself.
     return _band_table_from_sig(minhash_signatures(df, n_hashes),
                                 n_hashes, bands)
-
-
-def candidates_from_rows(sh_rows: DataFrame, n_hashes: int,
-                         bands: int) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) from the band join.
-
-    The band table feeds BOTH sides of the self-join — materialize it
-    once (eager localCheckpoint) or the whole shingle+minhash pipeline
-    executes twice inside the one job. (Cluster note: localCheckpoint
-    blocks have no lineage; in a long multi-tenant cluster job prefer
-    persist + explicit unpersist, or a reliable checkpoint dir — here the
-    recompute-on-executor-loss concern doesn't apply to local mode.)"""
-    exploded = band_table_from_rows(
-        sh_rows, n_hashes, bands).localCheckpoint(eager=True)
-    return _candidates_from_bands(exploded)
 
 
 def _candidates_from_bands(exploded: DataFrame) -> DataFrame:
@@ -293,13 +241,6 @@ def _candidates_from_bands(exploded: DataFrame) -> DataFrame:
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
-
-
-def lsh_candidates(df: DataFrame, n_hashes: int = N_HASHES,
-                   bands: int = BANDS) -> DataFrame:
-    exploded = lsh_band_table(df, n_hashes, bands).localCheckpoint(
-        eager=True)
-    return _candidates_from_bands(exploded)
 
 
 @register("dedup_minhash_lsh")  # rows-only (Spark-hash-specific banding)
@@ -461,17 +402,16 @@ def dedup_minhash_resolve(spark, sf_dir):
     # End-to-end fuzzy dedup: LSH candidates → exact-Jaccard verify on the
     # candidate pairs ONLY → connected components → keeper assignment.
     # Candidates, verify, and the DuckDB oracle all work over the SAME
-    # post-cap shingle universe (one _shingle_table pass feeds minhash
-    # signatures AND the verify sets): with raw-shingle minhashes, a pair
-    # whose similarity lives in its rare shingles but is diluted by
+    # post-cap shingle universe (one _resolve_combined table carries the
+    # minhash signatures AND the verify sets): with raw-shingle minhashes,
+    # a pair whose similarity lives in its rare shingles but is diluted by
     # boilerplate (hot) shingles would slip past the banding even though
     # its post-cap jaccard is >= 0.8 (r2 review finding). With 16x2
     # banding the candidate set provably contains every capped-jaccard
     # >=0.8 pair (see RESOLVE_* constants), so the verified edge set —
     # and hence the components — equal the exact all-pairs oracle.
-    combined = _resolve_combined(spark, sf_dir)
-    cands = _candidates_from_bands(_band_table_from_sig(
-        combined, RESOLVE_N_HASHES, RESOLVE_BANDS))
+    combined = _resolve_combined(read_testdata(spark, sf_dir, "documents"))
+    cands = _resolve_candidates(combined)
     # verified is consumed twice downstream (count + collect/propagate) —
     # materialize the tiny edge list so the verify join runs once.
     verified = (_verify_exact(cands, combined)
@@ -482,23 +422,27 @@ def dedup_minhash_resolve(spark, sf_dir):
                        F.col("label").alias("keep_id"))
 
 
-def _resolve_combined(spark, sf_dir) -> DataFrame:
-    """(doc_id, shingles, mh0..mh31): distinct post-cap shingle set AND
-    the RESOLVE_N_HASHES minhashes, computed ARRAY-SIDE from the
-    map-side capped arrays (r6 — the r5 shape exploded the posting
-    table and re-aggregated it by doc_id: one full posting exchange
-    carrying every shingle string, plus 32 agg buffers). min over the
-    distinct array equals min over the posting multiset, so signatures
-    and verify sets are identical. Checkpointed once; feeds band
-    generation AND the exact-verify join. Shared by
-    dedup_minhash_resolve and dedup_incremental_minhash."""
-    arrays = capped_shingle_arrays(read_testdata(spark, sf_dir, "documents"))
+def _resolve_combined(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles, mh0..mh31): each doc's distinct post-cap
+    shingle set AND its RESOLVE_N_HASHES minhashes, computed ARRAY-SIDE
+    from capped_shingle_arrays, so signatures and verify sets come from
+    the one set. Checkpointed once; feeds band generation AND the exact
+    side (verify join or pair join). Shared by dedup_minhash_resolve,
+    dedup_lsh_containment and dedup_incremental_minhash."""
+    arrays = capped_shingle_arrays(docs)
     base = arrays.select(
         "doc_id", F.col("shs").alias("shingles"),
         F.expr("transform(shs, s -> xxhash64(s))").alias("hs"))
     return (_sig_cols_from_arrays(base, RESOLVE_N_HASHES,
                                   keep=("shingles",))
             .localCheckpoint(eager=True))
+
+
+def _resolve_candidates(combined: DataFrame) -> DataFrame:
+    """Resolve's LSH candidate pairs: the 16x2 band self-join over a
+    _resolve_combined table."""
+    return _candidates_from_bands(_band_table_from_sig(
+        combined, RESOLVE_N_HASHES, RESOLVE_BANDS))
 
 
 def _verify_exact(cands: DataFrame, combined: DataFrame) -> DataFrame:
@@ -548,32 +492,20 @@ def _verify_exact(cands: DataFrame, combined: DataFrame) -> DataFrame:
 def dedup_lsh_containment(spark, sf_dir):
     # Driver-checkable LSH recall (VERDICT r3 "what's wrong" #3): compute
     # the EXACT jaccard>=0.8 pair set via the inverted-index join over the
-    # post-cap shingle universe, then left-join it against the 16x2-band
-    # LSH candidate set and count covered/uncovered. The DuckDB oracle
+    # post-cap shingle universe, then left-join it against resolve's own
+    # 16x2-band LSH candidate set (same _resolve_combined table, same
+    # _resolve_candidates) and count covered/uncovered. The DuckDB oracle
     # replays the exact side in SQL and pins n_uncovered = 0 — a banding
     # bug (or a recall regression) produces a nonzero uncovered count and
     # flips the driver hash. Probabilistic tail: a pair at jaccard==0.8
     # misses a 16x2 banding with p = (1 - 0.8^2)^16 ~ 8e-8 — if this row
     # EVER goes red with n_uncovered=1, suspect that tail before code
     # (same triage note as RESOLVE_* constants).
-    sh = _shingle_table(spark, sf_dir).localCheckpoint(eager=True)
-    cands = candidates_from_rows(sh, RESOLVE_N_HASHES, RESOLVE_BANDS)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    overlap = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                      & (F.col("a.doc_id") < F.col("b.doc_id")))
-               .groupBy(F.col("a.doc_id").alias("doc_a"),
-                        F.col("b.doc_id").alias("doc_b"))
-               .agg(F.count("*").alias("n_common")))
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = (F.col("n_common").cast("double")
-           / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")))
-    exact = (overlap
-             .join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-             .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-             .filter(jac >= 0.8)
+    combined = _resolve_combined(read_testdata(spark, sf_dir, "documents"))
+    cands = _resolve_candidates(combined)
+    exact = (_shared_shingle_pairs(
+                 combined.select("doc_id", F.col("shingles").alias("shs")))
+             .filter(F.col("jaccard") >= 0.8)
              .select("doc_a", "doc_b"))
     joined = exact.join(cands.withColumn("covered", F.lit(1)),
                         ["doc_a", "doc_b"], "left")
@@ -654,9 +586,9 @@ def dedup_exact_substring(spark, sf_dir):
 
 @register("dedup_simhash")  # rows-only check (Spark-hash-specific)
 def dedup_simhash(spark, sf_dir):
-    # 32-bit SimHash from token hashes, all JVM-side: per-bit sign sums via
-    # 32 conditional aggregates, then Hamming-bucket grouping on the
-    # fingerprint's top half (cheap blocking key). Emits the per-block
+    # 32-bit SimHash from token hashes, all JVM-side: per-bit sign sums
+    # folded over each doc's token hashes, then Hamming-bucket grouping on
+    # the fingerprint's top half (cheap blocking key). Emits the per-block
     # histogram (not one aggregate) so block-structure regressions show.
     sig = simhash_signatures(read_testdata(spark, sf_dir, "documents"))
     blocks = (sig.withColumn("block", F.shiftright(F.col("simhash"), 16))
@@ -666,21 +598,23 @@ def dedup_simhash(spark, sf_dir):
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """doc_id → 32-bit simhash (long): sign of per-bit weighted sums."""
-    tok = (docs.withColumn("toks", F.expr(_TOKS))
-           .select("doc_id", F.explode("toks").alias("tok"))
-           .withColumn("h", F.xxhash64("tok")))
-    bit_aggs = [
-        F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1,
-                     1).otherwise(-1)).alias(f"b{i}")
-        for i in range(32)
-    ]
-    sums = tok.groupBy("doc_id").agg(*bit_aggs)
+    """doc_id → 32-bit simhash (long): sign of per-bit weighted sums,
+    computed ARRAY-SIDE per doc (each token hashed once, then one
+    aggregate() fold per bit over the hash array) — map-only, no shuffle.
+    Every token occurrence votes, repeats included. Docs with no tokens
+    drop."""
+    # The hash array is bound through a Generate barrier so the filter
+    # cannot inline (and re-run) the tokenizer.
+    base = (docs.select("doc_id", F.explode(F.array(F.expr(
+                f"transform({_TOKS}, t -> xxhash64(t))"))).alias("hs"))
+            .filter(F.size("hs") > 0))
     fp = F.lit(0).cast("long")
     for i in range(32):
-        fp = fp + F.when(F.col(f"b{i}") > 0,
+        votes = F.expr(f"aggregate(hs, 0, (acc, h) -> acc + "
+                       f"IF((shiftright(h, {i}) & 1) = 1, 1, -1))")
+        fp = fp + F.when(votes > 0,
                          F.lit(2 ** i).cast("long")).otherwise(F.lit(0))
-    return sums.select("doc_id", fp.alias("simhash"))
+    return base.select("doc_id", fp.alias("simhash"))
 
 
 @register("dedup_minhash_incremental", sql=f"""
@@ -713,11 +647,9 @@ def dedup_minhash_incremental(spark, sf_dir):
     # precomputed, incrementally-maintained index in production; here
     # it is rebuilt per run). Same post-cap shingle universe, 16x2
     # banding, and exact-Jaccard verify as dedup_minhash_resolve, so
-    # the DuckDB all-pairs oracle is exact.
-    # Same combined table as dedup_minhash_resolve (r6: previously an
-    # inline copy of the row-aggregation pipeline — now the shared
-    # array-side build, one definition).
-    combined = _resolve_combined(spark, sf_dir)
+    # the DuckDB all-pairs oracle is exact: the combined table is
+    # dedup_minhash_resolve's own.
+    combined = _resolve_combined(read_testdata(spark, sf_dir, "documents"))
     bands = _band_table_from_sig(combined, RESOLVE_N_HASHES,
                                  RESOLVE_BANDS)
     new_side = bands.filter(F.col("doc_id") % 3 == 0).alias("a")
@@ -786,9 +718,9 @@ def dedup_minhash_incremental(spark, sf_dir):
           / (sa.n_sh + sb.n_sh - n_common) < 0.8
 """)
 def dedup_containment_pairs(spark, sf_dir):
-    # Same inverted-index pair generation as dedup_ngram_jaccard with
-    # the UNDIRECTED (a < b) join — half the pair rows through the
-    # dominant shuffle (r5 review) — then BOTH directed containments
+    # Same inverted-index pair generation as dedup_ngram_jaccard
+    # (_shared_shingle_pairs: UNDIRECTED a < b, half the pair rows
+    # through the dominant shuffle), then BOTH directed containments
     # emitted post-aggregation from each undirected row via explode.
     # The jaccard < 0.8 filter keeps only what the symmetric resolve
     # path misses.
@@ -800,28 +732,14 @@ def dedup_containment_pairs(spark, sf_dir):
                       F.concat_ws(" ", F.slice(F.split("text", " "), 1, 12))
                       .alias("text")))
     aug = docs.select("doc_id", "text").unionByName(plants)
-    sh = shingle_rows_capped(aug).localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    overlap = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                      & (F.col("a.doc_id") < F.col("b.doc_id")))
-               .groupBy(F.col("a.doc_id").alias("u"),
-                        F.col("b.doc_id").alias("v"))
-               .agg(F.count("*").alias("n_common")))
-    su = sizes.alias("su")
-    sv = sizes.alias("sv")
-    jac = (F.col("n_common").cast("double")
-           / (F.col("su.n_sh") + F.col("sv.n_sh") - F.col("n_common")))
-    pair = lambda da, db, denom: F.struct(  # noqa: E731
+    overlap = _shared_shingle_pairs(capped_shingle_arrays(aug))
+    pair = lambda da, db, n_sh: F.struct(  # noqa: E731
         F.col(da).alias("doc_a"), F.col(db).alias("doc_b"),
-        (F.col("n_common").cast("double") / F.col(denom))
-        .alias("containment"), jac.alias("jaccard"))
+        (F.col("n_common").cast("double") / F.col(n_sh))
+        .alias("containment"), F.col("jaccard"))
     return (overlap
-            .join(su, F.col("u") == F.col("su.doc_id"))
-            .join(sv, F.col("v") == F.col("sv.doc_id"))
-            .select(F.explode(F.array(pair("u", "v", "su.n_sh"),
-                                      pair("v", "u", "sv.n_sh")))
+            .select(F.explode(F.array(pair("doc_a", "doc_b", "n_sh_a"),
+                                      pair("doc_b", "doc_a", "n_sh_b")))
                     .alias("p"))
             .select("p.*")
             .filter((F.col("containment") >= 0.8)
@@ -1159,7 +1077,7 @@ def site_template_fingerprints(spark, sf_dir):
     WHERE j >= 0.8 AND (doc_a % 10 = 0 OR doc_b % 10 = 0)
 """)
 def dedup_incremental_minhash(spark, sf_dir):
-    combined = _resolve_combined(spark, sf_dir)
+    combined = _resolve_combined(read_testdata(spark, sf_dir, "documents"))
     bt = _band_table_from_sig(combined, RESOLVE_N_HASHES, RESOLVE_BANDS)
     is_new = F.col("doc_id") % 10 == 0
     newb = bt.filter(is_new)

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from crawspark.operators import dedup
+from crawspark.sources import read_testdata
 
 
 @pytest.fixture()
@@ -68,7 +69,11 @@ def test_df_cap_fires_and_matches_oracle(spark, hot_corpus):
 
 
 def test_df_cap_drops_hot_shingles_from_inverted_index(spark, hot_corpus):
-    sh = dedup._shingle_table(spark, hot_corpus)
+    # The inverted index is the exploded capped arrays (the postings
+    # every pair join self-joins on): no posting list may exceed the cap.
+    docs = read_testdata(spark, hot_corpus, "documents")
+    sh = dedup.capped_shingle_arrays(docs).select(
+        F.explode("shs").alias("shingle"))
     max_df = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
               .agg(F.max("df")).collect()[0][0])
     assert max_df <= dedup.DF_CAP, "posting lists must be capped"

@@ -12,44 +12,57 @@ from crawspark.sources import read_testdata
 SF = "/root/testdata/sf0.001"
 
 
-def test_capped_arrays_match_capped_rows(spark):
-    # capped_shingle_arrays (map-side, array_except of the broadcast hot
-    # set) must produce exactly the per-doc sets of the row-based
-    # shingle_rows_capped it replaced on the signature paths.
-    from crawspark.operators.dedup import (
-        capped_shingle_arrays,
-        shingle_rows_capped,
-    )
-
-    docs = read_testdata(spark, SF, "documents")
-    arr = {r["doc_id"]: set(r["shs"])
-           for r in capped_shingle_arrays(docs).collect()}
-    rows: dict[int, set] = {}
-    for r in shingle_rows_capped(docs).collect():
-        rows.setdefault(r["doc_id"], set()).add(r["shingle"])
-    assert arr == rows
-
-
 def test_array_side_signatures_match_row_aggregation(spark):
-    # minhash_signatures' array_min form must be bit-identical to the
-    # r5 row-aggregation form (min over distinct set == min over raw
-    # multiset, same xxhash64(h, i) chain).
+    # minhash_signatures' array_min form must be bit-identical to a
+    # per-shingle row aggregation (min over distinct set == min over raw
+    # multiset, same xxhash64(h, i) chain). The reference is test-local.
     from crawspark.operators.dedup import (
         _SHINGLES_RAW,
         _TOKS,
-        _signatures_from_rows,
         minhash_signatures,
     )
 
     docs = read_testdata(spark, SF, "documents")
-    sh_rows = (docs.withColumn("toks", F.expr(_TOKS))
-               .filter(F.size("toks") >= 3)
-               .withColumn("sh_raw", F.expr(_SHINGLES_RAW))
-               .select("doc_id", F.explode("sh_raw").alias("shingle")))
-    want = {tuple(r) for r in
-            _signatures_from_rows(sh_rows, 8).collect()}
+    h = (docs.withColumn("toks", F.expr(_TOKS))
+         .filter(F.size("toks") >= 3)
+         .withColumn("sh_raw", F.expr(_SHINGLES_RAW))
+         .select("doc_id", F.explode("sh_raw").alias("shingle"))
+         .withColumn("h", F.xxhash64("shingle")))
+    want = {tuple(r) for r in h.groupBy("doc_id").agg(
+        *[F.min(F.xxhash64("h", F.lit(i))).alias(f"mh{i}")
+          for i in range(8)]).collect()}
     got = {tuple(r) for r in minhash_signatures(docs, 8).collect()}
     assert got == want
+
+
+def test_simhash_array_side_matches_row_aggregation(spark):
+    # simhash_signatures' per-bit aggregate() fold must equal the
+    # explode + 32 conditional sums + groupBy(doc_id) form (test-local
+    # reference), drop zero-token docs as the explode did, and plan
+    # without any exchange.
+    from crawspark.operators.dedup import _TOKS, simhash_signatures
+
+    hostile = spark.createDataFrame(
+        [(10**9, ""), (10**9 + 1, "123 456 !!"), (10**9 + 2, None),
+         (10**9 + 3, "one"), (10**9 + 4, "a a a b")],
+        "doc_id long, text string")
+    docs = (read_testdata(spark, SF, "documents").select("doc_id", "text")
+            .unionByName(hostile))
+    tok = (docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("tok"))
+           .withColumn("h", F.xxhash64("tok")))
+    sums = tok.groupBy("doc_id").agg(*[
+        F.sum(F.when(F.shiftright("h", i).bitwiseAND(1) == 1, 1)
+              .otherwise(-1)).alias(f"b{i}") for i in range(32)])
+    fp = sum(F.when(F.col(f"b{i}") > 0, F.lit(2 ** i).cast("long"))
+             .otherwise(F.lit(0)) for i in range(32))
+    want = {tuple(r) for r in sums.select("doc_id", fp).collect()}
+    sig = simhash_signatures(docs)
+    got = {tuple(r) for r in sig.collect()}
+    assert got == want
+    ids = {d for d, _ in got}
+    assert {10**9 + 3, 10**9 + 4} <= ids
+    assert not {10**9, 10**9 + 1, 10**9 + 2} & ids
+    assert "Exchange" not in executed_plan(sig)
 
 
 def test_bpe_driver_loop_matches_distributed_loop(spark, monkeypatch):

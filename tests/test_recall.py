@@ -14,9 +14,10 @@ import pytest
 from crawspark.operators.dedup import (
     BANDS,
     N_HASHES,
-    RESOLVE_BANDS,
-    RESOLVE_N_HASHES,
-    lsh_candidates,
+    _candidates_from_bands,
+    _resolve_candidates,
+    _resolve_combined,
+    lsh_band_table,
     simhash_signatures,
 )
 from pyspark.sql import functions as F
@@ -61,11 +62,9 @@ def test_lsh_resolve_banding_full_recall(spark, exact_pairs):
     # 16 bands x 2 rows: P(miss | j>=0.8) = (1-j^2)^16 <= 8e-8 — the
     # resolve pipeline's oracle equality depends on this being exactly 1.0.
     # Exercises the SAME capped-shingle candidate path resolve uses.
-    from crawspark.operators.dedup import _shingle_table, candidates_from_rows
-    sh = _shingle_table(spark, SF)
+    combined = _resolve_combined(read_testdata(spark, SF, "documents"))
     cands = {(r.doc_a, r.doc_b) for r in
-             candidates_from_rows(sh, RESOLVE_N_HASHES,
-                                  RESOLVE_BANDS).collect()}
+             _resolve_candidates(combined).collect()}
     missed = set(exact_pairs) - cands
     assert not missed, f"resolve banding missed true pairs: {missed}"
 
@@ -76,7 +75,8 @@ def test_lsh_default_banding_recall(spark, exact_pairs):
     # regeneration with slightly weaker dupes.
     docs = read_testdata(spark, SF, "documents")
     cands = {(r.doc_a, r.doc_b) for r in
-             lsh_candidates(docs, N_HASHES, BANDS).collect()}
+             _candidates_from_bands(
+                 lsh_band_table(docs, N_HASHES, BANDS)).collect()}
     recall = len(set(exact_pairs) & cands) / len(exact_pairs)
     assert recall >= 0.9, f"default banding recall {recall:.2f} < 0.9"
 

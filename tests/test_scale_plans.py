@@ -124,13 +124,13 @@ def test_df_cap_drops_boilerplate_posting_list(spark):
     # A shingle shared by MORE than DF_CAP docs is boilerplate: the
     # inverted index must drop it (an uncapped posting list is an O(df^2)
     # pair bomb at 100 TB). DF_CAP+44 identical docs → every one of their
-    # shingles exceeds the cap → zero rows survive for them, while the
-    # distinct docs' shingles all survive.
-    from crawspark.operators.dedup import DF_CAP, shingle_rows_capped
+    # shingles exceeds the cap → none of them keeps a capped array, while
+    # the distinct docs' shingles all survive.
+    from crawspark.operators.dedup import DF_CAP, capped_shingle_arrays
 
-    sh = shingle_rows_capped(_hostile_corpus(spark, DF_CAP + 44))
+    arrays = capped_shingle_arrays(_hostile_corpus(spark, DF_CAP + 44))
     per_doc = {r["doc_id"]: r["n"] for r in
-               sh.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
+               arrays.select("doc_id", F.size("shs").alias("n")).collect()}
     assert not any(d < 10_000 for d in per_doc), "capped shingles survived"
     assert sum(1 for d in per_doc if d >= 10_000) == 40
 
@@ -142,17 +142,13 @@ def test_hot_band_candidates_bounded_and_exact(spark):
     # C(n,2)) and the AQE-finalized plan must complete the self-join.
     from crawspark.operators.dedup import (
         DF_CAP,
-        RESOLVE_BANDS,
-        RESOLVE_N_HASHES,
-        candidates_from_rows,
-        shingle_rows_capped,
+        _resolve_candidates,
+        _resolve_combined,
     )
 
     n = DF_CAP  # == cap → kept
-    sh = shingle_rows_capped(_hostile_corpus(spark, n)).localCheckpoint(
-        eager=True)
-    cands = candidates_from_rows(sh, RESOLVE_N_HASHES, RESOLVE_BANDS)
-    rows = cands.collect()
+    combined = _resolve_combined(_hostile_corpus(spark, n))
+    rows = _resolve_candidates(combined).collect()
     clique = [r for r in rows if r["doc_a"] < 10_000 and r["doc_b"] < 10_000]
     cross = [r for r in rows if (r["doc_a"] < 10_000) != (r["doc_b"] < 10_000)]
     assert len(clique) == n * (n - 1) // 2, len(clique)
@@ -163,25 +159,16 @@ def test_hot_band_resolve_single_component(spark):
     # End-to-end on the hostile corpus: resolve must collapse the clique
     # to ONE keeper (min doc_id) and leave every distinct doc alone.
     from crawspark.operators.dedup import (
-        RESOLVE_BANDS,
-        RESOLVE_N_HASHES,
-        candidates_from_rows,
+        _resolve_candidates,
+        _resolve_combined,
+        _verify_exact,
         connected_components,
-        shingle_rows_capped,
     )
 
     n = 64
-    sh = shingle_rows_capped(_hostile_corpus(spark, n)).localCheckpoint(
-        eager=True)
-    cands = candidates_from_rows(sh, RESOLVE_N_HASHES, RESOLVE_BANDS)
-    sets = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("s"))
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
-    verified = (cands.join(sa, "doc_a").join(sb, "doc_b")
-                .filter(jac >= 0.8).select("doc_a", "doc_b"))
+    combined = _resolve_combined(_hostile_corpus(spark, n))
+    verified = (_verify_exact(_resolve_candidates(combined), combined)
+                .select("doc_a", "doc_b"))
     labels = {r["node"]: r["label"]
               for r in connected_components(verified).collect()}
     assert all(labels[d] == 0 for d in range(n))
