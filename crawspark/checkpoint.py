@@ -5,8 +5,12 @@ Design:
 - The resume unit is a LOGICAL partition: ``partition_key =
   'part=' || pmod(xxhash64(doc_id), n_parts)`` — stable across runs and
   cluster sizes (Spark's physical partition ids are not).
-- ``input_fingerprint`` = bit_xor of xxhash64(doc_id) within the
-  partition — order-independent, computed JVM-side. The driver collects
+- ``input_fingerprint`` = bit_xor of xxhash64(doc_id, spans) within
+  the partition, as a decimal string — order-independent, computed
+  JVM-side. Hashing the payload too means a document rewritten under
+  its old ``doc_id`` re-extracts its partition. Checkpoints recorded
+  under the earlier doc_id-only format never match it, so each of their
+  partitions re-extracts once. The driver collects
   the fingerprint rows and each partition's LATEST done row (by
   ``completed_ts``, injected by the caller and growing from one
   invocation of a run_id to the next), each at most ``n_parts``, and
@@ -50,23 +54,23 @@ def with_partition_key(df: DataFrame, n_parts: int) -> DataFrame:
 def partition_fingerprints(df: DataFrame) -> DataFrame:
     """(partition_key, input_fingerprint, docs_in) — JVM-side aggregates."""
     return (df.groupBy("partition_key")
-            .agg(F.expr("cast(bit_xor(xxhash64(doc_id)) as string)")
+            .agg(F.expr("cast(bit_xor(xxhash64(doc_id, spans)) as string)")
                  .alias("input_fingerprint"),
                  F.count("*").alias("docs_in")))
 
 
-def latest_done(ckpt: DataFrame, key: str = "partition_key") -> DataFrame:
-    """The latest ``done`` row per (run_id, ``key``) of a checkpoint table:
-    the state its last completed run left the partition (or file) in."""
+def latest_done(ckpt: DataFrame) -> DataFrame:
+    """The latest ``done`` row per (run_id, partition_key) of a checkpoint
+    table: the state its last completed run left the partition in."""
     return (ckpt.filter(F.col("status") == "done")
-            .groupBy("run_id", key)
+            .groupBy("run_id", "partition_key")
             .agg(F.max_by(F.struct(*ckpt.columns), "completed_ts").alias("r"))
             .select("r.*"))
 
 
-def collect_by_key(df: DataFrame, what: str, bound: int,
-                   key: str = "partition_key") -> dict[str, Row]:
-    """Collect ``df`` keyed on ``key``; log its size and raise past ``bound``."""
+def collect_by_key(df: DataFrame, what: str, bound: int) -> dict[str, Row]:
+    """Collect ``df`` keyed on ``partition_key``; log its size and raise
+    past ``bound``."""
     rows = df.collect()
     logging.getLogger(__name__).info("%s: %d rows collected (bound %d)",
                                      what, len(rows), bound)
@@ -74,7 +78,7 @@ def collect_by_key(df: DataFrame, what: str, bound: int,
         raise RuntimeError(f"{what}: {len(rows)} rows exceed the bound {bound}"
                            " (a wider key space earlier under this run_id,"
                            " e.g. a larger n_parts?)")
-    return {r[key]: r for r in rows}
+    return {r["partition_key"]: r for r in rows}
 
 
 class CheckpointedExtraction:

@@ -22,11 +22,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.oracle.extract import extract_document
 
 TARGET_BATCH_BYTES = 64 << 20  # re-chunk threshold (~64 MB of payload)
@@ -76,12 +77,12 @@ def _iter_rows(batch: pa.RecordBatch) -> Iterator[dict]:
         yield from batch.slice(start, _SLICE_ROWS).to_pylist()
 
 
-def _chunk_docs(docs: Iterator[dict],
+def _chunk_docs(docs: Iterable[dict],
                 target_bytes: int) -> Iterator[list[dict]]:
     """Regroup interleaved-doc dicts into lists bounded by cumulative
     payload bytes (last doc may overshoot: a single monster document
     always travels alone rather than splitting). THE accumulation loop —
-    shared by the batch, fused, and worker-native paths."""
+    shared by the extraction stream and the synthetic corpus."""
     pending: list[dict] = []
     pending_bytes = 0
     for row in docs:
@@ -95,19 +96,18 @@ def _chunk_docs(docs: Iterator[dict],
         yield pending
 
 
-def _rechunk_rows(batches: Iterator[pa.RecordBatch],
-                  target_bytes: int) -> Iterator[list[dict]]:
-    """Arrow batches → byte-bounded row-dict chunks (slice-wise
-    conversion + _chunk_docs accumulation)."""
-    return _chunk_docs(
-        (row for batch in batches for row in _iter_rows(batch)),
-        target_bytes)
+def _extract_stream(docs: Iterable[dict]) -> Iterator[pa.RecordBatch]:
+    """THE per-document worker loop: interleaved docs → byte-bounded
+    chunks → extracted batches. Every extraction body feeds it from its
+    own source step (scanned rows, interleave, WARC round trip)."""
+    for rows in _chunk_docs(docs, TARGET_BATCH_BYTES):
+        yield _extract_rows(rows)
 
 
 def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow body: re-chunk by payload bytes, extract, emit."""
-    for rows in _rechunk_rows(batches, TARGET_BATCH_BYTES):
-        yield _extract_rows(rows)
+    yield from _extract_stream(
+        row for batch in batches for row in _iter_rows(batch))
 
 
 def extract_documents(df: DataFrame) -> DataFrame:
@@ -131,16 +131,24 @@ _INTER_SCHEMA = pa.schema([
 ])
 
 
-def _interleave_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _interleaved_batch(docs: list[dict]) -> pa.RecordBatch:
+    """(doc_id, spans) dicts → one documents_interleaved Arrow batch."""
+    return pa.RecordBatch.from_pydict(
+        {"doc_id": [d["doc_id"] for d in docs],
+         "spans": [d["spans"] for d in docs]},
+        schema=_INTER_SCHEMA)
+
+
+def _interleave_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
     from crawspark.corpus import interleave_from_text
+    return (interleave_from_text(r["doc_id"], r.get("text") or "",
+                                 r.get("lang") or "en")
+            for batch in batches for r in _iter_rows(batch))
+
+
+def _interleave_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for batch in batches:
-        docs = [interleave_from_text(r["doc_id"], r.get("text") or "",
-                                     r.get("lang") or "en")
-                for r in _iter_rows(batch)]
-        yield pa.RecordBatch.from_pydict(
-            {"doc_id": [d["doc_id"] for d in docs],
-             "spans": [d["spans"] for d in docs]},
-            schema=_INTER_SCHEMA)
+        yield _interleaved_batch(list(_interleave_rows([batch])))
 
 
 def interleave_documents(df: DataFrame) -> DataFrame:
@@ -149,25 +157,15 @@ def interleave_documents(df: DataFrame) -> DataFrame:
 
     A small single-file parquet scan yields ONE partition, which would
     serialize the whole CPU-bound interleave+extract chain onto one core
-    (measured 3.98 s → 0.5 s at sf0.1 / local[32]). Repartition only when
-    the scan is narrower than the cluster — at 100 TB the scan already
-    carries more partitions than cores and no shuffle is added."""
-    sc = df.sparkSession.sparkContext
-    cols = df.select("doc_id", "text", "lang")
-    if cols.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = cols.repartition(sc.defaultParallelism)
+    (measured 3.98 s → 0.5 s at sf0.1 / local[32]); ``ensure_parallelism``
+    widens only scans narrower than the cluster."""
     from crawspark.schema import DOCUMENTS_INTERLEAVED
-    return cols.mapInArrow(_interleave_arrow, DOCUMENTS_INTERLEAVED)
+    return ensure_parallelism(df.select("doc_id", "text", "lang")).mapInArrow(
+        _interleave_arrow, DOCUMENTS_INTERLEAVED)
 
 
 def _interleave_extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from crawspark.corpus import interleave_from_text
-
-    docs = (interleave_from_text(r["doc_id"], r.get("text") or "",
-                                 r.get("lang") or "en")
-            for batch in batches for r in _iter_rows(batch))
-    for rows in _chunk_docs(docs, TARGET_BATCH_BYTES):
-        yield _extract_rows(rows)
+    yield from _extract_stream(_interleave_rows(batches))
 
 
 def interleave_and_extract(df: DataFrame) -> DataFrame:
@@ -178,13 +176,10 @@ def interleave_and_extract(df: DataFrame) -> DataFrame:
     local[32]). Byte-identical output — both stages are pure functions —
     so every oracle hash is unchanged; the two-stage form stays for
     callers that consume the interleaved table itself (classify_spans'
-    raw-chars branch, the worker-native job's input snapshot)."""
-    sc = df.sparkSession.sparkContext
-    cols = df.select("doc_id", "text", "lang")
-    if cols.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = cols.repartition(sc.defaultParallelism)
+    raw-chars branch, the checkpointed metrics query)."""
     from crawspark.schema import EXTRACTED_SPANS
-    return cols.mapInArrow(_interleave_extract_arrow, EXTRACTED_SPANS)
+    return ensure_parallelism(df.select("doc_id", "text", "lang")).mapInArrow(
+        _interleave_extract_arrow, EXTRACTED_SPANS)
 
 
 # ---------------------------------------------------------------------------
@@ -201,26 +196,12 @@ def synthetic_corpus(spark, n_docs: int, seed: int = 42,
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from crawspark.corpus import make_doc
         for batch in batches:
-            idx = batch.column("id").to_pylist()
-            chunk: list[dict] = []
-            chunk_bytes = 0
-            for i in idx:
-                d = make_doc(seed, int(i), heavy_tail=heavy_tail,
+            docs = (make_doc(seed, int(i), heavy_tail=heavy_tail,
                              min_paras=min_paras, max_paras=max_paras,
                              langs=langs)
-                chunk.append(d)
-                chunk_bytes += sum(len(s["text"] or "") for s in d["spans"])
-                if chunk_bytes >= TARGET_BATCH_BYTES:
-                    yield pa.RecordBatch.from_pydict(
-                        {"doc_id": [c["doc_id"] for c in chunk],
-                         "spans": [c["spans"] for c in chunk]},
-                        schema=_INTER_SCHEMA)
-                    chunk, chunk_bytes = [], 0
-            if chunk:
-                yield pa.RecordBatch.from_pydict(
-                    {"doc_id": [c["doc_id"] for c in chunk],
-                     "spans": [c["spans"] for c in chunk]},
-                    schema=_INTER_SCHEMA)
+                    for i in batch.column("id").to_pylist())
+            for chunk in _chunk_docs(docs, TARGET_BATCH_BYTES):
+                yield _interleaved_batch(chunk)
 
     return (spark.range(0, n_docs, numPartitions=partitions)
             .mapInArrow(gen, DOCUMENTS_INTERLEAVED))

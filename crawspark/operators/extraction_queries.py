@@ -272,27 +272,26 @@ def outlink_domains(spark, sf_dir):
     FROM {ORACLE_PQ}
 """))
 def extract_metrics_summary(spark, sf_dir):
-    # Drives the WORKER-NATIVE job (pyarrow read/write in executors,
-    # file-granular metrics — operators/native_extract.py) end to end and
-    # returns its checkpoint-metrics aggregate; the oracle pins
+    # Drives the checkpointed resume engine (crawspark/checkpoint.py) end
+    # to end on a fresh table set and returns the aggregate of its latest
+    # done checkpoint rows, one per logical partition; the oracle pins
     # docs_in/docs_out/spans_out against the frozen extraction. This makes
     # the §2.5 agg_extraction_metrics / §2.1 sink_checkpoint surface
     # driver-verified, not just unit-tested.
-    import os
+    from crawspark.checkpoint import CheckpointedExtraction, latest_done
+    from crawspark.scratch import scratch_dir_fresh
+    from crawspark.sources.tables import ParquetBackend
 
-    from crawspark.operators.native_extract import native_extract_job
-    from crawspark.scratch import scratch_dir
-
-    base = scratch_dir("native", sf_dir, clean=("out",))
-    inp, out = os.path.join(base, "in"), os.path.join(base, "out")
-    (interleave_documents(read_testdata(spark, sf_dir, "documents"))
-     .repartition(4)  # fixed shard count -> deterministic n_files
-     .write.mode("overwrite").parquet(inp))
-    metrics = native_extract_job(spark, inp, out)
-    return metrics.agg(F.count("*").alias("n_files"),
-                       F.sum("docs_in").cast("long").alias("docs_in"),
-                       F.sum("docs_out").cast("long").alias("docs_out"),
-                       F.sum("spans_out").cast("long").alias("spans_out"))
+    backend = ParquetBackend(scratch_dir_fresh("checkpointed", sf_dir))
+    job = CheckpointedExtraction(backend, n_parts=4)  # oracle: n_files = 4
+    job.run(spark, interleave_documents(read_testdata(spark, sf_dir,
+                                                      "documents")),
+            run_id="metrics", completed_ts="2026-01-01 00:00:00")
+    done = latest_done(backend.read(spark, job.checkpoint_table))
+    return done.agg(F.count("*").alias("n_files"),
+                    F.sum("docs_in").cast("long").alias("docs_in"),
+                    F.sum("docs_out").cast("long").alias("docs_out"),
+                    F.sum("spans_out").cast("long").alias("spans_out"))
 
 
 # ---------------------------------------------------------------------------

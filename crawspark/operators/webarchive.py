@@ -8,11 +8,11 @@ store steps]; this engine replays such archives at rest.
 Scale notes (100 TB): WARC files with per-record gzip members (the
 Annex C convention the builder emits) are splittable — a reader can
 resync from any byte offset to the next gzip-member boundary — so a
-real deployment maps row-group-sized WARC ranges to tasks exactly like
-the native-extract work units (jobs/native_extract.py plan_units). Here
-each task parses whole in-memory segments, Arrow-batched per document;
-nothing ever crosses the shuffle except the parsed metadata rows (the
-payload bytes stay task-local, only md5 digests are emitted).
+real deployment maps byte-range work units of a WARC file to tasks
+instead of one task per file. Here each task parses whole in-memory
+segments, Arrow-batched per document; nothing ever crosses the shuffle
+except the parsed metadata rows (the payload bytes stay task-local,
+only md5 digests are emitted).
 """
 
 from __future__ import annotations
@@ -165,27 +165,22 @@ def extract_from_warc(spark, sf_dir):
     from pyspark.sql import functions as F2
 
     from crawspark.operators.extract import (
-        TARGET_BATCH_BYTES, _chunk_docs, _extract_rows, _iter_rows)
+        _extract_stream, _interleave_rows)
+    from crawspark.operators.partitioning import ensure_parallelism
     from crawspark.schema import EXTRACTED_SPANS
 
     def _warc_extract_arrow(batches):
-        from crawspark.corpus import interleave_from_text
         from crawspark.oracle.warc import (
             interleaved_from_segment, segment_from_interleaved)
-        docs = (interleaved_from_segment(segment_from_interleaved(
-                    interleave_from_text(r["doc_id"], r.get("text") or "",
-                                         r.get("lang") or "en")))
-                for batch in batches for r in _iter_rows(batch))
-        for rows in _chunk_docs(docs, TARGET_BATCH_BYTES):
-            yield _extract_rows(rows)
+        yield from _extract_stream(
+            interleaved_from_segment(segment_from_interleaved(d))
+            for d in _interleave_rows(batches))
 
-    df = read_testdata(spark, sf_dir, "documents")
-    sc = df.sparkSession.sparkContext
-    cols = df.select("doc_id", "text", "lang")
-    if cols.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = cols.repartition(sc.defaultParallelism)
+    cols = read_testdata(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang")
     from crawspark.operators.extraction_queries import SPAN_CANON_EXPR
-    ext = cols.mapInArrow(_warc_extract_arrow, EXTRACTED_SPANS)
+    ext = ensure_parallelism(cols).mapInArrow(_warc_extract_arrow,
+                                              EXTRACTED_SPANS)
     return ext.select("doc_id",
                       F2.md5(F2.expr(SPAN_CANON_EXPR)).alias("span_hash"))
 

@@ -5,8 +5,8 @@ from-scratch ISO 28500 walker (oracle/warc.py).
 Scale design: segments are read whole-file via the ``binaryFile``
 datasource (one task per file — WARC's gzip framing is per-record, so
 a file is the natural unit here; Common Crawl segments are ~1 GB,
-comfortably a task). For skewed archives the same sub-file splitting
-the native-extract job uses (jobs/native_extract.py plan_units) applies:
+comfortably a task). For skewed archives a file splits below file
+granularity:
 per-record gzip members (Annex C) let a task start at any byte offset
 and resync to the next 0x1f8b member boundary, so a (path, start, end)
 work-unit plan at ~8× core count keeps all slots busy — the measured

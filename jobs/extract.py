@@ -38,9 +38,6 @@ def main() -> None:
                          "runs in min(n-parts, defaultParallelism) tasks")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--native", action="store_true",
-                    help="worker-native I/O path (pyarrow read+write in "
-                         "executors; file-granular checkpoint)")
     args = ap.parse_args()
 
     from crawspark.bundle import ensure_shipped
@@ -50,17 +47,6 @@ def main() -> None:
 
     spark = get_spark(master=args.master, app=f"crawspark-extract-{args.run_id}")
     ensure_shipped(spark)
-    if args.native:
-        if not args.input:
-            ap.error("--native requires --input (a parquet directory)")
-        from crawspark.operators.native_extract import run_native_checkpointed
-        report = run_native_checkpointed(
-            spark, args.input, f"{args.data_root}/extracted_spans.parquet",
-            f"{args.data_root}/checkpoint.parquet",
-            run_id=args.run_id, completed_ts=args.completed_ts)
-        print(json.dumps(report))
-        spark.stop()
-        return
     if args.synthetic:
         from crawspark.operators.extract import synthetic_corpus
         docs = synthetic_corpus(spark, args.synthetic, seed=args.seed)

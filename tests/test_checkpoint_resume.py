@@ -104,6 +104,32 @@ def test_input_drift_invalidates_checkpoint(spark, docs_df, tmp_path):
     assert r["docs_out"] == 30
 
 
+def test_input_payload_drift_invalidates_checkpoint(spark, docs_df, tmp_path):
+    # ADVICE r2: documents rewritten under their old doc_ids must
+    # re-extract their partition, not keep its stale output.
+    from crawspark.checkpoint import with_partition_key
+    from crawspark.oracle import extract_document
+
+    ck = CheckpointedExtraction(ParquetBackend(str(tmp_path / "payload")),
+                                n_parts=4)
+    ck.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+    keyed = with_partition_key(docs_df, 4).collect()
+    target = min(r["partition_key"] for r in keyed)
+    rewritten = {r["doc_id"]: make_doc(43, i)["spans"]
+                 for i, r in enumerate(keyed) if r["partition_key"] == target}
+    df2 = spark.createDataFrame(
+        [(r["doc_id"], rewritten.get(r["doc_id"], r["spans"])) for r in keyed],
+        schema=DOCUMENTS_INTERLEAVED)
+    r = ck.run(spark, df2, run_id="r1", completed_ts="2026-01-01 01:00:00")
+    assert r["partitions_processed"] == 1
+    assert r["docs_out"] == len(rewritten)
+    got = _results(spark, ck.backend)
+    assert len(got) == 60
+    for doc_id, spans in rewritten.items():
+        exp = extract_document(doc_id, spans)
+        assert got[doc_id] == (exp["n_spans"], exp["lang"])
+
+
 def _rows(spark, backend):
     return sorted(tuple(r) for r in backend.read(spark, "extracted_spans")
                   .select("partition_key", "doc_id", "n_spans", "lang")

@@ -1,17 +1,16 @@
 """Heavy-tail memory kill-test (VERDICT r3 next-round #5): a monster
 document cannot OOM a worker. The byte-bounded re-chunk generator is
-exercised directly (pure Python, tracemalloc-audited) and the worker-native
-streaming writer end to end with a 100x-outlier shard."""
+exercised directly (pure Python, tracemalloc-audited) and the checkpointed
+resume end to end with a 100x-outlier shard."""
 
 from __future__ import annotations
 
 import tracemalloc
 
-import pyarrow as pa
-
 from crawspark.operators.extract import (
-    _INTER_SCHEMA,
-    _rechunk_rows,
+    _chunk_docs,
+    _interleaved_batch as _batch,
+    _iter_rows,
     extract_documents,
 )
 from crawspark.oracle import extract_document
@@ -25,11 +24,8 @@ def _doc(doc_id: str, payload: str) -> dict:
                        "media_ref": None, "offset": 0}]}
 
 
-def _batch(docs: list[dict]) -> pa.RecordBatch:
-    return pa.RecordBatch.from_pydict(
-        {"doc_id": [d["doc_id"] for d in docs],
-         "spans": [d["spans"] for d in docs]},
-        schema=_INTER_SCHEMA)
+def _rows(batches):
+    return (row for batch in batches for row in _iter_rows(batch))
 
 
 def test_rechunk_memory_bounded_by_target():
@@ -51,13 +47,13 @@ def test_rechunk_memory_bounded_by_target():
     # Warm-up pass: lazy module imports triggered by the first Arrow
     # conversion (~14 MB of module objects) must not count as pipeline
     # memory.
-    for _ in _rechunk_rows(iter([_batch([_doc("w", page)])]), 1 * MB):
+    for _ in _chunk_docs(_rows([_batch([_doc("w", page)])]), 1 * MB):
         pass
 
     tracemalloc.start()
     tracemalloc.reset_peak()
     n_rows = 0
-    for chunk in _rechunk_rows(gen(), 1 * MB):
+    for chunk in _chunk_docs(_rows(gen()), 1 * MB):
         n_rows += len(chunk)  # consume and drop — the streaming regime
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
@@ -75,7 +71,7 @@ def test_monster_doc_travels_alone():
     docs = ([_doc(f"s{i}", "small page") for i in range(10)]
             + [_doc("monster", monster)]
             + [_doc(f"t{i}", "small page") for i in range(10)])
-    chunks = list(_rechunk_rows(iter([_batch(docs)]), 1 * MB))
+    chunks = list(_chunk_docs(_rows([_batch(docs)]), 1 * MB))
     # The monster flushes the chunk it lands in; smaller docs never ride
     # along after it, and no chunk exceeds target + one monster.
     monster_chunk = next(c for c in chunks
@@ -108,13 +104,13 @@ def test_monster_doc_spark_parity(spark):
         == [(s["kind"], s["text"]) for s in exp["spans"]]
 
 
-def test_native_streaming_writer_heavy_shard(spark, tmp_path):
-    """Worker-native job on a shard holding a 100x outlier: streaming
-    ParquetWriter path produces correct metrics + oracle-equal output
-    through the checkpointed resume machinery."""
+def test_checkpointed_resume_heavy_shard(spark, tmp_path):
+    """Checkpointed resume on a shard holding a 100x outlier: correct
+    metrics, oracle-equal output, and a rerun processes nothing."""
+    from crawspark.checkpoint import CheckpointedExtraction
     from crawspark.corpus import make_doc
-    from crawspark.operators.native_extract import run_native_checkpointed
     from crawspark.schema import DOCUMENTS_INTERLEAVED
+    from crawspark.sources.tables import ParquetBackend
 
     docs = [make_doc(7, i, min_paras=2, max_paras=4) for i in range(30)]
     big_para = "<p>" + "all of the people were there for the story " * 60 \
@@ -123,22 +119,22 @@ def test_native_streaming_writer_heavy_shard(spark, tmp_path):
         "<html><head><title>Big | Site</title></head><body>"
         "<div id='content' class='article-body'>" + big_para * 900
         + "</div></body></html>")))
-    inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    inp = str(tmp_path / "in")
     df = spark.createDataFrame(
         [(d["doc_id"], d["spans"]) for d in docs],
         schema=DOCUMENTS_INTERLEAVED)
     df.repartition(3).write.mode("overwrite").parquet(inp)
-    r1 = run_native_checkpointed(spark, inp, out, ck, "hv",
-                                 "2026-01-01 00:00:00")
-    assert r1["files_processed"] == 3
+    ck = CheckpointedExtraction(ParquetBackend(str(tmp_path / "hv")),
+                                n_parts=3)
+    r1 = ck.run(spark, spark.read.parquet(inp), "hv", "2026-01-01 00:00:00")
+    assert r1["partitions_processed"] == 3 and r1["docs_out"] == 31
     got = {r["doc_id"]: r.asDict(recursive=True)
-           for r in spark.read.parquet(out).collect()}
+           for r in ck.backend.read(spark, "extracted_spans").collect()}
     assert len(got) == 31
     exp = extract_document("outlier", docs[-1]["spans"])
     g = got["outlier"]
     assert [(s["kind"], s["text"], s["media_ref"]) for s in g["spans"]] \
         == [(s["kind"], s["text"], s["media_ref"]) for s in exp["spans"]]
     # resume: nothing re-processed
-    r2 = run_native_checkpointed(spark, inp, out, ck, "hv",
-                                 "2026-01-01 01:00:00")
-    assert r2["files_processed"] == 0 and r2["files_skipped"] == 3
+    r2 = ck.run(spark, spark.read.parquet(inp), "hv", "2026-01-01 01:00:00")
+    assert r2["partitions_processed"] == 0

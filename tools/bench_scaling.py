@@ -13,10 +13,10 @@ Two efficiencies are reported:
   on a real cluster each executor owns its memory bus).
 - spark_layer: spark_rate / substrate rate at the SAME cpu count. The
   substrate control is LIKE-FOR-LIKE: a raw multiprocessing.Pool running
-  the identical pyarrow read shard → extract → pyarrow write shard task
-  over the SAME input files — zero framework, same I/O, same compute. The
-  ratio therefore isolates exactly what Spark's scheduling/JVM layer
-  costs, and is the number that transfers to a real cluster (where each
+  pyarrow read shard → the same extraction loop → pyarrow write shard
+  over the SAME input files — zero framework, same compute. The ratio
+  therefore isolates what Spark's scan, Arrow hop, write and scheduling
+  cost, and is the number that transfers to a real cluster (where each
   executor owns its memory bus and the substrate curve is flat).
 
 Usage: python tools/bench_scaling.py [--docs 60000] [--sizes 8,32]
@@ -46,17 +46,15 @@ def _gen_shard(args: tuple[str, int, int, int]) -> str:
     import pyarrow.parquet as pq
 
     from crawspark.corpus import make_doc
-    from crawspark.operators.extract import _INTER_SCHEMA
+    from crawspark.operators.extract import _interleaved_batch
 
     docs = [make_doc(42, i, heavy_tail=True, min_paras=15, max_paras=45)
             for i in range(lo, hi)]
-    tbl = pa.Table.from_pydict(
-        {"doc_id": [d["doc_id"] for d in docs],
-         "spans": [d["spans"] for d in docs]}, schema=_INTER_SCHEMA)
+    tbl = pa.Table.from_batches([_interleaved_batch(docs)])
     path = os.path.join(out_dir, f"part-{shard:05d}.parquet")
     # ~8 row groups per shard: real 100 TB shards carry many row groups;
-    # multi-RG files are what lets the spark job split work units below
-    # file granularity (plan_units — the straggler-tail fix).
+    # multi-RG files are what lets Spark's parquet scan split a file
+    # below file granularity (row groups are the split unit).
     pq.write_table(tbl, path, compression="snappy",
                    row_group_size=max(1, (hi - lo) // 8))
     return path
@@ -79,7 +77,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from crawspark.session import get_spark
 from crawspark.bundle import ensure_shipped
-from crawspark.operators.native_extract import native_extract_job
+from crawspark.operators.extract import extract_documents
 
 cpus = {cpus}
 n_docs = {n_docs}
@@ -88,14 +86,10 @@ spark = get_spark(master=f"local[{{cpus}}]", app=f"scaling-{{cpus}}",
 ensure_shipped(spark)
 
 def job(tag):
-    # target_units = 8x cores: sub-file row-group units (plan_units)
-    # shrink the straggler tail — with one task per file the last wave
-    # idled (cores-1) slots for a whole file's duration, which WAS the
-    # r4 spark-vs-substrate gap at 32 cores (layer 0.77 -> ~0.95).
-    m = native_extract_job(spark, {inp!r}, {out_dir!r} + "/spark-" + tag,
-                           target_units=cpus * 8)
-    total = m.groupBy().sum("docs_out").collect()[0][0]
-    assert total == n_docs, total
+    out = {out_dir!r} + "/spark-" + tag
+    (extract_documents(spark.read.parquet({inp!r}))
+     .write.mode("overwrite").parquet(out))
+    return out
 
 # Warmup (JIT, python workers) — the north metric is steady-state
 # docs/sec over a 10^12-doc corpus, not cold-start. Timed = best of 5
@@ -104,8 +98,10 @@ job("warm")
 times = []
 for i in range(5):
     t0 = time.perf_counter()
-    job(f"timed{{i}}")
+    out = job(f"timed{{i}}")
     times.append(time.perf_counter() - t0)
+    total = spark.read.parquet(out).count()
+    assert total == n_docs, total
 dt = min(times)
 print(json.dumps({{"cpus": cpus, "docs": n_docs, "seconds": round(dt, 2),
                    "all_seconds": [round(t, 2) for t in times],
@@ -121,23 +117,18 @@ def shard_work(args):
     path, out_dir = args
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from crawspark.operators.extract import (
-        TARGET_BATCH_BYTES,
-        _extract_rows,
-        _rechunk_rows,
-    )
-    # mirror the Spark worker's arrow-thread cap (one worker per core);
-    # without it every Pool worker spawns os.cpu_count() arrow threads.
+    from crawspark.operators.extract import _extract_stream, _iter_rows
+    # one Pool worker per core: without the cap every worker's pyarrow
+    # reader/writer spawns os.cpu_count() arrow threads.
     pa.set_cpu_count(1)
     pa.set_io_thread_count(2)
-    # like-for-like with the r4 streaming worker: iter_batches in,
-    # byte-bounded re-chunks through extraction, ParquetWriter out
+    # streaming: iter_batches in, the Spark body's extraction loop
+    # (byte-bounded chunks), ParquetWriter out
     pf = pq.ParquetFile(path)
     writer = None
     n = 0
-    for rows in _rechunk_rows(pf.iter_batches(batch_size=1000),
-                              TARGET_BATCH_BYTES):
-        out = _extract_rows(rows)
+    for out in _extract_stream(row for b in pf.iter_batches(batch_size=1000)
+                               for row in _iter_rows(b)):
         if writer is None:
             writer = pq.ParquetWriter(
                 os.path.join(out_dir, os.path.basename(path)), out.schema,
