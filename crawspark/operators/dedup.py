@@ -658,23 +658,14 @@ def dedup_minhash_incremental(spark, sf_dir):
                  old_side,
                  (F.col("a.band_id") == F.col("b.band_id"))
                  & (F.col("a.band_hash") == F.col("b.band_hash")))
-             .select(F.col("a.doc_id").alias("doc_new"),
-                     F.col("b.doc_id").alias("doc_old"))
+             .select(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b"))
              .distinct())
-    sets = combined.select("doc_id", "shingles")
-    sa = sets.select(F.col("doc_id").alias("doc_new"),
-                     F.col("shingles").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_old"),
-                     F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0,
-                 inter.cast("double") / union).otherwise(F.lit(0.0))
-    return (cands.join(sa, "doc_new").join(sb, "doc_old")
-            .filter(jac >= 0.8)
-            .groupBy(F.col("doc_new").alias("doc_id"))
+    # doc_a is the new doc, doc_b the lake doc it matches
+    return (_verify_exact(cands, combined)
+            .groupBy(F.col("doc_a").alias("doc_id"))
             .agg(F.count("*").cast("int").alias("n_lake_matches"),
-                 F.min("doc_old").alias("first_match")))
+                 F.min("doc_b").alias("first_match")))
 
 
 @register("dedup_containment_pairs", sql=f"""

@@ -14,10 +14,8 @@ reference values, row by row.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 from crawspark.operators.extract import extract_documents, interleave_documents
 from crawspark.registry import register
@@ -295,43 +293,9 @@ def extract_metrics_summary(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal plumbing: binary media columns + typed metadata. Decode is a
-# deterministic STUB (no image/audio libs in this container) — the Spark
-# plumbing (schema, batching, UDF signature) is real.
+# Multimodal plumbing: binary media columns + typed metadata through the
+# shared stub decoder (multimodal.decode_media).
 # ---------------------------------------------------------------------------
-
-_MEDIA_META_SCHEMA = T.StructType([
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("media_kind", T.StringType()),
-    T.StructField("n_bytes", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-])
-
-
-def _fake_decode(ref: str, payload: bytes) -> tuple[int, int]:
-    """STUB decode: deterministic pseudo-dimensions from the payload header.
-    A real deployment swaps in PIL/ffmpeg here (NotImplementedError path
-    kept explicit); batch shape and schema are what matter to the plan."""
-    if not payload:
-        return 0, 0
-    w = 160 + (payload[0] % 8) * 80
-    h = 120 + (payload[-1] % 8) * 60
-    return w, h
-
-
-def _media_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        dims = [_fake_decode(r, p) for r, p in zip(pdf["media_ref"],
-                                                   pdf["payload"])]
-        yield pd.DataFrame({
-            "media_ref": pdf["media_ref"],
-            "media_kind": ["video" if r.endswith(".mp4") else "image"
-                           for r in pdf["media_ref"]],
-            "n_bytes": [len(p) for p in pdf["payload"]],
-            "width": [d[0] for d in dims],
-            "height": [d[1] for d in dims],
-        })
 
 
 @register("multimodal_media_meta", sql="""
@@ -352,15 +316,19 @@ def _media_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def multimodal_media_meta(spark, sf_dir):
     # Opaque binary media column (synthesized deterministically from doc_id)
     # + mapInPandas metadata extraction; aggregated so the check is stable.
+    from crawspark.operators.multimodal import decode_media
+
     docs = read_testdata(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 0)
+    video = F.col("doc_id") % 10 == 0
     media = docs.select(
         F.concat(F.lit("img://doc/"), F.col("doc_id").cast("string"),
-                 F.when(F.col("doc_id") % 10 == 0, ".mp4").otherwise(".jpg"))
+                 F.when(video, ".mp4").otherwise(".jpg"))
         .alias("media_ref"),
+        F.when(video, "video").otherwise("image").alias("media_kind"),
         F.encode(F.repeat(F.concat(F.lit("B"), F.col("doc_id").cast("string")),
                           10), "utf-8").alias("payload"))
-    meta = media.mapInPandas(_media_meta, _MEDIA_META_SCHEMA)
+    meta = decode_media(media)
     return (meta.groupBy("media_kind")
             .agg(F.count("*").alias("n_media"),
                  F.sum("n_bytes").cast("long").alias("total_bytes"),

@@ -1,38 +1,31 @@
-"""Multimodal column operators: treat image/audio/video as opaque binary
-columns with typed metadata; decode / resize / frame-sample /
-feature-extract run as Arrow-batched mapInPandas stages.
+"""Multimodal column operators and the synthetic format routes.
 
-Decode is REAL and zero-dependency where the formats permit: container
-headers (PNG/GIF/JPEG/BMP dims, WAV RIFF, MP4 box tree — r4), pixels
-for BMP/PNG/GIF and baseline JPEG (oracle/imagemeta.py +
-oracle/jpegcodec.py — r5), and PCM16 WAV samples (r5), each
-round-tripped through a closed-form DuckDB oracle. The generic
-`decode_media` stand-in below still models the external-codec seam a
-deployment would fill with PIL/ffmpeg (`_REAL_DECODE` branch) for
-formats beyond those — e.g. WebP/AVIF or compressed audio (baseline
-AND progressive JPEG both decode for real in oracle/jpegcodec.py).
-Also real, and tested: the Spark-side plumbing — binary column schema,
-deterministic payload synthesis, batch shapes, UDF signatures, explode
-fanout for frames, and the aggregation contracts. Frame sampling and
-resize arithmetic are pure functions of the payload metadata, so those
-registry queries carry closed-form DuckDB oracles.
+Media columns: image/audio/video travel as opaque binary columns with
+typed metadata; decode / resize / frame-sample / feature-extract run as
+Arrow-batched mapInPandas stages over a ``media_ref``/``payload`` table.
+Their dims and features are deterministic stand-ins computed from the
+payload bytes, so frame sampling and resize arithmetic carry
+closed-form DuckDB oracles.
+
+Format routes: every other query here synthesizes one genuine payload
+per document (image/audio containers, pixels, PDFs, office, markup,
+archives, mail, WARC), runs it through its real zero-dependency decoder
+or extractor (oracle/imagemeta.py, oracle/jpegcodec.py,
+oracle/pdfparse.py, ...), and hashes the result against a closed-form
+DuckDB oracle. Each route is a ``rows(d)`` function of the doc_id fed
+to ``_per_doc``, the one mapInPandas loop over a doc_id column.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from crawspark.registry import register
 from crawspark.sources import read_testdata
-
-try:  # pragma: no cover - not present in this container
-    import PIL.Image  # noqa: F401
-    _REAL_DECODE = True
-except ImportError:
-    _REAL_DECODE = False
 
 FPS = 25  # stub video clock: 40 ms per frame
 N_FRAMES = 4
@@ -66,13 +59,10 @@ def _stub_dims(payload: bytes) -> tuple[int, int]:
 
 
 def decode_media(df: DataFrame) -> DataFrame:
-    """payload → typed metadata (width/height for visual media, a 40 ms
-    frame clock for video). Real decode would replace _stub_dims."""
+    """(media_ref, media_kind, payload) → typed metadata: byte count,
+    width/height from the deterministic _stub_dims of the payload, and a
+    40 ms frame clock for video."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if _REAL_DECODE:  # pragma: no cover
-            raise NotImplementedError(
-                "real decode path: plug PIL/ffmpeg here; the stub below is "
-                "the deterministic stand-in for codec-less containers")
         for pdf in batches:
             dims = [_stub_dims(p) for p in pdf["payload"]]
             n_bytes = [len(p or b"") for p in pdf["payload"]]
@@ -196,6 +186,75 @@ def multimodal_feature_stats(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
+# Synthetic format routes: each query below builds one genuine payload per
+# doc_id, runs its format's real decoder in ``rows(d)`` and hands that to
+# ``_per_doc``, the one mapInPandas loop over a doc_id column.
+# ---------------------------------------------------------------------------
+
+
+def _docs(spark, sf_dir, mod: int, res: int) -> DataFrame:
+    """The doc_id column of `documents` where doc_id % mod == res."""
+    return (read_testdata(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % mod == res).select("doc_id"))
+
+
+def _per_doc(docs: DataFrame, schema: str,
+             rows: Callable[[int], Iterable[tuple]]) -> DataFrame:
+    """One fused Python hop over a doc_id column: ``rows(d)`` returns the
+    tuples, in ``schema`` order, that doc d contributes (zero, one or
+    many)."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [t for d in pdf["doc_id"] for t in rows(int(d))]
+            cols = list(zip(*out)) if out else [()] * len(names)
+            yield pd.DataFrame({n: list(c) for n, c in zip(names, cols)})
+
+    return docs.mapInPandas(run, schema)
+
+
+def _md5(data: bytes) -> str:
+    return hashlib.md5(data).hexdigest()
+
+
+def _units(units: list[str]) -> tuple[int, str, int]:
+    """(count, md5 of the 0x1e-joined units, total chars): the summary
+    the text routes' oracles recompute with string_agg(t, chr(30))."""
+    return (len(units), _md5("\x1e".join(units).encode()),
+            sum(len(t) for t in units))
+
+
+def _members(members: list[tuple[str, bytes]]) -> tuple[int, str, str, int]:
+    """(count, names md5, contents md5, total bytes) of an archive walk."""
+    return (len(members), _md5("\x1e".join(n for n, _ in members).encode()),
+            _md5(b"\x1e".join(b for _, b in members)),
+            sum(len(b) for _, b in members))
+
+
+# Decoded-pixel rows: (width, height, channel means, pixel (1,2) RGB).
+_PIXEL_COLS = ("width int, height int, mean_r double, mean_g double, "
+               "mean_b double, p12_r int, p12_g int, p12_b int")
+_PIXEL_SCHEMA = "doc_id long, " + _PIXEL_COLS
+_NO_PIXELS = (-1, -1, -1.0, -1.0, -1.0, (-1, -1, -1))  # decode failed
+_DIMS_SCHEMA = ("doc_id long, fmt string, kind string, width int, "
+                "height int")
+_ARCHIVE_SCHEMA = ("doc_id long, n_members int, names_md5 string, "
+                   "text_md5 string, total_bytes long")
+
+
+def _unit_schema(count_col: str) -> str:
+    return f"doc_id long, {count_col} int, text_md5 string, total_chars long"
+
+
+def _pixels(got) -> tuple:
+    """A pixel decoder's (w, h, mean_r, mean_g, mean_b, (r, g, b)) result,
+    or the failure row when it returned None, flattened to _PIXEL_COLS."""
+    w, h, mr, mg, mb, px = got or _NO_PIXELS
+    return (w, h, mr, mg, mb, *px)
+
+
+# ---------------------------------------------------------------------------
 # REAL header-level decode (r4): container headers are public byte layouts
 # — no codec library needed. Spark synthesizes genuine PNG/GIF/JPEG bytes
 # per doc and round-trips them through oracle/imagemeta.parse_image_dims;
@@ -227,42 +286,17 @@ def multimodal_png_pixel_stats(spark, sf_dir):
     # back (chunk walk → IDAT inflate → unfilter); filtering is
     # lossless, so the closed-form gradient oracle pins all five
     # unfilter paths per document. (JPEG is decoded too: jpegcodec.py.)
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            decode_png_pixels,
-            make_png_pixels,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_r": [], "mean_g": [], "mean_b": [],
-                   "p12_r": [], "p12_g": [], "p12_b": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 64 + (d % 32) * 2, 32 + (d % 16) * 2
-                # odd docs are Adam7-interlaced (RFC 2083 §2.6) — the
-                # pixels are identical, so the closed-form oracle pins
-                # the deinterleave path too
-                got = decode_png_pixels(
-                    make_png_pixels(w, h, interlace=d % 2 == 1))
-                gw, gh, mr, mg, mb, sample = got if got else (
-                    -1, -1, -1.0, -1.0, -1.0, (-1, -1, -1))
-                out["doc_id"].append(d)
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-                out["p12_r"].append(sample[0])
-                out["p12_g"].append(sample[1])
-                out["p12_b"].append(sample[2])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import decode_png_pixels, make_png_pixels
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 5 == 4).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, mean_r double, "
-                      "mean_g double, mean_b double, p12_r int, "
-                      "p12_g int, p12_b int")
+    def rows(d):
+        w, h = 64 + (d % 32) * 2, 32 + (d % 16) * 2
+        # odd docs are Adam7-interlaced (RFC 2083 §2.6) — the pixels are
+        # identical, so the closed-form oracle pins the deinterleave
+        # path too
+        return [(d, *_pixels(decode_png_pixels(
+            make_png_pixels(w, h, interlace=d % 2 == 1))))]
+
+    return _per_doc(_docs(spark, sf_dir, 5, 4), _PIXEL_SCHEMA, rows)
 
 
 @register("multimodal_gif_pixel_stats", sql="""
@@ -289,43 +323,18 @@ def multimodal_gif_pixel_stats(spark, sf_dir):
     # pinned by hand-packed literal byte vectors (pair-symmetry broken),
     # the generator/decoder pair by this closed-form oracle. With BMP
     # and PNG real, JPEG follows in oracle/jpegcodec.py — no seam left.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            decode_gif_pixels,
-            make_gif_pixels,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_r": [], "mean_g": [], "mean_b": [],
-                   "p12_r": [], "p12_g": [], "p12_b": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 64 + (d % 32) * 2, 32 + (d % 16) * 2
-                # vary the container per doc: Appendix E interlacing on
-                # odd docs, local-instead-of-global color table on every
-                # third — same pixels, so the oracle is unchanged and
-                # pins all four layout paths
-                got = decode_gif_pixels(make_gif_pixels(
-                    w, h, interlace=d % 2 == 1, local_palette=d % 3 == 0))
-                gw, gh, mr, mg, mb, sample = got if got else (
-                    -1, -1, -1.0, -1.0, -1.0, (-1, -1, -1))
-                out["doc_id"].append(d)
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-                out["p12_r"].append(sample[0])
-                out["p12_g"].append(sample[1])
-                out["p12_b"].append(sample[2])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import decode_gif_pixels, make_gif_pixels
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 7 == 0).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, mean_r double, "
-                      "mean_g double, mean_b double, p12_r int, "
-                      "p12_g int, p12_b int")
+    def rows(d):
+        w, h = 64 + (d % 32) * 2, 32 + (d % 16) * 2
+        # vary the container per doc: Appendix E interlacing on odd
+        # docs, local-instead-of-global color table on every third —
+        # same pixels, so the oracle is unchanged and pins all four
+        # layout paths
+        return [(d, *_pixels(decode_gif_pixels(make_gif_pixels(
+            w, h, interlace=d % 2 == 1, local_palette=d % 3 == 0))))]
+
+    return _per_doc(_docs(spark, sf_dir, 7, 0), _PIXEL_SCHEMA, rows)
 
 
 @register("multimodal_bmp_pixel_stats", sql="""
@@ -354,44 +363,27 @@ def multimodal_bmp_pixel_stats(spark, sf_dir):
     # differential-tested against this numpy path. The compressed
     # codecs have since gone real too (PNG in imagemeta.py, JPEG in
     # oracle/jpegcodec.py).
-    import struct as _struct
+    import struct
 
     import numpy as np
 
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import make_bmp_pixels
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_r": [], "mean_g": [], "mean_b": [],
-                   "p12_r": [], "p12_g": [], "p12_b": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 64 + (d % 32) * 2, 32 + (d % 16) * 2
-                payload = make_bmp_pixels(w, h)
-                off = _struct.unpack("<I", payload[10:14])[0]
-                stride = (w * 3 + 3) & ~3
-                arr = np.frombuffer(
-                    payload, dtype=np.uint8, count=h * stride,
-                    offset=off).reshape(h, stride)[:, :w * 3]
-                img = arr.reshape(h, w, 3)[::-1]  # bottom-up -> top-left
-                means = img.astype(np.float64).mean(axis=(0, 1))  # B,G,R
-                out["doc_id"].append(d)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(float(means[2]))
-                out["mean_g"].append(float(means[1]))
-                out["mean_b"].append(float(means[0]))
-                out["p12_r"].append(int(img[2, 1, 2]))
-                out["p12_g"].append(int(img[2, 1, 1]))
-                out["p12_b"].append(int(img[2, 1, 0]))
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import make_bmp_pixels
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 5 == 3).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, mean_r double, "
-                      "mean_g double, mean_b double, p12_r int, "
-                      "p12_g int, p12_b int")
+    def rows(d):
+        w, h = 64 + (d % 32) * 2, 32 + (d % 16) * 2
+        payload = make_bmp_pixels(w, h)
+        off = struct.unpack("<I", payload[10:14])[0]
+        stride = (w * 3 + 3) & ~3
+        arr = np.frombuffer(
+            payload, dtype=np.uint8, count=h * stride,
+            offset=off).reshape(h, stride)[:, :w * 3]
+        img = arr.reshape(h, w, 3)[::-1]  # bottom-up -> top-left
+        b, g, r = img.astype(np.float64).mean(axis=(0, 1))
+        return [(d, w, h, float(r), float(g), float(b),
+                 *(int(c) for c in img[2, 1, ::-1]))]
+
+    return _per_doc(_docs(spark, sf_dir, 5, 3), _PIXEL_SCHEMA, rows)
+
 
 @register("multimodal_wav_pcm_stats", sql="""
     -- closed form of the PCM16 ramp sample[i] = ((i*97)%2048)-1024:
@@ -421,27 +413,16 @@ def multimodal_wav_pcm_stats(spark, sf_dir):
     # the ramp closed-form per sample. With BMP/PNG/GIF pixels and WAV
     # samples real, the baseline JPEG decoder (jpegcodec.py) closes
     # the last media-decode seam.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import decode_wav_pcm, make_wav_pcm
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "peak": [],
-                   "sum_s": [], "rms": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                got = decode_wav_pcm(make_wav_pcm(1000 + (d % 64) * 37))
-                n, peak, sum_s, rms = got if got else (-1, -1, -1, -1.0)
-                out["doc_id"].append(d)
-                out["n_samples"].append(n)
-                out["peak"].append(peak)
-                out["sum_s"].append(sum_s)
-                out["rms"].append(round(rms, 6))
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import decode_wav_pcm, make_wav_pcm
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 6 == 1).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, n_samples int, peak int, "
-                      "sum_s long, rms double")
+    def rows(d):
+        got = decode_wav_pcm(make_wav_pcm(1000 + (d % 64) * 37))
+        n, peak, sum_s, rms = got or (-1, -1, -1, -1.0)
+        return [(d, n, peak, sum_s, round(rms, 6))]
+
+    return _per_doc(_docs(spark, sf_dir, 6, 1),
+                    "doc_id long, n_samples int, peak int, sum_s long, "
+                    "rms double", rows)
 
 
 @register("multimodal_jpeg_pixel_stats", sql="""
@@ -493,46 +474,21 @@ def multimodal_jpeg_pixel_stats(spark, sf_dir):
     # against the SQL oracle. The general entropy path (AC run/size,
     # ZRL, negative EXTEND) is pinned by hand-packed bitstream vectors
     # in tests/test_jpegcodec.py.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.jpegcodec import (
-            decode_jpeg_pixels,
-            make_jpeg_pixels,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "subsample": [], "width": [],
-                   "height": [], "mean_r": [], "mean_g": [], "mean_b": [],
-                   "p12_r": [], "p12_g": [], "p12_b": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sub = "420" if d % 2 == 1 else "444"
-                if sub == "420":
-                    w, h = 16 * (4 + d % 5), 16 * (2 + d % 3)
-                else:
-                    w, h = 8 * (8 + d % 9), 8 * (4 + d % 5)
-                cb = 108 + (d % 5) * 10
-                cr = 108 + ((d // 5) % 5) * 10
-                got = decode_jpeg_pixels(
-                    make_jpeg_pixels(w, h, cb, cr, sub, d % 4))
-                gw, gh, mr, mg, mb, px = got if got else (
-                    -1, -1, -1.0, -1.0, -1.0, (-1, -1, -1))
-                out["doc_id"].append(d)
-                out["subsample"].append(sub)
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-                out["p12_r"].append(px[0])
-                out["p12_g"].append(px[1])
-                out["p12_b"].append(px[2])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.jpegcodec import decode_jpeg_pixels, make_jpeg_pixels
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 7 == 3).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, subsample string, width int, "
-                      "height int, mean_r double, mean_g double, "
-                      "mean_b double, p12_r int, p12_g int, p12_b int")
+    def rows(d):
+        sub = "420" if d % 2 == 1 else "444"
+        if sub == "420":
+            w, h = 16 * (4 + d % 5), 16 * (2 + d % 3)
+        else:
+            w, h = 8 * (8 + d % 9), 8 * (4 + d % 5)
+        cb = 108 + (d % 5) * 10
+        cr = 108 + ((d // 5) % 5) * 10
+        return [(d, sub, *_pixels(decode_jpeg_pixels(
+            make_jpeg_pixels(w, h, cb, cr, sub, d % 4))))]
+
+    return _per_doc(_docs(spark, sf_dir, 7, 3),
+                    "doc_id long, subsample string, " + _PIXEL_COLS, rows)
 
 
 @register("multimodal_progressive_jpeg_stats", sql="""
@@ -577,48 +533,30 @@ def multimodal_progressive_jpeg_stats(spark, sf_dir):
     # BASELINE twin of every image and pins bit-equality. The AC
     # refinement paths the DC-only generator cannot emit are covered by
     # hand-packed multi-scan vectors in tests/test_jpegcodec.py.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.jpegcodec import (
-            decode_jpeg_pixels,
-            make_jpeg_pixels,
-            make_progressive_jpeg_pixels,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "subsample": [], "width": [],
-                   "height": [], "mean_r": [], "mean_g": [], "mean_b": [],
-                   "matches_baseline": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sub = "420" if d % 2 == 1 else "444"
-                if sub == "420":
-                    w, h = 16 * (4 + d % 4), 16 * (2 + d % 3)
-                else:
-                    w, h = 8 * (6 + d % 7), 8 * (3 + d % 5)
-                cb = 108 + (d % 5) * 10
-                cr = 108 + ((d // 5) % 5) * 10
-                prog = decode_jpeg_pixels(
-                    make_progressive_jpeg_pixels(w, h, cb, cr, sub))
-                base = decode_jpeg_pixels(
-                    make_jpeg_pixels(w, h, cb, cr, sub))
-                gw, gh, mr, mg, mb, _px = prog if prog else (
-                    -1, -1, -1.0, -1.0, -1.0, None)
-                out["doc_id"].append(d)
-                out["subsample"].append(sub)
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-                out["matches_baseline"].append(
-                    prog is not None and prog == base)
-            yield pd.DataFrame(out)
+    from crawspark.oracle.jpegcodec import (
+        decode_jpeg_pixels,
+        make_jpeg_pixels,
+        make_progressive_jpeg_pixels,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 9 == 7).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, subsample string, width int, "
-                      "height int, mean_r double, mean_g double, "
-                      "mean_b double, matches_baseline boolean")
+    def rows(d):
+        sub = "420" if d % 2 == 1 else "444"
+        if sub == "420":
+            w, h = 16 * (4 + d % 4), 16 * (2 + d % 3)
+        else:
+            w, h = 8 * (6 + d % 7), 8 * (3 + d % 5)
+        cb = 108 + (d % 5) * 10
+        cr = 108 + ((d // 5) % 5) * 10
+        prog = decode_jpeg_pixels(
+            make_progressive_jpeg_pixels(w, h, cb, cr, sub))
+        base = decode_jpeg_pixels(make_jpeg_pixels(w, h, cb, cr, sub))
+        return [(d, sub, *_pixels(prog)[:5],
+                 prog is not None and prog == base)]
+
+    return _per_doc(_docs(spark, sf_dir, 9, 7),
+                    "doc_id long, subsample string, width int, height int, "
+                    "mean_r double, mean_g double, mean_b double, "
+                    "matches_baseline boolean", rows)
 
 
 @register("pdf_image_xobjects", sql="""
@@ -668,42 +606,30 @@ def pdf_image_xobjects(spark, sf_dir):
     # is the resolve_media path for the PDF route, closing the "image
     # codec filters" gap the r4 verdict ranked #2 (JPX/CCITT remain
     # metadata-only, honestly flagged by decoded=False).
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.jpegcodec import make_jpeg_pixels
-        from crawspark.oracle.pdfparse import (
-            extract_pdf_images,
-            make_pdf_with_images,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "obj_num": [], "filt": [], "width": [],
-                   "height": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                jw, jh = 8 * (6 + d % 6), 8 * (3 + d % 4)
-                cb = 108 + (d % 5) * 10
-                cr = 108 + ((d // 5) % 5) * 10
-                w2, h2 = 24 + (d % 12) * 4, 12 + (d % 10) * 3
-                doc = make_pdf_with_images(
-                    make_jpeg_pixels(jw, jh, cb, cr), jw, jh, w2, h2,
-                    predictor=12 if d % 2 else 0)
-                for rec in extract_pdf_images(doc.decode("latin-1")):
-                    out["doc_id"].append(d)
-                    out["obj_num"].append(rec["obj"])
-                    out["filt"].append(rec["filter"])
-                    out["width"].append(rec["width"] if rec["decoded"] else -1)
-                    out["height"].append(
-                        rec["height"] if rec["decoded"] else -1)
-                    out["mean_r"].append(rec["mean_r"])
-                    out["mean_g"].append(rec["mean_g"])
-                    out["mean_b"].append(rec["mean_b"])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.jpegcodec import make_jpeg_pixels
+    from crawspark.oracle.pdfparse import (
+        extract_pdf_images,
+        make_pdf_with_images,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 8 == 5).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, obj_num int, filt string, width int, "
-                      "height int, mean_r double, mean_g double, "
-                      "mean_b double")
+    def rows(d):
+        jw, jh = 8 * (6 + d % 6), 8 * (3 + d % 4)
+        cb = 108 + (d % 5) * 10
+        cr = 108 + ((d // 5) % 5) * 10
+        w2, h2 = 24 + (d % 12) * 4, 12 + (d % 10) * 3
+        doc = make_pdf_with_images(
+            make_jpeg_pixels(jw, jh, cb, cr), jw, jh, w2, h2,
+            predictor=12 if d % 2 else 0)
+        return [(d, rec["obj"], rec["filter"],
+                 rec["width"] if rec["decoded"] else -1,
+                 rec["height"] if rec["decoded"] else -1,
+                 rec["mean_r"], rec["mean_g"], rec["mean_b"])
+                for rec in extract_pdf_images(doc.decode("latin-1"))]
+
+    return _per_doc(_docs(spark, sf_dir, 8, 5),
+                    "doc_id long, obj_num int, filt string, width int, "
+                    "height int, mean_r double, mean_g double, "
+                    "mean_b double", rows)
 
 
 @register("multimodal_image_dims", sql="""
@@ -715,27 +641,15 @@ def pdf_image_xobjects(spark, sf_dir):
     FROM documents WHERE doc_id % 5 = 1
 """)
 def multimodal_image_dims(spark, sf_dir):
-    def synth_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import make_image_bytes, parse_image_dims
-        fmts = ("png", "gif", "jpeg")
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "width": [], "height": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = make_image_bytes(
-                    fmts[d % 3], 100 + (d % 40) * 7, 80 + (d % 25) * 9)
-                parsed = parse_image_dims(payload)  # REAL header parse
-                fmt, w, h = parsed if parsed else ("", -1, -1)
-                out["doc_id"].append(d)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import make_image_bytes, parse_image_dims
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 5 == 1).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, fmt string, width int, height int")
+    def rows(d):
+        payload = make_image_bytes(("png", "gif", "jpeg")[d % 3],
+                                   100 + (d % 40) * 7, 80 + (d % 25) * 9)
+        return [(d, *(parse_image_dims(payload) or ("", -1, -1)))]
+
+    return _per_doc(_docs(spark, sf_dir, 5, 1),
+                    "doc_id long, fmt string, width int, height int", rows)
 
 
 @register("multimodal_webp_avif_dims", sql="""
@@ -753,36 +667,21 @@ def multimodal_webp_avif_dims(spark, sf_dir):
     # keyframe sync + 14-bit dims, VP8L packed 14-bit fields, VP8X
     # 24-bit canvas, and AVIF's meta/iprp/ipco/ispe FullBox walk — then
     # parsed back and hashed against the closed-form oracle.
-    def synth_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            make_avif_bytes,
-            make_webp_bytes,
-            parse_image_dims,
-        )
-        kinds = ("vp8", "vp8l", "vp8x", "avif")
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "kind": [], "width": [],
-                   "height": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                kind = kinds[d % 4]
-                w, h = 120 + (d % 50) * 5, 90 + (d % 40) * 4
-                payload = (make_avif_bytes(w, h) if kind == "avif"
-                           else make_webp_bytes(kind, w, h))
-                parsed = parse_image_dims(payload)
-                fmt, gw, gh = parsed if parsed else ("", -1, -1)
-                out["doc_id"].append(d)
-                out["fmt"].append(fmt)
-                out["kind"].append(kind)
-                out["width"].append(gw)
-                out["height"].append(gh)
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import (
+        make_avif_bytes,
+        make_webp_bytes,
+        parse_image_dims,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 11 == 6).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, fmt string, kind string, width int, "
-                     "height int")
+    def rows(d):
+        kind = ("vp8", "vp8l", "vp8x", "avif")[d % 4]
+        w, h = 120 + (d % 50) * 5, 90 + (d % 40) * 4
+        payload = (make_avif_bytes(w, h) if kind == "avif"
+                   else make_webp_bytes(kind, w, h))
+        fmt, gw, gh = parse_image_dims(payload) or ("", -1, -1)
+        return [(d, fmt, kind, gw, gh)]
+
+    return _per_doc(_docs(spark, sf_dir, 11, 6), _DIMS_SCHEMA, rows)
 
 
 @register("multimodal_tiff_ico_svg_dims", sql="""
@@ -807,47 +706,32 @@ def multimodal_tiff_ico_svg_dims(spark, sf_dir):
     # the 0-byte-means-256 quirk), and SVG (width/height attrs with
     # units, and the viewBox fallback) — genuine bytes synthesized per
     # doc, parsed back, dims hashed against the closed-form oracle.
-    def synth_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            make_ico_bytes,
-            make_svg_bytes,
-            make_tiff_bytes,
-            parse_image_dims,
-        )
-        kinds = ("tiff-le", "tiff-be", "ico", "svg-attrs", "svg-viewbox")
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "kind": [], "width": [],
-                   "height": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                kind = kinds[d % 5]
-                if kind == "ico":
-                    if (d // 5) % 2 == 0:
-                        w = h = 256
-                    else:
-                        w, h = 16 + (d % 15) * 16, 16 + (d % 13) * 16
-                    payload = make_ico_bytes(w, h)
-                else:
-                    w, h = 100 + (d % 60) * 3, 80 + (d % 45) * 3
-                    if kind.startswith("tiff"):
-                        payload = make_tiff_bytes(w, h, kind == "tiff-be")
-                    else:
-                        payload = make_svg_bytes(
-                            w, h, viewbox=kind == "svg-viewbox")
-                parsed = parse_image_dims(payload)
-                fmt, gw, gh = parsed if parsed else ("", -1, -1)
-                out["doc_id"].append(d)
-                out["fmt"].append(fmt)
-                out["kind"].append(kind)
-                out["width"].append(gw)
-                out["height"].append(gh)
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import (
+        make_ico_bytes,
+        make_svg_bytes,
+        make_tiff_bytes,
+        parse_image_dims,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 8).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, fmt string, kind string, width int, "
-                     "height int")
+    def rows(d):
+        kind = ("tiff-le", "tiff-be", "ico", "svg-attrs",
+                "svg-viewbox")[d % 5]
+        if kind == "ico":
+            if (d // 5) % 2 == 0:
+                w = h = 256
+            else:
+                w, h = 16 + (d % 15) * 16, 16 + (d % 13) * 16
+            payload = make_ico_bytes(w, h)
+        else:
+            w, h = 100 + (d % 60) * 3, 80 + (d % 45) * 3
+            if kind.startswith("tiff"):
+                payload = make_tiff_bytes(w, h, kind == "tiff-be")
+            else:
+                payload = make_svg_bytes(w, h, viewbox=kind == "svg-viewbox")
+        fmt, gw, gh = parse_image_dims(payload) or ("", -1, -1)
+        return [(d, fmt, kind, gw, gh)]
+
+    return _per_doc(_docs(spark, sf_dir, 13, 8), _DIMS_SCHEMA, rows)
 
 
 @register("multimodal_audio_headers", sql="""
@@ -887,45 +771,28 @@ def multimodal_audio_headers(spark, sf_dir):
     # III frames behind a synchsafe-sized ID3v2 tag, and FLAC
     # STREAMINFO with its 20/3/5/36-bit packed fields — parsed back and
     # hashed against the closed-form oracle.
-    def synth_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            make_flac_bytes,
-            make_mp3_bytes,
-            parse_flac_meta,
-            parse_mp3_meta,
-        )
-        brs = (128, 192, 320, 64, 96)
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "bitrate_kbps": [],
-                   "sample_rate": [], "channels": [], "duration_ms": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    br = brs[d % 5]
-                    rate = (44100, 48000, 32000)[d % 3]
-                    payload = make_mp3_bytes(br, rate, 50 + d % 40,
-                                             id3_size=(d % 4) * 17)
-                    got = parse_mp3_meta(payload)
-                    gbr, grate, gdur = got if got else (-1, -1, -1)
-                    row = ("mp3", gbr, grate, 0, gdur)
-                else:
-                    rate = (44100, 48000, 22050)[d % 3]
-                    total = 100000 + (d % 50) * 977
-                    payload = make_flac_bytes(rate, 1 + d % 2, total)
-                    got = parse_flac_meta(payload)
-                    grate, gch, _gt, gdur = got if got else (-1, -1, -1, -1)
-                    row = ("flac", 0, grate, gch, gdur)
-                out["doc_id"].append(d)
-                for k, v in zip(("fmt", "bitrate_kbps", "sample_rate",
-                                 "channels", "duration_ms"), row):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import (
+        make_flac_bytes,
+        make_mp3_bytes,
+        parse_flac_meta,
+        parse_mp3_meta,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 7 == 5).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, fmt string, bitrate_kbps int, "
-                     "sample_rate int, channels int, duration_ms long")
+    def rows(d):
+        if d % 2 == 0:
+            payload = make_mp3_bytes((128, 192, 320, 64, 96)[d % 5],
+                                     (44100, 48000, 32000)[d % 3],
+                                     50 + d % 40, id3_size=(d % 4) * 17)
+            gbr, grate, gdur = parse_mp3_meta(payload) or (-1, -1, -1)
+            return [(d, "mp3", gbr, grate, 0, gdur)]
+        payload = make_flac_bytes((44100, 48000, 22050)[d % 3], 1 + d % 2,
+                                  100000 + (d % 50) * 977)
+        grate, gch, _gt, gdur = parse_flac_meta(payload) or (-1, -1, -1, -1)
+        return [(d, "flac", 0, grate, gch, gdur)]
+
+    return _per_doc(_docs(spark, sf_dir, 7, 5),
+                    "doc_id long, fmt string, bitrate_kbps int, "
+                    "sample_rate int, channels int, duration_ms long", rows)
 
 
 @register("multimodal_av_meta", sql="""
@@ -952,45 +819,28 @@ def multimodal_av_meta(spark, sf_dir):
     # rows hashed against the closed-form oracle. The WAV duration
     # round-trip is exact because every synthesized byte rate is a
     # multiple of 1000 (sample rates are multiples of 8000).
-    def synth_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            make_mp4_bytes,
-            make_wav_bytes,
-            parse_mp4_meta,
-            parse_wav_meta,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "container": [], "channels": [],
-                   "sample_rate": [], "duration_ms": [], "width": [],
-                   "height": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    payload = make_wav_bytes(
-                        1 + (d % 4) // 2, 8000 * (1 + d % 3),
-                        500 + (d % 20) * 250)
-                    parsed = parse_wav_meta(payload)
-                    ch, sr, dur = parsed if parsed else (-1, -1, -1)
-                    row = ("wav", ch, sr, dur, 0, 0)
-                else:
-                    payload = make_mp4_bytes(
-                        1000 + (d % 30) * 777, 640 + (d % 10) * 64,
-                        360 + (d % 8) * 45)
-                    parsed = parse_mp4_meta(payload)
-                    dur, w, h = parsed if parsed else (-1, -1, -1)
-                    row = ("mp4", 0, 0, dur, w, h)
-                out["doc_id"].append(d)
-                for k, v in zip(("container", "channels", "sample_rate",
-                                 "duration_ms", "width", "height"), row):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import (
+        make_mp4_bytes,
+        make_wav_bytes,
+        parse_mp4_meta,
+        parse_wav_meta,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 5 == 2).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, container string, channels int, "
-                     "sample_rate int, duration_ms long, width int, "
-                     "height int")
+    def rows(d):
+        if d % 2 == 0:
+            payload = make_wav_bytes(1 + (d % 4) // 2, 8000 * (1 + d % 3),
+                                     500 + (d % 20) * 250)
+            ch, sr, dur = parse_wav_meta(payload) or (-1, -1, -1)
+            return [(d, "wav", ch, sr, dur, 0, 0)]
+        payload = make_mp4_bytes(1000 + (d % 30) * 777, 640 + (d % 10) * 64,
+                                 360 + (d % 8) * 45)
+        dur, w, h = parse_mp4_meta(payload) or (-1, -1, -1)
+        return [(d, "mp4", 0, 0, dur, w, h)]
+
+    return _per_doc(_docs(spark, sf_dir, 5, 2),
+                    "doc_id long, container string, channels int, "
+                    "sample_rate int, duration_ms long, width int, "
+                    "height int", rows)
 
 
 @register("pdf_ccitt_images", sql="""
@@ -1021,35 +871,23 @@ def pdf_ccitt_images(spark, sf_dir):
     # (byte-aligned rows for every third doc, /BlackIs1 for odd docs)
     # and reports the decoded stored-sample mean against the rectangle
     # closed form.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.pdfparse import (
-            extract_pdf_images,
-            make_pdf_with_ccitt,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "filt": [],
-                   "decoded": [], "mean_gray": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + (d % 10) * 8, 10 + (d % 7) * 4
-                doc = make_pdf_with_ccitt(
-                    w, h, x0=d % 5, bw=4 + d % 9, y0=1 + d % 4,
-                    bh=2 + d % 4, black_is_1=d % 2 == 1,
-                    byte_align=d % 3 == 0)
-                for rec in extract_pdf_images(doc.decode("latin-1")):
-                    out["doc_id"].append(d)
-                    out["width"].append(rec["width"])
-                    out["height"].append(rec["height"])
-                    out["filt"].append(rec["filter"])
-                    out["decoded"].append(1 if rec["decoded"] else 0)
-                    out["mean_gray"].append(rec["mean_r"])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.pdfparse import (
+        extract_pdf_images,
+        make_pdf_with_ccitt,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 11 == 4).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, filt string, "
-                      "decoded int, mean_gray double")
+    def rows(d):
+        doc = make_pdf_with_ccitt(
+            16 + (d % 10) * 8, 10 + (d % 7) * 4, x0=d % 5, bw=4 + d % 9,
+            y0=1 + d % 4, bh=2 + d % 4, black_is_1=d % 2 == 1,
+            byte_align=d % 3 == 0)
+        return [(d, rec["width"], rec["height"], rec["filter"],
+                 1 if rec["decoded"] else 0, rec["mean_r"])
+                for rec in extract_pdf_images(doc.decode("latin-1"))]
+
+    return _per_doc(_docs(spark, sf_dir, 11, 4),
+                    "doc_id long, width int, height int, filt string, "
+                    "decoded int, mean_gray double", rows)
 
 
 @register("pdf_ccitt_g3_images", sql="""
@@ -1079,36 +917,24 @@ def pdf_ccitt_g3_images(spark, sf_dir):
     # every fifth doc, /BlackIs1 on odd docs. With pdf_ccitt_images
     # (G4) this puts every CCITT K class a scanned-PDF corpus carries
     # on the driver's hash path.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.pdfparse import (
-            extract_pdf_images,
-            make_pdf_with_ccitt,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "k": [],
-                   "decoded": [], "mean_gray": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + (d % 10) * 8, 10 + (d % 7) * 4
-                k = (0, 2, 4)[d % 3]
-                doc = make_pdf_with_ccitt(
-                    w, h, x0=d % 5, bw=4 + d % 9, y0=1 + d % 4,
-                    bh=2 + d % 4, black_is_1=d % 2 == 1,
-                    byte_align=d % 5 == 0, k=k)
-                for rec in extract_pdf_images(doc.decode("latin-1")):
-                    out["doc_id"].append(d)
-                    out["width"].append(rec["width"])
-                    out["height"].append(rec["height"])
-                    out["k"].append(k)
-                    out["decoded"].append(1 if rec["decoded"] else 0)
-                    out["mean_gray"].append(rec["mean_r"])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.pdfparse import (
+        extract_pdf_images,
+        make_pdf_with_ccitt,
+    )
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 11 == 7).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, k int, "
-                      "decoded int, mean_gray double")
+    def rows(d):
+        k = (0, 2, 4)[d % 3]
+        doc = make_pdf_with_ccitt(
+            16 + (d % 10) * 8, 10 + (d % 7) * 4, x0=d % 5, bw=4 + d % 9,
+            y0=1 + d % 4, bh=2 + d % 4, black_is_1=d % 2 == 1,
+            byte_align=d % 5 == 0, k=k)
+        return [(d, rec["width"], rec["height"], k,
+                 1 if rec["decoded"] else 0, rec["mean_r"])
+                for rec in extract_pdf_images(doc.decode("latin-1"))]
+
+    return _per_doc(_docs(spark, sf_dir, 11, 7),
+                    "doc_id long, width int, height int, k int, "
+                    "decoded int, mean_gray double", rows)
 
 
 @register("multimodal_tiff_pixel_stats", sql="""
@@ -1150,47 +976,21 @@ def multimodal_tiff_pixel_stats(spark, sf_dir):
     # against the closed-form gradient. PackBits and the LZW encoder
     # are pinned by the TIFF 6.0 §9 / PDF 32000-1 §7.4.4.2 spec worked
     # examples in tests/test_tiff_pixels.py.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            decode_tiff_pixels,
-            make_tiff_pixels,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_r": [], "mean_g": [], "mean_b": [],
-                   "p12_r": [], "p12_g": [], "p12_b": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 64 + (d % 16) * 2, 16 + (d % 8) * 2
-                # the doc filter d % 9 == 1 forces d % 3 == 1, so the
-                # compression index must be coprime with 9 or the grid
-                # collapses to LZW-only (r5 review finding)
-                got = decode_tiff_pixels(make_tiff_pixels(
-                    w, h,
-                    compression=(1, 5, 32773)[(d // 9) % 3],
-                    gray=d % 2 == 0,
-                    predictor=2 if d % 5 == 0 else 1,
-                    rows_per_strip=3 + d % 5,
-                    big_endian=d % 7 == 0))
-                gw, gh, mr, mg, mb, sample = got if got else (
-                    -1, -1, -1.0, -1.0, -1.0, (-1, -1, -1))
-                out["doc_id"].append(d)
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-                out["p12_r"].append(sample[0])
-                out["p12_g"].append(sample[1])
-                out["p12_b"].append(sample[2])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import decode_tiff_pixels, make_tiff_pixels
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 9 == 1).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, mean_r double, "
-                      "mean_g double, mean_b double, p12_r int, "
-                      "p12_g int, p12_b int")
+    def rows(d):
+        # the doc filter d % 9 == 1 forces d % 3 == 1, so the compression
+        # index must be coprime with 9 or the grid collapses to LZW-only
+        # (r5 review finding)
+        return [(d, *_pixels(decode_tiff_pixels(make_tiff_pixels(
+            64 + (d % 16) * 2, 16 + (d % 8) * 2,
+            compression=(1, 5, 32773)[(d // 9) % 3],
+            gray=d % 2 == 0,
+            predictor=2 if d % 5 == 0 else 1,
+            rows_per_strip=3 + d % 5,
+            big_endian=d % 7 == 0))))]
+
+    return _per_doc(_docs(spark, sf_dir, 9, 1), _PIXEL_SCHEMA, rows)
 
 
 @register("multimodal_tiff_fax_stats", sql="""
@@ -1216,38 +1016,22 @@ def multimodal_tiff_fax_stats(spark, sf_dir):
     # PhotometricInterpretation 0 mapping sample 0 -> white. The black
     # rectangle's closed-form area fraction pins every per-strip
     # bitstream framing end to end.
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.imagemeta import (
-            decode_tiff_pixels,
-            make_tiff_fax,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_gray": [], "p12": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 20 + (d % 6) * 4, 12 + (d % 5) * 3
-                got = decode_tiff_pixels(make_tiff_fax(
-                    w, h, x0=d % 5, bw=4 + d % 8, y0=1 + d % 4,
-                    bh=3 + d % 6,
-                    compression=(2, 3, 3, 4)[d % 4],
-                    t4_2d=d % 4 == 2,
-                    fill_align=d % 8 < 4,
-                    rows_per_strip=4 + d % 4))
-                gw, gh, mg, _, _, sample = got if got else (
-                    -1, -1, -1.0, -1.0, -1.0, (-1, -1, -1))
-                out["doc_id"].append(d)
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["mean_gray"].append(mg)
-                out["p12"].append(sample[0])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.imagemeta import decode_tiff_pixels, make_tiff_fax
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 9 == 5).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decode, "doc_id long, width int, height int, "
-                      "mean_gray double, p12 int")
+    def rows(d):
+        got = decode_tiff_pixels(make_tiff_fax(
+            20 + (d % 6) * 4, 12 + (d % 5) * 3,
+            x0=d % 5, bw=4 + d % 8, y0=1 + d % 4, bh=3 + d % 6,
+            compression=(2, 3, 3, 4)[d % 4],
+            t4_2d=d % 4 == 2,
+            fill_align=d % 8 < 4,
+            rows_per_strip=4 + d % 4))
+        gw, gh, mean_gray, _, _, px = got or _NO_PIXELS
+        return [(d, gw, gh, mean_gray, px[0])]
+
+    return _per_doc(_docs(spark, sf_dir, 9, 5),
+                    "doc_id long, width int, height int, "
+                    "mean_gray double, p12 int", rows)
 
 
 @register("pdf_encrypted_text", sql="""
@@ -1282,38 +1066,23 @@ def pdf_encrypted_text(spark, sf_dir):
     # file keys differ per doc), then extracts text THROUGH the
     # decryption path and hashes the recovered pages against the
     # closed-form plaintext the oracle recomputes.
-    def synth_decrypt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
+    import struct
 
-        from crawspark.oracle.pdfcrypt import encrypt_pdf, make_plain_pdf
-        from crawspark.oracle.pdfparse import extract_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "n_pages": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pages = [[f"doc {d} page {p} line {j}"
-                          for j in range(2 + (d + p) % 3)]
-                         for p in range(1 + d % 3)]
-                raw = make_plain_pdf(pages, flate=d % 2 == 0)
-                enc = encrypt_pdf(raw, rev=2 if d % 3 == 0 else 3,
-                                  doc_id=_struct.pack("<Q", d) * 2)
-                got = extract_pdf_text(enc.decode("latin-1"))
-                joined = "\x1e".join(got)
-                out["doc_id"].append(d)
-                out["n_pages"].append(len(got))
-                out["text_md5"].append(
-                    hashlib.md5(joined.encode()).hexdigest())
-                out["total_chars"].append(
-                    sum(len(t) for t in got))
-            yield pd.DataFrame(out)
+    from crawspark.oracle.pdfcrypt import encrypt_pdf, make_plain_pdf
+    from crawspark.oracle.pdfparse import extract_pdf_text
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 11 == 4).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decrypt, "doc_id long, n_pages int, text_md5 string, "
-                       "total_chars long")
+    def rows(d):
+        pages = [[f"doc {d} page {p} line {j}"
+                  for j in range(2 + (d + p) % 3)]
+                 for p in range(1 + d % 3)]
+        raw = make_plain_pdf(pages, flate=d % 2 == 0)
+        enc = encrypt_pdf(raw, rev=2 if d % 3 == 0 else 3,
+                          doc_id=struct.pack("<Q", d) * 2)
+        return [(d, *_units(extract_pdf_text(enc.decode("latin-1"))))]
+
+    return _per_doc(_docs(spark, sf_dir, 11, 4),
+                    "doc_id long, n_pages int, text_md5 string, "
+                    "total_chars long", rows)
 
 
 @register("pdf_encrypted_aes_text", sql="""
@@ -1349,41 +1118,25 @@ def pdf_encrypted_aes_text(spark, sf_dir):
     # share one r6_seed salt family so the hardened-hash cost is paid
     # once per executor, not per document (the file key itself still
     # varies per doc via /ID → sha256, so object payloads differ).
-    def synth_decrypt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
+    import struct
 
-        from crawspark.oracle.pdfcrypt import encrypt_pdf, make_plain_pdf
-        from crawspark.oracle.pdfparse import extract_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "n_pages": [], "cipher": [],
-                   "text_md5": [], "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pages = [[f"doc {d} page {p} line {j}"
-                          for j in range(2 + (d + p) % 3)]
-                         for p in range(1 + d % 3)]
-                raw = make_plain_pdf(pages, flate=d % 2 == 0)
-                rev = 4 if d % 2 == 0 else 6
-                enc = encrypt_pdf(raw, rev=rev,
-                                  doc_id=_struct.pack("<Q", d) * 2,
-                                  r6_seed=b"r5-corpus-salts")
-                got = extract_pdf_text(enc.decode("latin-1"))
-                joined = "\x1e".join(got)
-                out["doc_id"].append(d)
-                out["n_pages"].append(len(got))
-                out["cipher"].append("aesv2" if rev == 4 else "aes256")
-                out["text_md5"].append(
-                    hashlib.md5(joined.encode()).hexdigest())
-                out["total_chars"].append(
-                    sum(len(t) for t in got))
-            yield pd.DataFrame(out)
+    from crawspark.oracle.pdfcrypt import encrypt_pdf, make_plain_pdf
+    from crawspark.oracle.pdfparse import extract_pdf_text
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 11 == 7).select("doc_id"))
-    return docs.mapInPandas(
-        synth_decrypt, "doc_id long, n_pages int, cipher string, "
-                       "text_md5 string, total_chars long")
+    def rows(d):
+        pages = [[f"doc {d} page {p} line {j}"
+                  for j in range(2 + (d + p) % 3)]
+                 for p in range(1 + d % 3)]
+        raw = make_plain_pdf(pages, flate=d % 2 == 0)
+        rev = 4 if d % 2 == 0 else 6
+        enc = encrypt_pdf(raw, rev=rev, doc_id=struct.pack("<Q", d) * 2,
+                          r6_seed=b"r5-corpus-salts")
+        n, md5, chars = _units(extract_pdf_text(enc.decode("latin-1")))
+        return [(d, n, "aesv2" if rev == 4 else "aes256", md5, chars)]
+
+    return _per_doc(_docs(spark, sf_dir, 11, 7),
+                    "doc_id long, n_pages int, cipher string, "
+                    "text_md5 string, total_chars long", rows)
 
 
 @register("docx_extract_text", sql="""
@@ -1414,28 +1167,13 @@ def docx_extract_text(spark, sf_dir):
     # container per doc, extracts WordprocessingML paragraphs (runs,
     # preserved-space separators, w:tab) through the real zip+XML walk,
     # and hashes the recovered text against the closed-form oracle.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.officedoc import extract_docx_text, make_docx
 
-        from crawspark.oracle.officedoc import extract_docx_text, make_docx
-        for pdf in batches:
-            out = {"doc_id": [], "n_paras": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                paras = extract_docx_text(make_docx(d))
-                out["doc_id"].append(d)
-                out["n_paras"].append(len(paras))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(paras).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in paras))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_docx_text(make_docx(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 6).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_paras int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 13, 6),
+                    _unit_schema("n_paras"), rows)
 
 
 @register("xlsx_extract_rows", sql="""
@@ -1469,29 +1207,15 @@ def xlsx_extract_rows(spark, sf_dir):
     # reversed), sharedStrings indirection, and the column-ref sort
     # (odd rows ship cells in reverse XML order) — then hashes the
     # recovered text against the closed-form oracle.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.officedoc import extract_xlsx_rows, make_xlsx
 
-        from crawspark.oracle.officedoc import extract_xlsx_rows, make_xlsx
-        for pdf in batches:
-            out = {"doc_id": [], "n_rows": [], "n_sheets": [],
-                   "text_md5": [], "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rows = extract_xlsx_rows(make_xlsx(d))
-                out["doc_id"].append(d)
-                out["n_rows"].append(len(rows))
-                out["n_sheets"].append(1 + d % 2)
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(rows).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in rows))
-            yield pd.DataFrame(out)
+    def rows(d):
+        n, md5, chars = _units(extract_xlsx_rows(make_xlsx(d)))
+        return [(d, n, 1 + d % 2, md5, chars)]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 9).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_rows int, n_sheets int, "
-                       "text_md5 string, total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 13, 9),
+                    "doc_id long, n_rows int, n_sheets int, "
+                    "text_md5 string, total_chars long", rows)
 
 
 @register("pptx_extract_text", sql="""
@@ -1521,29 +1245,15 @@ def pptx_extract_text(spark, sf_dir):
     # PresentationML route (r5): deterministic .pptx per doc; the real
     # walk resolves sldIdLst order through reversed rels, concatenates
     # a:t runs per a:p paragraph, and hashes the recovered deck text.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.officedoc import extract_pptx_text, make_pptx
 
-        from crawspark.oracle.officedoc import extract_pptx_text, make_pptx
-        for pdf in batches:
-            out = {"doc_id": [], "n_paras": [], "n_slides": [],
-                   "text_md5": [], "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                paras = extract_pptx_text(make_pptx(d))
-                out["doc_id"].append(d)
-                out["n_paras"].append(len(paras))
-                out["n_slides"].append(1 + d % 3)
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(paras).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in paras))
-            yield pd.DataFrame(out)
+    def rows(d):
+        n, md5, chars = _units(extract_pptx_text(make_pptx(d)))
+        return [(d, n, 1 + d % 3, md5, chars)]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 10).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_paras int, n_slides int, "
-                       "text_md5 string, total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 13, 10),
+                    "doc_id long, n_paras int, n_slides int, "
+                    "text_md5 string, total_chars long", rows)
 
 
 @register("rtf_extract_text", sql="""
@@ -1574,28 +1284,13 @@ def rtf_extract_text(spark, sf_dir):
     # decodes \\'xx cp1252 bytes and \\uN unicode with \\uc fallback
     # swallowing, and hashes the recovered paragraphs. total_chars is
     # CODEPOINTS (DuckDB length() ≡ Python len on UTF-8 text).
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.rtf import extract_rtf_text, make_rtf
 
-        from crawspark.oracle.rtf import extract_rtf_text, make_rtf
-        for pdf in batches:
-            out = {"doc_id": [], "n_paras": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                paras = extract_rtf_text(make_rtf(d))
-                out["doc_id"].append(d)
-                out["n_paras"].append(len(paras))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(paras).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in paras))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_rtf_text(make_rtf(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 11).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_paras int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 13, 11),
+                    _unit_schema("n_paras"), rows)
 
 
 @register("doc_legacy_extract_text", sql="""
@@ -1626,31 +1321,13 @@ def doc_legacy_extract_text(spark, sf_dir):
     # from the FIB flag, and reassembles text from a piece table whose
     # stream layout is REVERSED vs cp order, mixing a cp1252 piece with
     # a UTF-16 piece. Recovered paragraphs are hashed per doc.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.cfbdoc import extract_doc_text, make_legacy_doc
 
-        from crawspark.oracle.cfbdoc import (
-            extract_doc_text,
-            make_legacy_doc,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "n_paras": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                paras = extract_doc_text(make_legacy_doc(d))
-                out["doc_id"].append(d)
-                out["n_paras"].append(len(paras))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(paras).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in paras))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_doc_text(make_legacy_doc(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 12).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_paras int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 13, 12),
+                    _unit_schema("n_paras"), rows)
 
 
 @register("eml_extract_text", sql="""
@@ -1684,29 +1361,15 @@ def eml_extract_text(spark, sf_dir):
     # mixed→alternative boundaries (last text/plain wins, html and the
     # base64 decoy ignored), and decodes quoted-printable + base64
     # bodies. Subject + body lines hashed per doc.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.mailmsg import extract_eml, make_eml
 
-        from crawspark.oracle.mailmsg import extract_eml, make_eml
-        for pdf in batches:
-            out = {"doc_id": [], "subject": [], "n_lines": [],
-                   "body_md5": [], "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                subject, lines = extract_eml(make_eml(d))
-                out["doc_id"].append(d)
-                out["subject"].append(subject)
-                out["n_lines"].append(len(lines))
-                out["body_md5"].append(hashlib.md5(
-                    "\x1e".join(lines).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in lines))
-            yield pd.DataFrame(out)
+    def rows(d):
+        subject, lines = extract_eml(make_eml(d))
+        return [(d, subject, *_units(lines))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 13 == 7).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, subject string, n_lines int, "
-                       "body_md5 string, total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 13, 7),
+                    "doc_id long, subject string, n_lines int, "
+                    "body_md5 string, total_chars long", rows)
 
 
 @register("epub_extract_text", sql="""
@@ -1741,28 +1404,13 @@ def epub_extract_text(spark, sf_dir):
     # → spine reading order (REVERSED vs manifest and file naming), and
     # parses each XHTML chapter through the extraction core's own DOM
     # tokenizer, taking <p> text and ignoring nav junk.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.epub import extract_epub_text, make_epub
 
-        from crawspark.oracle.epub import extract_epub_text, make_epub
-        for pdf in batches:
-            out = {"doc_id": [], "n_chapters": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                chaps = extract_epub_text(make_epub(d))
-                out["doc_id"].append(d)
-                out["n_chapters"].append(len(chaps))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(chaps).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in chaps))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_epub_text(make_epub(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 17 == 4).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_chapters int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 17, 4),
+                    _unit_schema("n_chapters"), rows)
 
 
 # Shared by route_mixed_formats (batch) and stream_route_formats
@@ -1896,27 +1544,13 @@ def route_formats(df: DataFrame) -> DataFrame:
     container from bytes alone and extracts through the matching
     parser. Works on batch AND streaming DataFrames (stateless
     mapInPandas)."""
-    def synth_route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.sniff import build_format_payload, extract_any
 
-        from crawspark.oracle.sniff import build_format_payload as build
-        from crawspark.oracle.sniff import extract_any
+    def rows(d):
+        fmt, units = extract_any(build_format_payload(d))
+        return [(d, fmt, *_units(units))]
 
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "n_units": [],
-                   "text_md5": [], "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                fmt, units = extract_any(build(d))
-                out["doc_id"].append(d)
-                out["fmt"].append(fmt)
-                out["n_units"].append(len(units))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(units).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in units))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(synth_route, ROUTE_FORMATS_SCHEMA)
+    return _per_doc(df, ROUTE_FORMATS_SCHEMA, rows)
 
 
 @register("warc_route_payloads", sql=ROUTE_FORMATS_SQL)
@@ -1930,44 +1564,27 @@ def warc_route_payloads(spark, sf_dir):
     # parser. The oracle is the SAME 8-branch UNION as the plain
     # router: every transport layer must be byte-lossless, so all
     # three routing queries (batch, streaming, WARC) hash identically.
-    def synth_route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.httpmsg import build_response, parse_response
+    from crawspark.oracle.sniff import build_format_payload, extract_any
+    from crawspark.oracle.warc import build_record, build_warc, parse_warc
 
-        from crawspark.oracle.httpmsg import build_response, parse_response
-        from crawspark.oracle.sniff import build_format_payload, extract_any
-        from crawspark.oracle.warc import build_record, build_warc, parse_warc
-
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "n_units": [],
-                   "text_md5": [], "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                http = build_response(
-                    build_format_payload(d), variant=d % 4,
-                    content_type="application/octet-stream")
-                rec = build_record(
-                    "response", http,
-                    target_uri=f"http://example.test/doc/{d}",
-                    record_id=f"<urn:uuid:crawspark-{d}>",
-                    content_type="application/http;msgtype=response")
-                warc = build_warc([rec], gzip_members=d % 2 == 0)
-                resp = next(
-                    (r for r in parse_warc(warc)
+    def rows(d):
+        http = build_response(
+            build_format_payload(d), variant=d % 4,
+            content_type="application/octet-stream")
+        rec = build_record(
+            "response", http,
+            target_uri=f"http://example.test/doc/{d}",
+            record_id=f"<urn:uuid:crawspark-{d}>",
+            content_type="application/http;msgtype=response")
+        warc = build_warc([rec], gzip_members=d % 2 == 0)
+        resp = next((r for r in parse_warc(warc)
                      if r["warc_type"] == "response"), None)
-                msg = parse_response(resp["block"]) if resp else None
-                fmt, units = extract_any(msg["body"]) if msg \
-                    else ("unknown", [])
-                out["doc_id"].append(d)
-                out["fmt"].append(fmt)
-                out["n_units"].append(len(units))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(units).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in units))
-            yield pd.DataFrame(out)
+        msg = parse_response(resp["block"]) if resp else None
+        fmt, units = extract_any(msg["body"]) if msg else ("unknown", [])
+        return [(d, fmt, *_units(units))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 1).select("doc_id"))
-    return docs.mapInPandas(synth_route, ROUTE_FORMATS_SCHEMA)
+    return _per_doc(_docs(spark, sf_dir, 10, 1), ROUTE_FORMATS_SCHEMA, rows)
 
 
 @register("route_mixed_formats", sql=ROUTE_FORMATS_SQL)
@@ -1978,9 +1595,7 @@ def route_mixed_formats(spark, sf_dir):
     # probes — no extension, no Content-Type) and extract through the
     # matching parser. The oracle unions all eight closed forms, so a
     # missniff OR a parser slip flips the row.
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 1).select("doc_id"))
-    return route_formats(docs)
+    return route_formats(_docs(spark, sf_dir, 10, 1))
 
 
 @register("scan_tar_archive", sql="""
@@ -2018,32 +1633,12 @@ def scan_tar_archive(spark, sf_dir):
     # gunzips, verifies ustar header checksums, reassembles ustar
     # prefix-split paths and GNU typeflag-L longnames, skips directory
     # entries, and hashes the recovered member names + contents.
-    def synth_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.tarzip import make_targz, parse_tar
 
-        from crawspark.oracle.tarzip import make_targz, parse_tar
-        for pdf in batches:
-            out = {"doc_id": [], "n_members": [], "names_md5": [],
-                   "text_md5": [], "total_bytes": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                members = parse_tar(make_targz(d))
-                out["doc_id"].append(d)
-                out["n_members"].append(len(members))
-                out["names_md5"].append(hashlib.md5(
-                    "\x1e".join(n for n, _ in members).encode())
-                    .hexdigest())
-                out["text_md5"].append(hashlib.md5(
-                    b"\x1e".join(b for _, b in members)).hexdigest())
-                out["total_bytes"].append(
-                    sum(len(b) for _, b in members))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_members(parse_tar(make_targz(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 7).select("doc_id"))
-    return docs.mapInPandas(
-        synth_scan, "doc_id long, n_members int, names_md5 string, "
-                    "text_md5 string, total_bytes long")
+    return _per_doc(_docs(spark, sf_dir, 10, 7), _ARCHIVE_SCHEMA, rows)
 
 
 @register("markdown_extract_blocks", sql="""
@@ -2091,31 +1686,13 @@ def markdown_extract_blocks(spark, sf_dir):
     # drops reference definitions and rules, joins lazy continuation
     # lines, keeps fenced code VERBATIM (no marker stripping inside),
     # and unwraps blockquotes/list items — blocks hashed per doc.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.markdown import extract_markdown, make_markdown
 
-        from crawspark.oracle.markdown import (
-            extract_markdown,
-            make_markdown,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "n_blocks": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blocks = extract_markdown(make_markdown(d))
-                out["doc_id"].append(d)
-                out["n_blocks"].append(len(blocks))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(blocks).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in blocks))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_markdown(make_markdown(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 9).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_blocks int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 10, 9),
+                    _unit_schema("n_blocks"), rows)
 
 
 @register("odt_extract_text", sql="""
@@ -2145,28 +1722,13 @@ def odt_extract_text(spark, sf_dir):
     # walk reads content.xml, flattens spans, expands text:s multi-
     # space elements by their text:c count (ODF's collapsed-whitespace
     # mechanic) and maps text:tab — recovered paragraphs hashed.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.officedoc import extract_odt_text, make_odt
 
-        from crawspark.oracle.officedoc import extract_odt_text, make_odt
-        for pdf in batches:
-            out = {"doc_id": [], "n_paras": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                paras = extract_odt_text(make_odt(d))
-                out["doc_id"].append(d)
-                out["n_paras"].append(len(paras))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(paras).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in paras))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_odt_text(make_odt(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 11 == 9).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_paras int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 11, 9),
+                    _unit_schema("n_paras"), rows)
 
 
 @register("latex_extract_blocks", sql="""
@@ -2212,28 +1774,13 @@ def latex_extract_blocks(spark, sf_dir):
     # commands with a brace scanner, drops cite/ref/label with
     # arguments, placeholders inline + display math, skips tabular,
     # hoists figure captions, and keeps verbatim blocks VERBATIM.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.latex import extract_latex, make_latex
 
-        from crawspark.oracle.latex import extract_latex, make_latex
-        for pdf in batches:
-            out = {"doc_id": [], "n_blocks": [], "text_md5": [],
-                   "total_chars": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blocks = extract_latex(make_latex(d))
-                out["doc_id"].append(d)
-                out["n_blocks"].append(len(blocks))
-                out["text_md5"].append(hashlib.md5(
-                    "\x1e".join(blocks).encode()).hexdigest())
-                out["total_chars"].append(sum(len(t) for t in blocks))
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, *_units(extract_latex(make_latex(d))))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 12 == 5).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_blocks int, text_md5 string, "
-                       "total_chars long")
+    return _per_doc(_docs(spark, sf_dir, 12, 5),
+                    _unit_schema("n_blocks"), rows)
 
 
 @register("html_extract_tables", sql="""
@@ -2272,34 +1819,18 @@ def html_extract_tables(spark, sf_dir):
     # goes through the extraction core's DOM tokenizer and expands
     # colspan (cell duplicated across columns) and rowspan (cell
     # carried down, offsetting later cells) into aligned grids.
-    def synth_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.htmltable import extract_tables, make_table_page
 
-        from crawspark.oracle.htmltable import (
-            extract_tables,
-            make_table_page,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "n_tables": [], "n_rows": [],
-                   "n_cells": [], "grid_md5": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                grids = extract_tables(make_table_page(d))
-                rows = [("\x1f".join(row)) for g in grids for row in g]
-                out["doc_id"].append(d)
-                out["n_tables"].append(len(grids))
-                out["n_rows"].append(sum(len(g) for g in grids))
-                out["n_cells"].append(
-                    sum(len(r) for g in grids for r in g))
-                out["grid_md5"].append(hashlib.md5(
-                    "\x1e".join(rows).encode()).hexdigest())
-            yield pd.DataFrame(out)
+    def rows(d):
+        grids = extract_tables(make_table_page(d))
+        lines = ["\x1f".join(row) for g in grids for row in g]
+        return [(d, len(grids), len(lines),
+                 sum(len(r) for g in grids for r in g),
+                 _md5("\x1e".join(lines).encode()))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 14 == 3).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, n_tables int, n_rows int, "
-                       "n_cells int, grid_md5 string")
+    return _per_doc(_docs(spark, sf_dir, 14, 3),
+                    "doc_id long, n_tables int, n_rows int, "
+                    "n_cells int, grid_md5 string", rows)
 
 
 @register("multimodal_exif_meta", sql="""
@@ -2328,39 +1859,25 @@ def multimodal_exif_meta(spark, sf_dir):
     # auto-rotation-EFFECTIVE dimensions (orientation 5-8 transposes
     # pixel_x/pixel_y) — the gate a media pipeline filters on before
     # any pixel work.
-    def synth_exif(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawspark.oracle.exif import make_exif_jpeg, parse_exif
-        from crawspark.oracle.jpegcodec import make_jpeg_pixels
-        for pdf in batches:
-            out = {"doc_id": [], "orientation": [], "make": [],
-                   "taken_at": [], "eff_width": [], "eff_height": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                jpg = make_exif_jpeg(
-                    make_jpeg_pixels(16, 8),
-                    orientation=1 + d % 8,
-                    make=f"cam{d % 7}",
-                    datetime_s=(f"2025:04:{1 + d % 28:02d}"
-                                f" 10:{d % 60:02d}:00"),
-                    pixel_x=100 + d % 40, pixel_y=200 + d % 50,
-                    big_endian=d % 2 == 0)
-                m = parse_exif(jpg)
-                swap = m["orientation"] >= 5
-                out["doc_id"].append(d)
-                out["orientation"].append(m["orientation"])
-                out["make"].append(m["make"])
-                out["taken_at"].append(m["datetime"])
-                out["eff_width"].append(
-                    m["pixel_y"] if swap else m["pixel_x"])
-                out["eff_height"].append(
-                    m["pixel_x"] if swap else m["pixel_y"])
-            yield pd.DataFrame(out)
+    from crawspark.oracle.exif import make_exif_jpeg, parse_exif
+    from crawspark.oracle.jpegcodec import make_jpeg_pixels
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 12 == 7).select("doc_id"))
-    return docs.mapInPandas(
-        synth_exif, "doc_id long, orientation int, make string, "
-                    "taken_at string, eff_width int, eff_height int")
+    def rows(d):
+        m = parse_exif(make_exif_jpeg(
+            make_jpeg_pixels(16, 8),
+            orientation=1 + d % 8,
+            make=f"cam{d % 7}",
+            datetime_s=f"2025:04:{1 + d % 28:02d} 10:{d % 60:02d}:00",
+            pixel_x=100 + d % 40, pixel_y=200 + d % 50,
+            big_endian=d % 2 == 0))
+        w, h = m["pixel_x"], m["pixel_y"]
+        if m["orientation"] >= 5:
+            w, h = h, w
+        return [(d, m["orientation"], m["make"], m["datetime"], w, h)]
+
+    return _per_doc(_docs(spark, sf_dir, 12, 7),
+                    "doc_id long, orientation int, make string, "
+                    "taken_at string, eff_width int, eff_height int", rows)
 
 
 @register("scan_zip_archive", sql="""
@@ -2395,29 +1912,10 @@ def scan_zip_archive(spark, sf_dir):
     # the EOCD back over the comment, follows the central directory,
     # re-reads each member's LOCAL header lengths, inflates raw-deflate
     # members, verifies every CRC-32 and skips the directory entry.
-    def synth_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from crawspark.oracle.tarzip import make_zip, parse_zip
 
-        from crawspark.oracle.tarzip import make_zip, parse_zip
-        for pdf in batches:
-            out = {"doc_id": [], "n_members": [], "names_md5": [],
-                   "text_md5": [], "total_bytes": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                members = parse_zip(make_zip(d, comment=b"c" * (d % 97)))
-                out["doc_id"].append(d)
-                out["n_members"].append(len(members))
-                out["names_md5"].append(hashlib.md5(
-                    "\x1e".join(n for n, _ in members).encode())
-                    .hexdigest())
-                out["text_md5"].append(hashlib.md5(
-                    b"\x1e".join(b for _, b in members)).hexdigest())
-                out["total_bytes"].append(
-                    sum(len(b) for _, b in members))
-            yield pd.DataFrame(out)
+    def rows(d):
+        members = parse_zip(make_zip(d, comment=b"c" * (d % 97)))
+        return [(d, *_members(members))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 3).select("doc_id"))
-    return docs.mapInPandas(
-        synth_scan, "doc_id long, n_members int, names_md5 string, "
-                    "text_md5 string, total_bytes long")
+    return _per_doc(_docs(spark, sf_dir, 10, 3), _ARCHIVE_SCHEMA, rows)

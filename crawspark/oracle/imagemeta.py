@@ -1,14 +1,14 @@
 """Pure-Python image container-header parsing: real dimension decode with
 zero codec dependencies.
 
-The multimodal PIXEL decode stays a stub (no PIL/ffmpeg in this
-container), but container headers are plain public byte layouts — PNG
-IHDR (RFC 2083 §3.1), GIF logical screen descriptor (GIF89a spec §18),
-JPEG SOFn frame headers (ITU-T T.81 §B.2.2), BMP BITMAPINFOHEADER — so
-width/height/format extraction is implemented for real and unit-tested
-against hand-written byte vectors. This is the metadata a 100 TB media
-curation pipeline actually filters on (resolution gates, aspect buckets)
-before any pixel work.
+Container headers are plain public byte layouts — PNG IHDR (RFC 2083
+§3.1), GIF logical screen descriptor (GIF89a spec §18), JPEG SOFn frame
+headers (ITU-T T.81 §B.2.2), BMP BITMAPINFOHEADER — so width/height/
+format extraction is implemented for real and unit-tested against
+hand-written byte vectors. This is the metadata a 100 TB media curation
+pipeline actually filters on (resolution gates, aspect buckets) before
+any pixel work. Pixels decode for real too, with no codec library: BMP,
+PNG, GIF and TIFF here, JPEG in oracle/jpegcodec.py.
 """
 
 from __future__ import annotations

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from crawspark.operators.multimodal import (
     N_FRAMES,
+    _per_doc,
     decode_media,
     extract_media_features,
     media_table,
@@ -53,6 +54,33 @@ def test_frame_sample_fanout(spark):
         frames.sort()
         ms = [m for _, m in frames]
         assert ms == sorted(ms) and len(set(ms)) == N_FRAMES  # spaced
+
+
+def test_per_doc_zero_one_many_rows(spark):
+    # Every format route emits its rows through _per_doc. A doc may emit
+    # none, one or several rows; docs 0-3 emit none, so range()'s first
+    # partition is a batch with no output at all.
+    schema = "doc_id long, k int, tag string, x double"
+
+    def rows(d):
+        return [(d, k, f"t{d}", d / 2)
+                for k in range(0 if d < 4 else d % 3)]
+
+    docs = spark.range(0, 12, numPartitions=3).withColumnRenamed(
+        "id", "doc_id")
+    df = _per_doc(docs, schema, rows)
+    assert df.schema.simpleString() == (
+        "struct<doc_id:bigint,k:int,tag:string,x:double>")
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == sorted(t for d in range(12) for t in rows(d))
+    assert {len(rows(d)) for d in range(12)} == {0, 1, 2}
+
+    def none(d):
+        return []
+
+    empty = _per_doc(docs, schema, none)
+    assert empty.schema == df.schema
+    assert empty.collect() == []
 
 
 # --- r4: real container-header parsing (no codec libs needed) -------------
