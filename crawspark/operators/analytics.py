@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -414,8 +415,7 @@ def heavy_hitters_users(spark, sf_dir):
         .otherwise(F.col("user_id")).cast("long").alias("hot_key"))
     # repartition: a single-file scan would make MG a single-partition
     # exact pass (still correct, but the multi-summary union is the point)
-    keyed = keyed.repartition(spark.sparkContext.defaultParallelism)
-    return heavy_hitters(keyed, "hot_key", 20)
+    return heavy_hitters(ensure_parallelism(keyed), "hot_key", 20)
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -86,9 +87,8 @@ def decode_bytes_q(spark, sf_dir):
                 oks.append(decode_bytes(data, declared) == original)
             yield pd.DataFrame({"enc_rule": rules, "ok": oks})
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = ensure_parallelism(
+        read_testdata(spark, sf_dir, "documents").select("doc_id", "text"))
     per_doc = docs.mapInPandas(synth_decode, "enc_rule string, ok boolean")
     return (per_doc.groupBy("enc_rule")
             .agg(F.count("*").alias("n_docs"),

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -84,8 +85,7 @@ def capped_shingle_arrays(docs: DataFrame) -> DataFrame:
     The base arrays are checkpointed: the hot aggregate and the except
     pass both consume them, and the tokenize+shingle HOFs are the
     dominant CPU."""
-    spark = docs.sparkSession
-    base = (docs.repartition(spark.sparkContext.defaultParallelism)
+    base = (ensure_parallelism(docs)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= 3)
             .withColumn("shs", F.expr(_SHINGLES))
@@ -183,8 +183,7 @@ def minhash_signatures(df: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     equals min over the raw multiset, so signatures equal a per-shingle
     row aggregation of the same xxhash64(h, i) chain (pinned by
     tests/test_r6_optimizations.py against a test-local reference)."""
-    spark = df.sparkSession
-    base = (df.repartition(spark.sparkContext.defaultParallelism)
+    base = (ensure_parallelism(df)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= 3)
             .withColumn("hs", F.expr(
@@ -528,14 +527,10 @@ def substr_windows(docs: DataFrame) -> DataFrame:
     """(doc_id, w): distinct SUBSTR_L-token window md5s per doc — the
     ONE window-table definition shared by dedup_exact_substring (pair
     join) and curate_corpus_v2's drop-list derivation (min-doc-per-
-    window; needs no pair join). Repartitioned first — the same
-    single-file-scan hazard as capped_shingle_arrays: without it the
-    12-gram HOF + md5 map ran on the scan's 2 partitions (r6 measured
-    the v2 drop pass at 11.0s vs 2.3s repartitioned at sf1.0)."""
+    window; needs no pair join)."""
     from crawspark.functions.ngrams import ngram_expr
 
-    sc = docs.sparkSession.sparkContext
-    return (docs.repartition(sc.defaultParallelism)
+    return (ensure_parallelism(docs)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= SUBSTR_L)
             .withColumn(
@@ -877,15 +872,12 @@ def _winnow_fp(aug):
     sort — then a distinct (another exchange; per-doc array_distinct is
     equivalent because doc_id is part of the key). Equivalence with the
     window form is pinned by tests/test_winnowing.py's textbook
-    reference. The input is repartitioned first — same hazard as
-    capped_shingle_arrays: a small single-file parquet scan yields ONE
-    partition, serializing the CPU-heavy gram+md5 map onto one core."""
-    sc = aug.sparkSession.sparkContext
+    reference."""
     sel = (f"array_distinct(transform("
            f"  filter(sequence(0, size(hs) - 1),"
            f"         j -> {_winnow_array_pred('j')}),"
            f"  j -> element_at(hs, j + 1)))")
-    return (aug.repartition(sc.defaultParallelism)
+    return (ensure_parallelism(aug)
             .selectExpr("doc_id", f"{_TOKS} AS toks")
             .filter(F.expr(f"size(toks) >= {WINNOW_K}"))
             .select("doc_id", F.explode(F.array(F.expr(

@@ -25,6 +25,8 @@ Wikipedia there).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -449,13 +451,13 @@ def pack_training_sequences(spark, sf_dir):
 # BPE BPE; fewer steps train only char-pair bigrams
 _BPE_STEPS = 8
 
-# Vocab bound for the in-driver merge loop (see _bpe_train): below this
-# many distinct words the merge iterations run over collected rows —
-# the same bounded-driver-collect class as the k-means partials and the
-# ≤100k-edge union-find. 2M rows x ~60B ≈ 120MB, comfortably inside
-# driver memory; real web corpora train BPE on pruned word counts of
-# this order.
-_BPE_DRIVER_VOCAB_MAX = 2_000_000
+# Size bound for the in-driver merge loop (see _bpe_train): when the
+# distinct-word table's strings, Σ length(word) + length(syms), fit in
+# 120 MB the merge iterations run over collected rows — the same
+# bounded-driver-collect class as the k-means partials and the
+# ≤100k-edge union-find. Gated on size, not rows: syms wraps every
+# char in two spaces (~3x the word), so a row count under-states it.
+_BPE_DRIVER_BYTES_MAX = 120_000_000
 
 # Canonical symbolization: every symbol wrapped as ' sym ' and
 # concatenated, so adjacency is a DOUBLE space. This makes merge
@@ -498,7 +500,12 @@ def _bpe_train(spark, sf_dir):
     # code-point order), and str.replace == F.replace (both
     # left-to-right non-overlapping). Above the bound, the distributed
     # loop below is the 100 TB path (same results, same oracle).
-    if words.count() <= _BPE_DRIVER_VOCAB_MAX:
+    size = words.agg(
+        F.sum(F.length("word") + F.length("syms"))).first()[0] or 0
+    logging.getLogger(__name__).info(
+        "bpe vocab: %d chars of word+syms (driver bound %d)", size,
+        _BPE_DRIVER_BYTES_MAX)
+    if size <= _BPE_DRIVER_BYTES_MAX:
         rows = [(r["word"], int(r["cnt"]), r["syms"])
                 for r in words.collect()]
         merges = []

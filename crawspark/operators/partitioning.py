@@ -100,15 +100,18 @@ def zorder_layout(df, x_col: str, y_col: str, partitions: int,
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to defaultParallelism when the scan
-    yields fewer partitions. A single-row-group parquet file CANNOT be
-    split by the reader (row groups are the split unit), so every
-    per-row CPU stage before the first exchange would serialize onto
-    1-2 cores (r6: the sf1.0 documents table is one 50k-row row group;
-    the curate_v2 window pass measured 11.0s vs 2.3s repartitioned).
-    Guarded: inputs that already scan wide — the production case at
-    100 TB — pass through untouched, so no exchange is added at scale."""
+    """Round-robin repartition to defaultParallelism when ``df`` reads
+    fewer input files than that; otherwise return ``df`` untouched. The
+    ONE widening site: per-row CPU stages before the first exchange run
+    on the scan's partitions, and Spark packs a small scan's splits by
+    bytes (never below the 4 MB open cost), so a one-file input would
+    serialize them onto one core (r6: curate_v2's window pass 11.0s vs
+    2.3s widened at sf1.0). The file count comes from the optimized plan
+    with no job; counting the RDD's partitions plans the frame (and runs
+    a job on a join with an exchange), and a footer row-group count
+    overstates the width. Wide inputs, the production case, pass through
+    with no exchange added."""
     sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
+    if len(df.inputFiles()) < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df

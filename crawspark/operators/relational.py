@@ -8,16 +8,12 @@ where a small dimension is involved.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crawspark.operators.extraction_queries import _sf_sql
 from crawspark.registry import register
 from crawspark.sources import read_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_testdata(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -28,7 +24,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     SELECT doc_id, lang, source, n_chars FROM documents WHERE n_chars > 0
 """)
 def scan_documents(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .filter(F.col("n_chars") > 0)
             .select("doc_id", "lang", "source", "n_chars"))
 
@@ -37,7 +33,7 @@ def scan_documents(spark, sf_dir):
     SELECT doc_id, substr(text, 1, 100) AS excerpt, lang FROM documents
 """)
 def project_article_fields(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .select("doc_id",
                     F.substring("text", 1, 100).alias("excerpt"), "lang"))
 
@@ -46,7 +42,7 @@ def project_article_fields(spark, sf_dir):
     SELECT doc_id, lang, source FROM documents WHERE lang IN ('en', 'fr')
 """)
 def filter_lang(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .filter(F.col("lang").isin("en", "fr"))
             .select("doc_id", "lang", "source"))
 
@@ -66,7 +62,7 @@ _AD_RE = r"doubleclick\.net|googlesyndication|/ads?/|[?&]utm_|adserver"
     ) WHERE NOT regexp_matches(url, '{_AD_RE}')
 """)
 def filter_url_rules(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .withColumn("url", F.expr(_URL_EXPR))
             .filter(~F.col("url").rlike(_AD_RE))
             .select("doc_id", "url"))
@@ -80,7 +76,7 @@ def filter_query_relevance(spark, sf_dir):
     # Boolean text-query predicate [R: query.py::Query.match]: whoosh-style
     # (data AND query) OR stream, as a pushed-down LIKE combination.
     t = F.col("text")
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .filter((t.contains("data") & t.contains("query"))
                     | t.contains("stream"))
             .select("doc_id", "lang"))
@@ -99,7 +95,7 @@ _BOOL_QUERY = '(data AND query) OR "stream" NOT spam'
     WHERE {query_to_duckdb_sql(_BOOL_QUERY)}
 """)
 def filter_query_boolean(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .filter(compile_query(_BOOL_QUERY))
             .select("doc_id", "lang"))
 
@@ -123,7 +119,7 @@ def filter_query_boolean(spark, sf_dir):
 def q1_pricing_summary(spark, sf_dir):
     # TPC-H Q1 shape: partial (map-side) agg + final agg, one shuffle on the
     # tiny group key; the heavy l_* columns never leave the scan unpruned.
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_testdata(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-01 00:00:00").cast("timestamp"))
     return (li.groupBy("l_returnflag", "l_linestatus")
             .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -142,7 +138,7 @@ def q1_pricing_summary(spark, sf_dir):
 """)
 def agg_status_counts(spark, sf_dir):
     # Crawl-report aggregate [R: report.py] over the events stream table.
-    return (_t(spark, sf_dir, "events")
+    return (read_testdata(spark, sf_dir, "events")
             .groupBy("event_type",
                      F.to_date(F.date_trunc("day", "ts")).alias("day"))
             .agg(F.count("*").alias("n_events")))
@@ -154,7 +150,7 @@ def agg_status_counts(spark, sf_dir):
     FROM customer GROUP BY c_mktsegment
 """)
 def agg_mktsegment(spark, sf_dir):
-    return (_t(spark, sf_dir, "customer")
+    return (read_testdata(spark, sf_dir, "customer")
             .groupBy("c_mktsegment")
             .agg(F.count("*").alias("n_customers"),
                  F.round(F.avg("c_acctbal"), 2).alias("avg_acctbal")))
@@ -167,7 +163,7 @@ def agg_mktsegment(spark, sf_dir):
 def approx_distinct_urls(spark, sf_dir):
     # Exact variant for oracle parity; the scale path swaps in
     # approx_count_distinct (HLL++) — see approx_distinct_urls_hll.
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .agg(F.countDistinct("source").alias("n_sources"),
                  F.count("*").alias("n_docs")))
 
@@ -181,7 +177,7 @@ def approx_distinct_urls_hll(spark, sf_dir):
     # HLL estimates are engine-specific, so the oracle-checkable form is the
     # PROPERTY: the estimate must land within the configured error bound of
     # the exact count (rsd=0.01 → 5% tolerance is >4 sigma).
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .agg(F.countDistinct("source").alias("n_sources_exact"),
                  F.approx_count_distinct("source", 0.01).alias("approx"))
             .select("n_sources_exact",
@@ -209,7 +205,7 @@ def window_dedup_first(spark, sf_dir):
     # rn=1 row of ORDER BY ts DESC, event_id. bitwise_not (-x - 1) is
     # strictly decreasing over every long; -event_id overflows at
     # Long.MIN_VALUE (an ANSI-mode error).
-    return (_t(spark, sf_dir, "events")
+    return (read_testdata(spark, sf_dir, "events")
             .groupBy("user_id")
             .agg(F.max_by(
                 F.struct("event_id", "event_type"),
@@ -230,7 +226,7 @@ def window_dedup_first(spark, sf_dir):
 def window_running_value(spark, sf_dir):
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (_t(spark, sf_dir, "events")
+    return (read_testdata(spark, sf_dir, "events")
             .select("event_id", "user_id",
                     F.round(F.sum("value").over(w), 2).alias("running_value")))
 
@@ -241,7 +237,7 @@ def window_running_value(spark, sf_dir):
 """)
 def topk_largest_docs(spark, sf_dir):
     # TakeOrderedAndProject — no total sort at scale.
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .orderBy(F.col("n_chars").desc(), "doc_id")
             .select("doc_id", "n_chars").limit(10))
 
@@ -251,7 +247,7 @@ def topk_largest_docs(spark, sf_dir):
 """)
 def sort_export(spark, sf_dir):
     # Deterministic export order [R: export.py] — range-partitioned total sort.
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .orderBy("doc_id").select("doc_id", "lang", "source"))
 
 
@@ -261,9 +257,9 @@ def sort_export(spark, sf_dir):
     SELECT s_nationkey AS nationkey FROM supplier
 """)
 def union_frontier(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(
+    c = read_testdata(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(
+    s = read_testdata(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey"))
     return c.unionByName(s).distinct()
 
@@ -277,8 +273,8 @@ def except_done(spark, sf_dir):
     # Set-EXCEPT semantics: distinct left, then anti-join — exceptAll()
     # .distinct() diverges when a duplicated left key also appears on the
     # right (EXCEPT drops it entirely; exceptAll keeps surplus copies).
-    c = _t(spark, sf_dir, "customer").select("c_custkey").distinct()
-    o = _t(spark, sf_dir, "orders").select(
+    c = read_testdata(spark, sf_dir, "customer").select("c_custkey").distinct()
+    o = read_testdata(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"))
     return c.join(o, "c_custkey", "left_anti")
 
@@ -289,7 +285,7 @@ def except_done(spark, sf_dir):
 """)
 def grouping_size_buckets(spark, sf_dir):
     # Size-bucketed batching key (BASELINE.json:L6) over the testdata proxy.
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .filter(F.col("n_chars") > 0)
             .withColumn("bucket",
                         F.floor(F.log2("n_chars")).cast("int"))
@@ -308,7 +304,7 @@ def grouping_size_buckets(spark, sf_dir):
 """)
 def string_funcs_showcase(spark, sf_dir):
     # §2.6 scalar-function surface in one oracle-checked projection.
-    return (_t(spark, sf_dir, "documents").select(
+    return (read_testdata(spark, sf_dir, "documents").select(
         "doc_id",
         F.upper(F.substring("text", 1, 10)).alias("head_upper"),
         F.length(F.trim("text")).cast("long").alias("trimmed_len"),
@@ -324,7 +320,7 @@ def string_funcs_showcase(spark, sf_dir):
     FROM documents GROUP BY ROLLUP (lang, source)
 """)
 def rollup_lang_source(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .rollup("lang", "source").agg(F.count("*").alias("n_docs")))
 
 
@@ -336,7 +332,7 @@ def rollup_lang_source(spark, sf_dir):
 def cube_lang_source(spark, sf_dir):
     # Full CUBE (all four grouping sets) — the OLAP companion to the
     # rollup query; one pass, Catalyst expands the sets.
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .cube("lang", "source")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_chars").cast("long").alias("total_chars")))
@@ -355,7 +351,7 @@ def pivot_source_by_lang(spark, sf_dir):
     # Pivot with an EXPLICIT value list: without it Spark runs an extra
     # distinct-collection job AND the output schema depends on the data —
     # both wrong at 100 TB (and vs a fixed-schema oracle).
-    return (_t(spark, sf_dir, "documents")
+    return (read_testdata(spark, sf_dir, "documents")
             .groupBy("source")
             .pivot("lang", ["en", "fr", "de", "es", "zh"])
             .agg(F.count(F.lit(1)))  # count(*) star is invalid inside pivot
@@ -376,9 +372,9 @@ def pivot_source_by_lang(spark, sf_dir):
 def join_rules_broadcast(spark, sf_dir):
     # Small-dim broadcast pattern: nation+region are tiny → broadcast both;
     # zero shuffle of the big side for the join itself.
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = read_testdata(spark, sf_dir, "customer")
+    n = read_testdata(spark, sf_dir, "nation")
+    r = read_testdata(spark, sf_dir, "region")
     return (c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
             .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
             .groupBy(F.col("r_name").alias("region_name"))
@@ -391,8 +387,8 @@ def join_rules_broadcast(spark, sf_dir):
 """)
 def anti_join_seen(spark, sf_dir):
     # Resume/dedup semantics (§2.4): drop already-extracted keys.
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = read_testdata(spark, sf_dir, "customer")
+    o = read_testdata(spark, sf_dir, "orders")
     return (c.join(o, c.c_custkey == o.o_custkey, "left_anti")
             .select("c_custkey", "c_name"))
 
@@ -403,8 +399,9 @@ def anti_join_seen(spark, sf_dir):
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
 """)
 def semi_join_relevant(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
+    c = read_testdata(spark, sf_dir, "customer")
+    o = (read_testdata(spark, sf_dir, "orders")
+         .filter(F.col("o_totalprice") > 100000))
     return (c.join(o, c.c_custkey == o.o_custkey, "left_semi")
             .select("c_custkey", "c_mktsegment"))
 
@@ -424,8 +421,9 @@ def join_media_docs(spark, sf_dir):
     # of 1:N (measured 2.9s → 1.3s at sf1.0). count(*) == sum of
     # per-orderkey counts; the re-associated sum sits ~1e-9 inside the
     # round(2) granularity (same accepted class as join_salted_skew).
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    lagg = (_t(spark, sf_dir, "lineitem")
+    o = (read_testdata(spark, sf_dir, "orders")
+         .select("o_orderkey", "o_orderpriority"))
+    lagg = (read_testdata(spark, sf_dir, "lineitem")
             .groupBy("l_orderkey")
             .agg(F.count("*").alias("n"),
                  F.sum("l_extendedprice").alias("s")))
@@ -449,7 +447,7 @@ def join_salted_skew(spark, sf_dir):
     # (key, salt) spreading hot keys over 16 slots; phase 2 re-aggregates.
     # Oracle mirrors the same two-phase float summation order class; sums
     # are rounded to absorb associativity noise.
-    li = _t(spark, sf_dir, "lineitem").withColumn(
+    li = read_testdata(spark, sf_dir, "lineitem").withColumn(
         "salt", (F.col("l_orderkey") % 16))
     phase1 = (li.groupBy("l_returnflag", "salt")
               .agg(F.sum("l_quantity").alias("l_quantity"),
@@ -491,7 +489,7 @@ def frontier_bfs(spark, sf_dir):
     # pairs; the frontier is anti-joined against the visited set exactly
     # like anti_join_seen — at 10^12 docs this is the shape of an
     # incremental crawl wave. The synthetic edge set mirrors the oracle's.
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_testdata(spark, sf_dir, "documents").select("doc_id")
     total = docs.count()
     e1 = docs.select(F.col("doc_id").alias("src"),
                      ((F.col("doc_id") * 7 + 3) % total).alias("dst"))
@@ -522,7 +520,7 @@ def frontier_bfs(spark, sf_dir):
     FROM orders GROUP BY order_year
 """)
 def q_orders_by_year(spark, sf_dir):
-    return (_t(spark, sf_dir, "orders")
+    return (read_testdata(spark, sf_dir, "orders")
             .groupBy(F.year("o_orderdate").alias("order_year"))
             .agg(F.count("*").alias("n_orders"),
                  F.round(F.sum("o_totalprice"), 2).alias("sum_total")))
@@ -545,11 +543,11 @@ def q_orders_by_year(spark, sf_dir):
 def q3_shipping_priority(spark, sf_dir):
     # TPC-H Q3 shape: selective filters pushed to all three scans, then
     # join + agg + top-k (TakeOrderedAndProject, no total sort).
-    c = _t(spark, sf_dir, "customer").filter(
+    c = read_testdata(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    o = read_testdata(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15 00:00:00").cast("timestamp"))
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_testdata(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp"))
     return (c.join(o, c.c_custkey == o.o_custkey)
             .join(li, li.l_orderkey == o.o_orderkey)
@@ -571,9 +569,9 @@ def q3_shipping_priority(spark, sf_dir):
     GROUP BY nation
 """)
 def q5_supplier_volume(spark, sf_dir):
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    li = _t(spark, sf_dir, "lineitem")
+    s = read_testdata(spark, sf_dir, "supplier")
+    n = read_testdata(spark, sf_dir, "nation")
+    li = read_testdata(spark, sf_dir, "lineitem")
     return (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
             .join(li, li.l_suppkey == s.s_suppkey)
             .groupBy(F.col("n_name").alias("nation"))
@@ -589,7 +587,7 @@ def q5_supplier_volume(spark, sf_dir):
     FROM part GROUP BY p_type
 """)
 def part_type_stats(spark, sf_dir):
-    return (_t(spark, sf_dir, "part")
+    return (read_testdata(spark, sf_dir, "part")
             .groupBy("p_type")
             .agg(F.count("*").alias("n_parts"),
                  F.round(F.avg("p_retailprice"), 2).alias("avg_price"),
@@ -615,7 +613,7 @@ def datetime_funcs_showcase(spark, sf_dir):
     # week truncation — DuckDB date_trunc('week') and Spark both use
     # Monday starts).
     ts = F.col("ts")
-    return (_t(spark, sf_dir, "events")
+    return (read_testdata(spark, sf_dir, "events")
             .filter(F.col("event_id") < 200)
             .select("event_id",
                     F.year(ts).alias("y"),
@@ -638,7 +636,7 @@ def datetime_funcs_showcase(spark, sf_dir):
 def events_json_extract(spark, sf_dir):
     # events.props JSON scalar exercise (§2.6); regexp_extract has identical
     # (str, pattern, group) semantics in Spark and DuckDB.
-    return (_t(spark, sf_dir, "events")
+    return (read_testdata(spark, sf_dir, "events")
             .withColumn("k_mod",
                         (F.regexp_extract("props", r'"k":\s*(\d+)', 1)
                          .cast("int") % 10))

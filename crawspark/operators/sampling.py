@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -301,8 +302,7 @@ def split_leakage_check(spark, sf_dir):
     split = (F.when(h < _VAL_LO, "train")
              .when(h < _TEST_LO, "val")
              .otherwise("test"))
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
+    docs = (ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
             .select("doc_id", "text", split.alias("split"))
             .withColumn("toks", F.expr(_WORD_TOKS))
             .filter(F.size("toks") >= _LEAK_N)
@@ -365,8 +365,6 @@ def pack_context_windows(spark, sf_dir):
 
     # toks feeds the block-sum branch AND the main join side —
     # materialize once or the tokenization scan runs twice.
-    from crawspark.operators.partitioning import ensure_parallelism
-
     toks = (ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
             .select("doc_id", F.size(F.expr(_WORD_TOKS)).alias("n"))
             .filter(F.col("n") >= 1)

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -167,14 +168,9 @@ def ann_cosine_topk(spark, sf_dir):
     # Brute-force cosine top-k for 5 query vectors: broadcast the tiny query
     # side, scan the corpus once, per-query window top-k. Rounded-sim
     # ordering + vec_id tie-break keeps ranking engine-stable.
-    from crawspark.operators.partitioning import ensure_parallelism
-
     emb = read_testdata(spark, sf_dir, "embeddings").withColumn(
         "norm", F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})"))
     q = emb.filter(F.col("vec_id") < 5).alias("q")
-    # r6: the corpus side computes every per-pair dot product after the
-    # broadcast join — on the embeddings table's ONE row group that all
-    # ran on one core (see ensure_parallelism).
     n = ensure_parallelism(emb).alias("n")
     dot = F.expr(_DOT.format(a="q.embedding", b="n.embedding"))
     sim = F.round(dot / (F.col("q.norm") * F.col("n.norm")), 6)
@@ -575,8 +571,7 @@ def ivf_assign(spark, sf_dir, with_embedding: bool = False,
 
     schema = ("vec_id long, cell int, embedding array<float>"
               if with_embedding else "vec_id long, cell int")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    return (emb.select("vec_id", "embedding").repartition(n_parts)
+    return (ensure_parallelism(emb.select("vec_id", "embedding"))
             .mapInPandas(assign, schema))
 
 
@@ -859,8 +854,7 @@ def dedup_semantic_semdedup(spark, sf_dir):
             "kept": ~dropped})
 
     emb = read_testdata(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    assigned = (emb.select("vec_id", "embedding").repartition(n_parts)
+    assigned = (ensure_parallelism(emb.select("vec_id", "embedding"))
                 .mapInPandas(assign, "vec_id long, cell int, csim double, "
                                      "embedding array<float>"))
     return assigned.groupBy("cell").applyInPandas(

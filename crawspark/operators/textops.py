@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -221,8 +222,6 @@ def quality_repetition_stats(spark, sf_dir):
     # array_sort(regexp_extract_all(...)) re-tokenizes the doc per
     # lambda STEP (O(n_tokens^2); measured 1.5s standalone and 209s
     # composed into curate_corpus_v2, vs 0.3s/58s with the barrier).
-    from crawspark.operators.partitioning import ensure_parallelism
-
     docs = ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
     top_run = (
         "CASE WHEN size(ws) < 2 THEN 1L ELSE aggregate("
@@ -327,8 +326,7 @@ def decontaminate_against_benchmark(spark, sf_dir):
     # 100 TB this is the cheapest dedup-shaped op in the pipeline (one
     # scan + one broadcast hash join on a 8-word string key — at extreme
     # benchmark sizes the key becomes xxhash64(gram)).
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
+    docs = (ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
             .withColumn("text", F.expr(_DECON_PLANT_SPARK))
             .withColumn("toks", F.expr(_WORD_TOKS))
             .filter(F.size("toks") >= DECON_N)
@@ -889,11 +887,8 @@ def dedup_substring_coverage(spark, sf_dir):
     # consumers are independent stages of one job and re-run the
     # tokenize+explode subtree CONCURRENTLY on idle cores, which
     # measured 2.7s vs 5.2s with the eager materialization (the same
-    # stage-concurrency lesson as the lm/kn model tables). Repartition
-    # stays (single-file scan = one partition, see
-    # capped_shingle_arrays).
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
+    # stage-concurrency lesson as the lm/kn model tables).
+    docs = (ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
             .withColumn("text", F.expr(_SLOGAN_SPARK))
             .withColumn("toks", F.expr(_WORD_TOKS))
             .filter(F.size("toks") >= SUBSTR_K)
@@ -1204,8 +1199,7 @@ def rewrite_drop_dup_substrings(spark, sf_dir):
     O(n_toks), not O(n_toks * n_occ) — no pair join, no UDF."""
     from pyspark.sql.window import Window
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
+    docs = (ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
             .withColumn("text", F.expr(_SLOGAN_SPARK))
             .withColumn("toks", F.expr(_WORD_TOKS)))
     # Not checkpointed (r6): the dup-agg and join-back consumers run

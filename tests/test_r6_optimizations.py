@@ -68,11 +68,11 @@ def test_simhash_array_side_matches_row_aggregation(spark):
 def test_bpe_driver_loop_matches_distributed_loop(spark, monkeypatch):
     # The in-driver merge loop must replay the distributed loop exactly
     # (same merges, same final segmentations) — forced by dropping the
-    # vocab bound to 0 for the distributed reference run.
+    # driver size bound to 0 for the distributed reference run.
     from crawspark.operators import lmquality
 
     fast_words, fast_merges = lmquality._bpe_train(spark, SF)
-    monkeypatch.setattr(lmquality, "_BPE_DRIVER_VOCAB_MAX", 0)
+    monkeypatch.setattr(lmquality, "_BPE_DRIVER_BYTES_MAX", 0)
     slow_words, slow_merges = lmquality._bpe_train(spark, SF)
     assert fast_merges == slow_merges
     assert ({tuple(r) for r in fast_words.collect()}
@@ -86,8 +86,9 @@ def test_repetition_stats_plan_is_map_only(spark):
 
     plan = executed_plan(
         load_all()["quality_repetition_stats"].spark(spark, SF))
-    # the guarded ensure_parallelism round-robin (single-row-group
-    # inputs only) is the one allowed exchange; never a hash/agg one
+    # the guarded ensure_parallelism round-robin (inputs reading fewer
+    # files than defaultParallelism) is the one allowed exchange; never
+    # a hash/agg one
     assert "hashpartitioning" not in plan, plan[:1200]
     assert "Join" not in plan, plan[:1200]
 

@@ -358,9 +358,10 @@ def test_encoding_hygiene_queries_are_map_only(spark):
     # blocklist gate) must ride the scan: zero exchanges, zero joins —
     # at 100 TB they are free riders on the first pass over the corpus.
     # Exception (r6): text_char_entropy carries the GUARDED
-    # ensure_parallelism round-robin — single-row-group inputs only, a
-    # no-op on the wide scans of the 100 TB case — so it may show that
-    # one exchange but never a hash/aggregation one.
+    # ensure_parallelism round-robin — inputs of fewer files than
+    # defaultParallelism only, a no-op on the wide scans of the 100 TB
+    # case — so it may show that one exchange but never a
+    # hash/aggregation one.
     from crawspark.registry import load_all
     reg = load_all()
     for name in ("fix_mojibake", "unicode_nfc_stats",
