@@ -27,6 +27,13 @@ Design:
   so a crash between the results write and the checkpoint write cannot
   double-count — the rerun converges to the same table state
   (Iceberg's overwritePartitions gives the same semantics atomically).
+- Each done row's ``docs_out``/``spans_out`` are observed on the results
+  write itself (an ``Observation``: one ``count_if`` and one
+  ``sum(if(...))`` per pending key, at most ``n_parts``), so the
+  extracted frame is neither cached nor read twice. The checkpoint rows
+  are built on the driver as an Arrow ``LocalRelation``
+  (``local_frame``) and never reach a Python worker: a pending resume
+  runs exactly one Python stage, the extraction.
 
 The reference has no analog — crawtext restarts re-query MongoDB for
 unseen URLs [R: database.py queue semantics]; this is the Spark-native
@@ -37,11 +44,13 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import (DataFrame, Observation, Row, SparkSession,
+                         functions as F)
 
 from crawspark.operators.extract import extract_documents
 from crawspark.operators.partitioning import salted_repartition
-from crawspark.sources.tables import TableBackend
+from crawspark.schema import CHECKPOINT
+from crawspark.sources.tables import TableBackend, local_frame
 
 
 def with_partition_key(df: DataFrame, n_parts: int) -> DataFrame:
@@ -117,27 +126,30 @@ class CheckpointedExtraction:
         width = min(self.n_parts, spark.sparkContext.defaultParallelism)
         todo = keyed.filter(F.col("partition_key").isin(pending))
         extracted = extract_documents(salted_repartition(todo, partitions=width))
-        extracted = with_partition_key(extracted, self.n_parts).cache()
+        # Each pending key's row count and sum(n_spans) (null when
+        # nothing was extracted), observed on the results write.
+        pk, obs = F.col("partition_key"), Observation()
+        written = with_partition_key(extracted, self.n_parts).select(
+            "partition_key", "doc_id", "spans", "lang", "n_spans",
+        ).observe(obs, *[agg for i, k in enumerate(pending) for agg in (
+            F.count_if(pk == k).alias(f"docs_{i}"),
+            F.sum(F.when(pk == k, F.col("n_spans")).otherwise(0))
+            .alias(f"spans_{i}"))])
 
         # Idempotent per-partition replace (parquet: dynamic overwrite;
-        # Iceberg backend: atomic overwritePartitions).
-        self.backend.overwrite_partitions(
-            extracted.select("partition_key", "doc_id", "spans", "lang",
-                             "n_spans"),
-            self.results_table, "partition_key")
-
-        metrics = {r[0]: (r[1], r[2] or 0) for r in extracted.groupBy(
-            "partition_key").agg(F.count("*"), F.sum("n_spans")).collect()}
-        extracted.unpersist()
-        ckpt_rows = spark.createDataFrame(
-            [(run_id, k, "done", fps[k].docs_in, *metrics.get(k, (0, 0)),
-              fps[k].input_fingerprint)
-             for k in pending],
-            schema=("run_id string, partition_key string, status string, "
-                    "docs_in long, docs_out long, spans_out long, "
-                    "input_fingerprint string"),
-        ).withColumn("completed_ts", F.lit(completed_ts).cast("timestamp"))
-        self.backend.append(ckpt_rows, self.checkpoint_table)
+        # Iceberg backend: atomic overwritePartitions) — the one action
+        # on ``written``, which fills ``obs``.
+        self.backend.overwrite_partitions(written, self.results_table,
+                                          "partition_key")
+        m = obs.get
+        metrics = {k: (m[f"docs_{i}"], m[f"spans_{i}"] or 0)
+                   for i, k in enumerate(pending)}
+        ckpt_rows = local_frame(spark, [
+            (run_id, k, "done", fps[k].docs_in, *metrics[k],
+             fps[k].input_fingerprint, None) for k in pending], CHECKPOINT)
+        self.backend.append(ckpt_rows.withColumn(
+            "completed_ts", F.lit(completed_ts).cast("timestamp")),
+            self.checkpoint_table)
 
         return {"run_id": run_id, "partitions_processed": len(pending),
                 "docs_out": sum(m[0] for m in metrics.values()),

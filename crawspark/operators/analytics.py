@@ -11,7 +11,7 @@ from pyspark.sql.window import Window
 
 from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
-from crawspark.sources import read_testdata
+from crawspark.sources import local_frame, read_testdata
 
 SESSION_GAP_MIN = 30
 
@@ -755,7 +755,7 @@ def pagerank_personalized(spark, sf_dir):
              .localCheckpoint(eager=True))
     ns = seeds.count()
     if ns == 0:
-        return spark.createDataFrame([], "node string, rank double")
+        return local_frame(spark, [], "node string, rank double")
     v = (nodes.join(seeds.withColumn("is_seed", F.lit(1)), "node", "left")
          .select("node",
                  F.when(F.col("is_seed").isNotNull(), 1.0 / ns)

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
-from crawspark.sources import read_testdata
+from crawspark.sources import local_frame, read_testdata
 
 # Shared tokenization: must match the DuckDB oracle exactly.
 _TOKS = "filter(split(lower(text), '[^a-z]+'), x -> x != '')"
@@ -353,11 +353,9 @@ def connected_components(edges: DataFrame,
                 # union by min so the root IS the min label
                 lo, hi = (a, b) if a < b else (b, a)
                 parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        spark = edges.sparkSession
-        if not rows:
-            return spark.createDataFrame([], "node long, label long")
-        return spark.createDataFrame(rows, "node long, label long")
+        return local_frame(edges.sparkSession,
+                           [(n, find(n)) for n in parent],
+                           "node long, label long")
     canon = (edges.select(
         F.greatest("doc_a", "doc_b").alias("src"),
         F.least("doc_a", "doc_b").alias("dst"))

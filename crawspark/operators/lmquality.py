@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
-from crawspark.sources import read_testdata
+from crawspark.sources import local_frame, read_testdata
 
 # Trusted/target slice for LM training and DSIR target distribution.
 _TARGET_SRC = "src0"
@@ -522,8 +522,8 @@ def _bpe_train(spark, sf_dir):
             pat, rep = f" {w1}  {w2} ", f" {w1}{w2} "
             rows = [(w, cnt, syms.replace(pat, rep))
                     for w, cnt, syms in rows]
-        final = spark.createDataFrame(rows, "word string, cnt long, "
-                                            "syms string")
+        final = local_frame(spark, rows,
+                            "word string, cnt long, syms string")
         return final, merges
     merges = []
     for step in range(1, _BPE_STEPS + 1):
@@ -590,9 +590,9 @@ def bpe_train_merges(spark, sf_dir):
     # The trained merge table — ties broken (count DESC, w1, w2) so the
     # sequence is deterministic on both engines.
     _, merges = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "step int, w1 string, w2 string, merged string, "
-                "pair_count bigint")
+    return local_frame(
+        spark, merges, "step int, w1 string, w2 string, merged string, "
+                       "pair_count bigint")
 
 
 @register("bpe_segment_stats", sql=_bpe_oracle_cte("documents", _BPE_STEPS)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
-from crawspark.sources import read_testdata
+from crawspark.sources import local_frame, read_testdata
 
 _TWO60 = 1 << 60  # hash values live in [0, 2^60)
 
@@ -80,8 +80,8 @@ def sample_hash_bernoulli(spark, sf_dir):
     # [0, 2^60) and keep it iff below the source's integer threshold.
     # The rate table is broadcast; the scan side never shuffles — the
     # one sampling strategy that is embarrassingly parallel at 100 TB.
-    rates = spark.createDataFrame(
-        [(s, t) for s, t in _BERN_THRESH.items()], "source string, thresh long")
+    rates = local_frame(spark, _BERN_THRESH.items(),
+                        "source string, thresh long")
     docs = read_testdata(spark, sf_dir, "documents")
     return (docs.join(F.broadcast(rates), "source")
             .filter(_h60() < F.col("thresh"))
@@ -184,8 +184,8 @@ def mixture_token_budget(spark, sf_dir):
     # cutoff hits the same budget in expectation with zero shuffle on
     # the scan. The cutoff is floored to an INTEGER threshold so both
     # engines compare h < t in int64.
-    weights = spark.createDataFrame(
-        [(s, w) for s, w in _MIX_WEIGHTS.items()], "source string, w double")
+    weights = local_frame(spark, _MIX_WEIGHTS.items(),
+                          "source string, w double")
     docs = read_testdata(spark, sf_dir, "documents")
     totals = (docs.join(F.broadcast(weights), "source")
               .groupBy("source", "w")

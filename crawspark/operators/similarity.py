@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 
 from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
-from crawspark.sources import read_testdata
+from crawspark.sources import local_frame, read_testdata
 
 # Sequential left-fold dot product — same accumulation order as DuckDB's
 # list_cosine_similarity single pass, so double results agree bit-for-bit
@@ -656,8 +656,8 @@ def ann_search_ivf(spark, sf_dir, query_ids: list[int], k: int = 5,
         ranked = sorted(range(len(sims)), key=lambda i: (-sims[i], i))
         for c in ranked[:nprobe]:
             probes.append((int(r["vec_id"]), int(c), list(r["embedding"])))
-    qdf = spark.createDataFrame(
-        probes, "query_id long, cell int, q_emb array<float>")
+    qdf = local_frame(spark, probes,
+                      "query_id long, cell int, q_emb array<float>")
     sim = F.round(_cosine("q_emb", "embedding"), 6)
     w = (Window.partitionBy("query_id")
          .orderBy(F.col("sim").desc(), F.col("neighbor_id")))

@@ -1,1 +1,2 @@
-from crawspark.sources.tables import TableBackend, get_backend, read_testdata  # noqa: F401
+from crawspark.sources.tables import (  # noqa: F401
+    TableBackend, get_backend, local_frame, read_testdata)

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -319,15 +319,13 @@ class SnapshotParquetBackend(TableBackend):
             # FileNotFoundError and made the table unreadable).
             import json
 
-            from pyspark.sql import types as T
-
             schema_json = manifest.get("schema")
             if schema_json is None:
                 raise FileNotFoundError(
                     f"{name}@v{version} has no data files and no recorded "
                     f"schema (pre-r4 manifest)")
             schema = T.StructType.fromJson(json.loads(schema_json))
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         schema_json = manifest.get("schema")
         if schema_json is not None:
             # Iceberg-style schema evolution: the SNAPSHOT's recorded
@@ -338,8 +336,6 @@ class SnapshotParquetBackend(TableBackend):
             # schema, spark.read.parquet would pick one file's footer
             # arbitrarily.
             import json
-
-            from pyspark.sql import types as T
 
             return (spark.read
                     .schema(T.StructType.fromJson(json.loads(schema_json)))
@@ -501,6 +497,38 @@ def get_backend(spark: SparkSession, root: str | None = None) -> TableBackend:
     if root is None and _iceberg_available(spark):
         return IcebergBackend()
     return ParquetBackend(root or os.environ.get("CRAWSPARK_DATA", "/tmp/crawspark"))
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str
+                ) -> DataFrame:
+    """A frame of driver-built ``rows`` (tuples in ``schema`` order; a
+    StructType or a DDL string) that never reaches a Python worker.
+
+    The rows go to the JVM as one Arrow stream and become a
+    ``LocalRelation`` (past Spark's Arrow local-relation threshold, a
+    JVM-side RDD of the batches). ``createDataFrame(<python list>)``
+    instead parallelizes the list into ``defaultParallelism`` slices and
+    re-serializes each through a ``PythonRDD`` task, even an empty list,
+    and those tasks' lambda never imports ``crawspark``, so
+    ``crawspark.zipcache`` does not guard them. Naive datetimes are read
+    in local time, as that path reads them."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    # pyarrow takes a datetime's wall clock as the instant, tzinfo unread
+    utc = datetime.timezone.utc
+    cols = [[v if v is None else v.astimezone(utc) for v in c]
+            if isinstance(f.dataType, T.TimestampType) else c
+            for c, f in zip(cols, schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=a.type) for c, a in zip(cols, arrow)],
+        schema=arrow), schema)
 
 
 def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

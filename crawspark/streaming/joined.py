@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.sources import local_frame
+
 _EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                   "event_type string, value double, props string")
 
@@ -92,10 +94,8 @@ def append_watermark_sentinels(spark: SparkSession, path: str,
     Structured Streaming's file source orders batches by file mtime, so a
     sentinel written after the data files lands in a LATER microbatch and
     advances that stream's watermark past every real event."""
-    import datetime as _dt
-
     row = [(start_id, ts, -999, "sentinel", 0.0, "")]
-    (spark.createDataFrame(row, _EVENTS_SCHEMA)
+    (local_frame(spark, row, _EVENTS_SCHEMA)
      .coalesce(1).write.mode("append").parquet(path))
 
 

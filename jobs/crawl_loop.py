@@ -89,7 +89,7 @@ def run(spark, sf_dir: str, out: str, rounds: int, seeds: int) -> dict:
     from pyspark.sql import functions as F
 
     from crawspark.operators.extract import interleave_and_extract
-    from crawspark.sources import read_testdata
+    from crawspark.sources import local_frame, read_testdata
 
     out_dir = Path(out)
     docs = read_testdata(spark, sf_dir, "documents")
@@ -103,7 +103,7 @@ def run(spark, sf_dir: str, out: str, rounds: int, seeds: int) -> dict:
              .localCheckpoint(eager=True))
 
     stats: list[dict] = []
-    visited = spark.createDataFrame([], "doc_id long")
+    visited = local_frame(spark, [], "doc_id long")
     frontier = ids.filter(F.col("doc_id") < seeds)
     for rnd in range(rounds):
         rdir = out_dir / "rounds" / f"{rnd:03d}"

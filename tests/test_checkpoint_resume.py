@@ -5,18 +5,21 @@ partition is double-counted."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from crawspark.checkpoint import CheckpointedExtraction
 from crawspark.corpus import make_doc
 from crawspark.schema import DOCUMENTS_INTERLEAVED
-from crawspark.sources.tables import ParquetBackend
+from crawspark.sources.tables import ParquetBackend, local_frame
 
 
 @pytest.fixture()
 def docs_df(spark):
+    # A JVM-local input: a createDataFrame(<list>) input would add its
+    # own PythonRDD stage to every scan of it.
     docs = [make_doc(42, i) for i in range(60)]
-    return spark.createDataFrame(
-        [(d["doc_id"], d["spans"]) for d in docs], schema=DOCUMENTS_INTERLEAVED)
+    return local_frame(spark, [(d["doc_id"], d["spans"]) for d in docs],
+                       DOCUMENTS_INTERLEAVED)
 
 
 def _results(spark, backend):
@@ -158,20 +161,25 @@ def test_inputs_a_b_a_equal_single_run_on_a(spark, docs_df, tmp_path):
 
 def _python_stages(spark, group):
     """Task counts of the stages that ran a Python operator in the group's
-    jobs, read from the status tracker and each stage's RDD graph."""
+    jobs, read from the status tracker and each stage's RDD graph: its
+    cluster names (``MapInArrow``, ...) and its RDD node names
+    (``PythonRDD``, the stage that ``createDataFrame(<python list>)``
+    runs)."""
     sc = spark.sparkContext
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
 
-    def scopes(cluster):
-        kids = cluster.childClusters()
-        return [cluster.name()] + [n for i in range(kids.size())
-                                   for n in scopes(kids.apply(i))]
+    def names(cluster):
+        nodes, kids = cluster.childNodes(), cluster.childClusters()
+        return ([cluster.name()]
+                + [nodes.apply(i).name() for i in range(nodes.size())]
+                + [n for i in range(kids.size())
+                   for n in names(kids.apply(i))])
 
     out = []
     for job in tracker.getJobIdsForGroup(group):
         for sid in tracker.getJobInfo(job).stageIds:
-            names = scopes(store.operationGraphForStage(sid).rootCluster())
-            if any(op in n for n in names
+            graph = names(store.operationGraphForStage(sid).rootCluster())
+            if any(op in n for n in graph
                    for op in ("Python", "InArrow", "InPandas")):
                 info = tracker.getStageInfo(sid)
                 if info.numCompletedTasks:  # skipped stages run nothing
@@ -181,6 +189,9 @@ def _python_stages(spark, group):
 
 def test_resume_runs_at_most_default_parallelism_python_tasks(
         spark, docs_df, tmp_path):
+    # The extraction is the only Python stage of a resume: the per-key
+    # counts come from the results write and the checkpoint rows are a
+    # JVM-local relation, so the bookkeeping runs no Python task.
     sc = spark.sparkContext
     n_parts = 4 * sc.defaultParallelism
     ck = CheckpointedExtraction(ParquetBackend(str(tmp_path / "w")),
@@ -198,9 +209,34 @@ def test_resume_runs_at_most_default_parallelism_python_tasks(
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert r["partitions_processed"] == n_parts - 1
     tasks = _python_stages(spark, "resume-pending")
-    assert tasks and max(tasks) <= sc.defaultParallelism
+    assert len(tasks) == 1 and tasks[0] <= sc.defaultParallelism, tasks
     assert r0["partitions_processed"] == 0
     assert not _python_stages(spark, "resume-nothing")
+
+
+@pytest.mark.parametrize("backend", ["parquet", "snapshot"])
+@pytest.mark.parametrize("max_partitions", [None, 3])
+def test_done_rows_count_what_the_results_table_holds(
+        spark, docs_df, tmp_path, backend, max_partitions):
+    # docs_out/spans_out are measured on the results write, so each done
+    # row must agree with its partition in the results table.
+    from crawspark.sources.tables import SnapshotParquetBackend
+
+    be = (ParquetBackend if backend == "parquet"
+          else SnapshotParquetBackend)(str(tmp_path / backend))
+    ck = CheckpointedExtraction(be, n_parts=8)
+    r = ck.run(spark, docs_df, run_id="r1",
+               completed_ts="2026-01-01 00:00:00",
+               max_partitions=max_partitions)
+    held = {row[0]: (row[1], row[2]) for row in
+            be.read(spark, "extracted_spans").groupBy("partition_key")
+            .agg(F.count("*"), F.sum("n_spans")).collect()}
+    done = {c["partition_key"]: (c["docs_out"], c["spans_out"])
+            for c in be.read(spark, "checkpoint").collect()}
+    assert len(done) == r["partitions_processed"] == (max_partitions or 8)
+    assert done == held
+    assert r["docs_out"] == sum(d for d, _ in held.values())
+    assert r["spans_out"] == sum(s for _, s in held.values())
 
 
 def test_checkpoint_done_rows_bounded_by_n_parts(spark, docs_df, tmp_path,
