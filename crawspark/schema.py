@@ -47,3 +47,14 @@ RULES = T.StructType([
     T.StructField("pattern", T.StringType()),
     T.StructField("action", T.StringType()),
 ])
+
+# The testdata events table (TESTDATA.md) as the streaming operators read
+# it: every field nullable, as a file source reads it.
+EVENTS = T.StructType([
+    T.StructField("event_id", T.LongType()),
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("user_id", T.LongType()),
+    T.StructField("event_type", T.StringType()),
+    T.StructField("value", T.DoubleType()),
+    T.StructField("props", T.StringType()),
+])

@@ -6,33 +6,39 @@ interval. Both sides carry watermarks and the join condition pairs an
 equality key with a time range — exactly what Structured Streaming needs
 to bound the join state (rows older than watermark + interval are evicted
 instead of accumulating forever, the property that keeps this runnable
-against an unbounded 10^12-event feed).
+against an unbounded 10^12-event feed). One builder,
+``stream_stream_user_join``, serves the inner join and the LEFT OUTER
+join (``how``); the outer join needs the sentinel-drain protocol of
+``run_left_join_drained`` to emit its unmatched rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.schema import EVENTS
 from crawspark.sources import local_frame
-
-_EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double, props string")
+from crawspark.streaming import drain
 
 
-def stream_stream_user_join(spark: SparkSession, left_path: str,
-                            right_path: str,
+def stream_stream_user_join(left: DataFrame, right: DataFrame,
+                            how: str = "inner",
                             interval: str = "10 minutes",
                             watermark: str = "30 minutes") -> DataFrame:
-    """Inner-join two event streams on user_id where the right event
-    falls within ``interval`` AFTER the left event (inclusive bounds)."""
-    left = (spark.readStream.schema(_EVENTS_SCHEMA).parquet(left_path)
-            .withWatermark("ts", watermark).alias("l"))
-    right = (spark.readStream.schema(_EVENTS_SCHEMA).parquet(right_path)
-             .withWatermark("ts", watermark).alias("r"))
+    """Join two event streams on user_id where the right event falls
+    within ``interval`` AFTER the left event (inclusive bounds). With
+    ``how="leftOuter"`` matched pairs stream out like the inner join; a
+    left event with NO right partner within the interval is emitted with
+    a null right_id — but only once the global watermark (the MIN across
+    both streams) passes l.ts + interval, which proves no matching right
+    event can still arrive. That timing is the whole difficulty of
+    draining the outer join, see run_left_join_drained."""
+    l = left.withWatermark("ts", watermark).alias("l")
+    r = right.withWatermark("ts", watermark).alias("r")
     cond = F.expr(
         f"l.user_id = r.user_id AND r.ts >= l.ts "
         f"AND r.ts <= l.ts + interval {interval}")
-    return (left.join(right, cond)
+    return (l.join(r, cond, how)
             .select(F.col("l.user_id").alias("user_id"),
                     F.col("l.event_id").alias("left_id"),
                     F.col("r.event_id").alias("right_id")))
@@ -41,51 +47,19 @@ def stream_stream_user_join(spark: SparkSession, left_path: str,
 def run_join_available_now(spark: SparkSession, left_path: str,
                            right_path: str, output_path: str,
                            checkpoint_path: str,
-                           timeout_sec: int = 300,
-                           watermark: str = "30 minutes") -> bool:
-    """Drain the interval join with availableNow. NOTE: if the drain
-    splits into multiple microbatches, rows older than watermark +
-    interval are evicted between batches — that is correct streaming
-    semantics, but callers comparing against a BATCH join must pass a
-    watermark covering the input's full time span (see the registry
-    query's span-derived watermark)."""
-    joined = stream_stream_user_join(spark, left_path, right_path,
+                           watermark: str = "30 minutes") -> None:
+    """Drain the inner interval join. NOTE: if the drain splits into
+    multiple microbatches, rows older than watermark + interval are
+    evicted between batches — that is correct streaming semantics, but
+    callers comparing against a BATCH join must pass a watermark covering
+    the input's full time span (see the registry query's span-derived
+    watermark)."""
+    read = spark.readStream.schema(EVENTS)
+    joined = stream_stream_user_join(read.parquet(left_path),
+                                     read.parquet(right_path),
                                      watermark=watermark)
-    q = (joined.writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return q.awaitTermination(timeout_sec)
-
-
-def stream_stream_user_join_left(spark: SparkSession, left_path: str,
-                                 right_path: str,
-                                 interval: str = "10 minutes",
-                                 watermark: str = "30 minutes",
-                                 files_per_trigger: int | None = None
-                                 ) -> DataFrame:
-    """LEFT OUTER variant of the interval join: matched pairs stream out
-    like the inner join; a left event with NO right partner within the
-    interval is emitted with a null right_id — but only once the global
-    watermark (the MIN across both streams) passes l.ts + interval, which
-    proves no matching right event can still arrive. That timing is the
-    whole difficulty of draining this join, see run_left_join_drained."""
-    rl = spark.readStream.schema(_EVENTS_SCHEMA)
-    rr = spark.readStream.schema(_EVENTS_SCHEMA)
-    if files_per_trigger:
-        rl = rl.option("maxFilesPerTrigger", files_per_trigger)
-        rr = rr.option("maxFilesPerTrigger", files_per_trigger)
-    left = rl.parquet(left_path).withWatermark("ts", watermark).alias("l")
-    right = rr.parquet(right_path).withWatermark("ts", watermark).alias("r")
-    cond = F.expr(
-        f"l.user_id = r.user_id AND r.ts >= l.ts "
-        f"AND r.ts <= l.ts + interval {interval}")
-    return (left.join(right, cond, "leftOuter")
-            .select(F.col("l.user_id").alias("user_id"),
-                    F.col("l.event_id").alias("left_id"),
-                    F.col("r.event_id").alias("right_id")))
+    drain(joined.writeStream.format("parquet").option("path", output_path),
+          checkpoint_path)
 
 
 def append_watermark_sentinels(spark: SparkSession, path: str,
@@ -95,15 +69,14 @@ def append_watermark_sentinels(spark: SparkSession, path: str,
     sentinel written after the data files lands in a LATER microbatch and
     advances that stream's watermark past every real event."""
     row = [(start_id, ts, -999, "sentinel", 0.0, "")]
-    (local_frame(spark, row, _EVENTS_SCHEMA)
+    (local_frame(spark, row, EVENTS)
      .coalesce(1).write.mode("append").parquet(path))
 
 
 def run_left_join_drained(spark: SparkSession, left_path: str,
                           right_path: str, output_path: str,
                           checkpoint_path: str, sentinel_ts,
-                          watermark: str,
-                          timeout_sec: int = 300) -> bool:
+                          watermark: str) -> None:
     """Drain the LEFT OUTER interval join COMPLETELY with availableNow.
 
     Outer rows only emit when the min-of-both-streams watermark passes
@@ -127,13 +100,9 @@ def run_left_join_drained(spark: SparkSession, left_path: str,
     for p in (left_path, right_path):
         append_watermark_sentinels(spark, p, sentinel_ts, start_id=-2)
         _time.sleep(0.1)
-    joined = stream_stream_user_join_left(
-        spark, left_path, right_path, watermark=watermark,
-        files_per_trigger=1)
-    q = (joined.writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return q.awaitTermination(timeout_sec)
+    read = spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1)
+    joined = stream_stream_user_join(read.parquet(left_path),
+                                     read.parquet(right_path), "leftOuter",
+                                     watermark=watermark)
+    drain(joined.writeStream.format("parquet").option("path", output_path),
+          checkpoint_path)

@@ -8,6 +8,13 @@ Because streaming and batch share one extraction implementation, the
 result is oracle-checkable against the frozen oracle's materialized
 extraction: an exactly-once / batch-parity property the driver's hash
 compare verifies on every run.
+
+Every row drains through ``crawspark.streaming.drain``: a drain still
+running after ``DRAIN_TIMEOUT_S`` is stopped and raises ``TimeoutError``.
+The four frontier rows (route, score, mojibake, rewrite) share one
+``_frontier_drain``: the frontier in, ``fn`` per microbatch, the sink
+back out. The three event-stream rows whose oracle is a batch query take
+their watermark from ``_span_days``.
 """
 
 from __future__ import annotations
@@ -19,6 +26,40 @@ from pyspark.sql import functions as F
 from crawspark.operators.extraction_queries import ORACLE_PQ, _sf_sql
 from crawspark.operators.textops import FIX_MOJIBAKE_SQL
 from crawspark.registry import register
+from crawspark.streaming import drain
+
+
+def _span_days(events) -> int:
+    """Watermark delay in whole days that covers the events table's full
+    time span (plus two days of margin). With it a drain split into
+    several microbatches evicts no state a later batch still needs, so
+    the drained sink equals the batch oracle."""
+    span = (events.agg(
+        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
+        / 86400.0).first()[0] or 0.0)
+    return int(span) + 2
+
+
+def _frontier_drain(spark, sf_dir: str, prefix: str, frontier, fn):
+    """Drain ``frontier`` the way an incremental crawl would: write it as
+    four input files, stream them one file per microbatch
+    (``maxFilesPerTrigger`` is a SOURCE option), append ``fn(batch)`` of
+    every microbatch to a parquet sink and read the sink back. ``fn`` is
+    per-row pure, so the drain equals ``fn(frontier)`` in batch — the
+    parity each caller's oracle checks."""
+    from crawspark.bundle import ensure_shipped
+    from crawspark.scratch import scratch_dir
+
+    ensure_shipped(spark)
+    base = scratch_dir(prefix, sf_dir, clean=("out", "ck"))
+    inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
+    frontier.repartition(4).write.mode("overwrite").parquet(inp)
+    stream = (spark.readStream.schema(frontier.schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    drain(stream.writeStream.foreachBatch(
+        lambda batch, _batch_id: fn(batch).write.mode("append")
+        .parquet(out)), ck)
+    return spark.read.parquet(out)
 
 
 @register("stream_extract_incremental", sql=_sf_sql(f"""
@@ -42,8 +83,7 @@ def stream_extract_incremental(spark, sf_dir):
     inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
     (interleave_documents(read_testdata(spark, sf_dir, "documents"))
      .write.mode("overwrite").parquet(inp))
-    if not run_available_now(spark, inp, out, ck, timeout_sec=600):
-        raise RuntimeError("stream drain did not complete within timeout")
+    run_available_now(spark, inp, out, ck)
     return (spark.read.parquet(out)
             .groupBy("lang")
             .agg(F.count("*").alias("n_docs"),
@@ -83,13 +123,8 @@ def stream_join_user_activity(spark, sf_dir):
     # batches, silently dropping cross-batch pairs vs the DuckDB batch
     # oracle (ADVICE r3). Production callers keep the bounded default —
     # eviction is the POINT there; parity-vs-batch is the claim HERE.
-    span_days = (events.agg(
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
-        / 86400.0).collect()[0][0] or 0.0)
-    if not run_join_available_now(spark, left, right, out, ck,
-                                  timeout_sec=600,
-                                  watermark=f"{int(span_days) + 2} days"):
-        raise RuntimeError("stream join did not complete within timeout")
+    run_join_available_now(spark, left, right, out, ck,
+                           watermark=f"{_span_days(events)} days")
     return (spark.read.parquet(out)
             .groupBy("user_id")
             .agg(F.count("*").alias("n_pairs")))
@@ -136,8 +171,7 @@ def stream_sessionize_events(spark, sf_dir):
     inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
     (read_testdata(spark, sf_dir, "events")
      .coalesce(2).write.mode("overwrite").parquet(inp))
-    if not run_sessions_available_now(spark, inp, out, ck, timeout_sec=600):
-        raise RuntimeError("session stream did not complete within timeout")
+    run_sessions_available_now(spark, inp, out, ck)
     return spark.read.parquet(out)
 
 
@@ -166,13 +200,8 @@ def stream_dedup_within_watermark(spark, sf_dir):
     # watermark covers the full event span so a multi-file drain split
     # into several microbatches cannot evict a key before its duplicate
     # arrives (same span-derived convention as the stream join)
-    span_days = (events.agg(
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
-        / 86400.0).collect()[0][0] or 0.0)
-    if not run_dedup_within_watermark(
-            spark, inp, out, ck, timeout_sec=600,
-            watermark=f"{int(span_days) + 2} days"):
-        raise RuntimeError("dedup stream did not complete within timeout")
+    run_dedup_within_watermark(spark, inp, out, ck,
+                               watermark=f"{_span_days(events)} days")
     return (spark.read.parquet(out)
             .select("event_id", "ts", "user_id", "event_type", "value",
                     "props"))
@@ -193,35 +222,13 @@ def stream_route_formats(spark, sf_dir):
     streaming-checkpoint exactly-once bookkeeping. The oracle is the
     batch router's 8-branch UNION — streamed output must equal batch
     output row for row."""
-    from crawspark.bundle import ensure_shipped
     from crawspark.operators.multimodal import route_formats
-    from crawspark.scratch import scratch_dir
     from crawspark.sources import read_testdata
 
-    ensure_shipped(spark)
-    base = scratch_dir("sroute", sf_dir, clean=("out", "ck"))
-    inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    (read_testdata(spark, sf_dir, "documents")
-     .filter(F.col("doc_id") % 10 == 1).select("doc_id")
-     .repartition(4).write.mode("overwrite").parquet(inp))
-    # maxFilesPerTrigger is a file-SOURCE option (snapshot_sink.py has
-    # the canonical placement); on the writer Spark silently ignores it
-    # and the drain would collapse to one microbatch (r5 session-6
-    # review finding)
-    stream = (spark.readStream.schema("doc_id long")
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-
-    def process(batch_df, batch_id: int) -> None:
-        route_formats(batch_df).write.mode("append").parquet(out)
-
-    query = (stream.writeStream
-             .foreachBatch(process)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True)
-             .start())
-    if not query.awaitTermination(600):
-        raise RuntimeError("route stream did not complete within timeout")
-    return spark.read.parquet(out)
+    return _frontier_drain(spark, sf_dir, "sroute",
+                           read_testdata(spark, sf_dir, "documents")
+                           .filter(F.col("doc_id") % 10 == 1)
+                           .select("doc_id"), route_formats)
 
 
 @register("stream_extract_snapshot", sql=_sf_sql(f"""
@@ -248,9 +255,7 @@ def stream_extract_snapshot(spark, sf_dir):
     (interleave_documents(read_testdata(spark, sf_dir, "documents"))
      .coalesce(3).write.mode("overwrite").parquet(inp))
     backend = SnapshotParquetBackend(troot)
-    if not run_extract_to_snapshot(spark, inp, ck, backend, "extracted",
-                                   timeout_sec=600, files_per_trigger=1):
-        raise RuntimeError("snapshot stream did not complete within timeout")
+    run_extract_to_snapshot(spark, inp, ck, backend, "extracted")
     return (backend.read(spark, "extracted")
             .groupBy("lang")
             .agg(F.count("*").alias("n_docs"),
@@ -274,34 +279,14 @@ def stream_score_quality(spark, sf_dir):
     broadcast weight table (scoring is per-doc pure, so stateless
     foreachBatch works unchanged). The oracle is the batch score query —
     streamed scores must equal batch scores row for row."""
-    from crawspark.bundle import ensure_shipped
     from crawspark.operators.lmquality import _clf_train, clf_score_docs
-    from crawspark.scratch import scratch_dir
     from crawspark.sources import read_testdata
 
-    ensure_shipped(spark)
-    base = scratch_dir("sscore", sf_dir, clean=("out", "ck"))
-    inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    docs = read_testdata(spark, sf_dir, "documents")
-    (docs.select("doc_id", "source", "text")
-     .repartition(4).write.mode("overwrite").parquet(inp))
     _, _, _, w = _clf_train(spark, sf_dir)  # offline training pass
-
-    stream = (spark.readStream.schema(
-        "doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", 1).parquet(inp))  # source option
-
-    def process(batch_df, batch_id: int) -> None:
-        clf_score_docs(batch_df, w).write.mode("append").parquet(out)
-
-    query = (stream.writeStream
-             .foreachBatch(process)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True)
-             .start())
-    if not query.awaitTermination(600):
-        raise RuntimeError("score stream did not complete within timeout")
-    return spark.read.parquet(out)
+    return _frontier_drain(spark, sf_dir, "sscore",
+                           read_testdata(spark, sf_dir, "documents")
+                           .select("doc_id", "source", "text"),
+                           lambda batch: clf_score_docs(batch, w))
 
 
 @register("stream_join_left_outer", sql="""
@@ -340,15 +325,13 @@ def stream_join_left_outer(spark, sf_dir):
      .repartition(2).write.mode("overwrite").parquet(right))
     import datetime as _dt
 
-    mn, mx = events.agg(F.min("ts"), F.max("ts")).first()
-    span_days = int(((mx - mn).total_seconds()) / 86400.0) + 2
+    span_days = _span_days(events)
     # sentinel must clear max_ts + watermark delay + interval
-    sentinel_ts = mx + _dt.timedelta(days=span_days + 1)
-    if not run_left_join_drained(spark, left, right, out, ck,
-                                 sentinel_ts=sentinel_ts,
-                                 watermark=f"{span_days} days",
-                                 timeout_sec=600):
-        raise RuntimeError("left-outer stream join did not drain in time")
+    sentinel_ts = (events.agg(F.max("ts")).first()[0]
+                   + _dt.timedelta(days=span_days + 1))
+    run_left_join_drained(spark, left, right, out, ck,
+                          sentinel_ts=sentinel_ts,
+                          watermark=f"{span_days} days")
     return (spark.read.parquet(out)
             .filter(F.col("left_id") >= 0)
             .groupBy("user_id")
@@ -366,32 +349,13 @@ def stream_fix_mojibake(spark, sf_dir):
     store). The oracle is the BATCH fix_mojibake SQL: streamed repairs
     must hash-equal batch repairs row for row, the same batch-parity
     contract as stream_extract_incremental / stream_score_quality."""
-    from crawspark.bundle import ensure_shipped
     from crawspark.operators.textops import moji_augment, moji_repair
-    from crawspark.scratch import scratch_dir
     from crawspark.sources import read_testdata
 
-    ensure_shipped(spark)
-    base = scratch_dir("smoji", sf_dir, clean=("out", "ck"))
-    inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    docs = read_testdata(spark, sf_dir, "documents")
-    (moji_augment(docs)
-     .repartition(4).write.mode("overwrite").parquet(inp))
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-
-    def process(batch_df, batch_id: int) -> None:
-        moji_repair(batch_df).write.mode("append").parquet(out)
-
-    query = (stream.writeStream
-             .foreachBatch(process)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True)
-             .start())
-    if not query.awaitTermination(600):
-        raise RuntimeError("mojibake stream did not complete within timeout")
-    return spark.read.parquet(out)
+    return _frontier_drain(spark, sf_dir, "smoji",
+                           moji_augment(read_testdata(spark, sf_dir,
+                                                      "documents")),
+                           moji_repair)
 
 
 def _rewrite_boiler_sql():
@@ -414,41 +378,24 @@ def stream_rewrite_boilerplate(spark, sf_dir):
     enters as a broadcast join, never as streaming state). Oracle = the
     batch rewrite SQL: streamed rewrites must hash-equal batch rewrites
     row for row."""
-    from crawspark.bundle import ensure_shipped
     from crawspark.operators.lmquality import (
         _doc_lines,
         _lines_and_boiler,
         _rebuild_from_marked,
     )
-    from crawspark.scratch import scratch_dir
     from crawspark.sources import read_testdata
 
-    ensure_shipped(spark)
-    base = scratch_dir("srewrite", sf_dir, clean=("out", "ck"))
-    inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
     docs = read_testdata(spark, sf_dir, "documents")
-    (docs.select("doc_id", "text")
-     .repartition(4).write.mode("overwrite").parquet(inp))
     # offline pass: the corpus-global boilerplate set (localCheckpointed
     # inside the helper, so microbatches reuse the materialized table)
     _, boiler = _lines_and_boiler(docs)
 
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-
-    def process(batch_df, batch_id: int) -> None:
-        marked = (_doc_lines(batch_df)
+    def rewrite(batch):
+        marked = (_doc_lines(batch)
                   .join(F.broadcast(boiler), "line", "left")
                   .select("doc_id", "j", "line",
                           F.col("ndocs").isNotNull().alias("drop")))
-        (_rebuild_from_marked(batch_df, marked)
-         .write.mode("append").parquet(out))
+        return _rebuild_from_marked(batch, marked)
 
-    query = (stream.writeStream
-             .foreachBatch(process)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True)
-             .start())
-    if not query.awaitTermination(600):
-        raise RuntimeError("rewrite stream did not complete within timeout")
-    return spark.read.parquet(out)
+    return _frontier_drain(spark, sf_dir, "srewrite",
+                           docs.select("doc_id", "text"), rewrite)

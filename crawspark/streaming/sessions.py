@@ -15,8 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                 "event_type string, value double, props string")
+from crawspark.schema import EVENTS
+from crawspark.streaming import drain
 
 
 def session_aggregate(df: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -35,29 +35,22 @@ def session_aggregate(df: DataFrame, gap: str = "30 minutes") -> DataFrame:
 def streaming_sessions(spark: SparkSession, input_path: str,
                        gap: str = "30 minutes",
                        watermark: str = "0 seconds") -> DataFrame:
-    stream = (spark.readStream.schema(EVENTS_SCHEMA).parquet(input_path)
+    stream = (spark.readStream.schema(EVENTS).parquet(input_path)
               .withWatermark("ts", watermark))
     return session_aggregate(stream, gap)
 
 
 def run_sessions_available_now(spark: SparkSession, input_path: str,
                                output_path: str, checkpoint_path: str,
-                               gap: str = "30 minutes",
-                               timeout_sec: int = 300) -> bool:
-    q = (streaming_sessions(spark, input_path, gap)
-         .writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return q.awaitTermination(timeout_sec)
+                               gap: str = "30 minutes") -> None:
+    drain(streaming_sessions(spark, input_path, gap)
+          .writeStream.format("parquet").option("path", output_path),
+          checkpoint_path)
 
 
 def run_dedup_within_watermark(spark: SparkSession, input_path: str,
                                output_path: str, checkpoint_path: str,
-                               watermark: str = "1 days",
-                               timeout_sec: int = 300) -> bool:
+                               watermark: str = "1 days") -> None:
     """Built-in bounded-state streaming dedup:
     ``dropDuplicatesWithinWatermark`` keeps the first event per key and
     drops later duplicates arriving within the watermark delay; state
@@ -66,13 +59,8 @@ def run_dedup_within_watermark(spark: SparkSession, input_path: str,
     (streaming/stateful.py), with eviction built in. At 10^12 events
     the watermark IS the dedup contract: duplicates are only promised
     to be caught within the delay window, so state stays bounded."""
-    stream = (spark.readStream.schema(EVENTS_SCHEMA).parquet(input_path)
+    stream = (spark.readStream.schema(EVENTS).parquet(input_path)
               .withWatermark("ts", watermark)
               .dropDuplicatesWithinWatermark(["event_id"]))
-    q = (stream.writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return q.awaitTermination(timeout_sec)
+    drain(stream.writeStream.format("parquet").option("path", output_path),
+          checkpoint_path)

@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 from crawspark.operators.extract import extract_documents
 from crawspark.schema import DOCUMENTS_INTERLEAVED
 from crawspark.sources.tables import SnapshotParquetBackend
+from crawspark.streaming import drain
 
 BATCH_PROP = "stream_batch_id"
 
@@ -42,29 +43,18 @@ def commit_batch(backend: SnapshotParquetBackend, table: str,
 
 def run_extract_to_snapshot(spark: SparkSession, input_path: str,
                             checkpoint_path: str,
-                            backend: SnapshotParquetBackend, table: str,
-                            timeout_sec: int = 300,
-                            files_per_trigger: int | None = None) -> bool:
-    """Drain currently-available interleaved input into ``table`` as one
-    snapshot commit per microbatch; re-invocations process only new
-    files (streaming checkpoint) and replayed batches commit nothing
-    (manifest-props idempotence). ``files_per_trigger`` splits the drain
-    into multiple microbatches (one commit each) — the multi-commit
-    regime a continuous ingest runs in."""
+                            backend: SnapshotParquetBackend,
+                            table: str) -> None:
+    """Drain currently-available interleaved input into ``table``, one
+    input file per microbatch and one snapshot commit per microbatch —
+    the multi-commit regime a continuous ingest runs in. Re-invocations
+    process only new files (streaming checkpoint) and replayed batches
+    commit nothing (manifest-props idempotence)."""
     from crawspark.bundle import ensure_shipped
     ensure_shipped(spark)
 
-    reader = spark.readStream.schema(DOCUMENTS_INTERLEAVED)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    stream = reader.parquet(input_path)
-
-    def process(batch_df, batch_id: int) -> None:
-        commit_batch(backend, table, batch_df, batch_id)
-
-    query = (stream.writeStream
-             .foreachBatch(process)
-             .option("checkpointLocation", checkpoint_path)
-             .trigger(availableNow=True)
-             .start())
-    return query.awaitTermination(timeout_sec)
+    stream = (spark.readStream.schema(DOCUMENTS_INTERLEAVED)
+              .option("maxFilesPerTrigger", 1).parquet(input_path))
+    drain(stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: commit_batch(backend, table, batch_df,
+                                                batch_id)), checkpoint_path)

@@ -11,15 +11,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.schema import EVENTS
+from crawspark.streaming import drain
+
 
 def windowed_event_counts(spark: SparkSession, input_path: str,
                           window: str = "10 minutes",
                           watermark: str = "30 minutes") -> DataFrame:
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, user_id long, "
-                      "event_type string, value double, props string")
-              .parquet(input_path))
-    return (stream
+    return (spark.readStream.schema(EVENTS).parquet(input_path)
             .withWatermark("ts", watermark)
             .groupBy(F.window("ts", window).alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"),
@@ -30,13 +29,8 @@ def windowed_event_counts(spark: SparkSession, input_path: str,
 
 
 def run_windowed_available_now(spark: SparkSession, input_path: str,
-                               output_path: str, checkpoint_path: str,
-                               timeout_sec: int = 300) -> bool:
-    agg = windowed_event_counts(spark, input_path)
-    q = (agg.writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return q.awaitTermination(timeout_sec)
+                               output_path: str,
+                               checkpoint_path: str) -> None:
+    drain(windowed_event_counts(spark, input_path)
+          .writeStream.format("parquet").option("path", output_path),
+          checkpoint_path)

@@ -19,7 +19,7 @@ def test_stream_join_matches_batch(spark, sf_dir, tmp_path):
     events.filter(F.col("event_id") % 2 == 0).coalesce(2).write.parquet(left)
     events.filter(F.col("event_id") % 2 == 1).coalesce(2).write.parquet(right)
 
-    assert run_join_available_now(spark, left, right, out, ck)
+    run_join_available_now(spark, left, right, out, ck)
     got = sorted((r["user_id"], r["left_id"], r["right_id"])
                  for r in spark.read.parquet(out).collect())
 
@@ -36,6 +36,6 @@ def test_stream_join_matches_batch(spark, sf_dir, tmp_path):
     assert got == expected and got, "stream join must equal the batch join"
 
     # second drain with the checkpoint kept: nothing new to process
-    assert run_join_available_now(spark, left, right, out, ck)
+    run_join_available_now(spark, left, right, out, ck)
     again = spark.read.parquet(out).count()
     assert again == len(got)

@@ -31,7 +31,7 @@ def test_exact_gap_merges_and_open_tail_withheld(spark, tmp_path):
         (4, "2024-01-01 05:00:00", 9, "a", 1.0, ""),  # open tail: withheld
     ]
     _events(spark, rows).coalesce(1).write.parquet(inp)
-    assert run_sessions_available_now(spark, inp, out, ck)
+    run_sessions_available_now(spark, inp, out, ck)
     got = {(r["user_id"], str(r["session_start"]), str(r["session_end"]),
             r["n_events"], r["session_value"])
            for r in spark.read.parquet(out).collect()}
@@ -45,7 +45,7 @@ def test_stream_equals_batch_minus_open_sessions(spark, tmp_path):
     inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     ev.coalesce(2).write.parquet(inp)
-    assert run_sessions_available_now(spark, inp, out, ck, timeout_sec=600)
+    run_sessions_available_now(spark, inp, out, ck)
     streamed = {tuple(r) for r in spark.read.parquet(out).collect()}
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
     batch = session_aggregate(ev)

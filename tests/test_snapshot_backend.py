@@ -225,8 +225,7 @@ def test_stream_snapshot_sink_exactly_once_and_replay(spark, tmp_path, be):
     df = spark.createDataFrame([(d["doc_id"], d["spans"]) for d in docs],
                                schema=DOCUMENTS_INTERLEAVED)
     df.coalesce(2).write.mode("overwrite").parquet(inp)
-    assert run_extract_to_snapshot(spark, inp, ck, be, "t_stream",
-                                   files_per_trigger=1)
+    run_extract_to_snapshot(spark, inp, ck, be, "t_stream")
     got = be.read(spark, "t_stream")
     assert got.count() == 20
     assert got.select("doc_id").distinct().count() == 20
@@ -246,8 +245,7 @@ def test_stream_snapshot_sink_exactly_once_and_replay(spark, tmp_path, be):
     (spark.createDataFrame([(d["doc_id"], d["spans"]) for d in more],
                            schema=DOCUMENTS_INTERLEAVED)
      .coalesce(1).write.mode("append").parquet(inp))
-    assert run_extract_to_snapshot(spark, inp, ck, be, "t_stream",
-                                   files_per_trigger=1)
+    run_extract_to_snapshot(spark, inp, ck, be, "t_stream")
     final = be.read(spark, "t_stream")
     assert final.count() == 25
     assert final.agg(F.countDistinct("doc_id")).collect()[0][0] == 25

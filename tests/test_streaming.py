@@ -6,6 +6,7 @@ from __future__ import annotations
 from crawspark.corpus import make_doc
 from crawspark.oracle import extract_document
 from crawspark.schema import DOCUMENTS_INTERLEAVED
+from crawspark.streaming import drain
 from crawspark.streaming.extract_stream import run_available_now
 
 
@@ -21,14 +22,14 @@ def test_available_now_incremental(spark, tmp_path):
     ck = str(tmp_path / "ck")
     first = [make_doc(42, i) for i in range(20)]
     _write(spark, first, inp, "overwrite")
-    assert run_available_now(spark, inp, out, ck)
+    run_available_now(spark, inp, out, ck)
     got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert got == {d["doc_id"] for d in first}
 
     # New files land; second drain processes ONLY them (no duplicates).
     second = [make_doc(43, i) for i in range(10)]
     _write(spark, second, inp, "append")
-    assert run_available_now(spark, inp, out, ck)
+    run_available_now(spark, inp, out, ck)
     rows = spark.read.parquet(out).collect()
     ids = [r["doc_id"] for r in rows]
     assert len(ids) == 30 and len(set(ids)) == 30
@@ -63,19 +64,15 @@ def test_stream_score_exactly_once_redrain(spark, tmp_path):
      .repartition(4).write.parquet(inp))
     _, _, _, w = _clf_train(spark, sf)
 
-    def drain() -> None:
+    def drain_input() -> None:
         stream = (spark.readStream.schema(
             "doc_id long, source string, text string")
             .option("maxFilesPerTrigger", 1).parquet(inp))
-        q = (stream.writeStream
-             .foreachBatch(lambda b, _i:
-                           clf_score_docs(b, w).write.mode("append")
-                           .parquet(out))
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(600)
+        drain(stream.writeStream.foreachBatch(
+            lambda b, _i: clf_score_docs(b, w).write.mode("append")
+            .parquet(out)), ck)
 
-    drain()
+    drain_input()
     # the drain must actually SPLIT into microbatches (maxFilesPerTrigger
     # is a source option; on the writer it is silently ignored and the
     # 4-file input collapses to one batch — review finding): the stream
@@ -94,7 +91,7 @@ def test_stream_score_exactly_once_redrain(spark, tmp_path):
     assert len(got) == 500 and got.keys() == batch.keys()
     for d in got:
         assert got[d] == pytest.approx(batch[d], abs=1e-4), d
-    drain()  # checkpoint kept: no new files, nothing appended
+    drain_input()  # checkpoint kept: no new files, nothing appended
     assert spark.read.parquet(out).count() == 500
 
 
@@ -129,9 +126,8 @@ def test_left_outer_interval_join_emits_unmatched(spark, tmp_path):
     # watermark 1h covers the 20-minute span; sentinel beyond
     # max_ts + 1h + 10min with margin
     sentinel_ts = t0 + timedelta(hours=3)
-    assert run_left_join_drained(spark, left, right, out, ck,
-                                 sentinel_ts=sentinel_ts,
-                                 watermark="1 hour", timeout_sec=300)
+    run_left_join_drained(spark, left, right, out, ck,
+                          sentinel_ts=sentinel_ts, watermark="1 hour")
     got = {(r.user_id, r.left_id, r.right_id)
            for r in spark.read.parquet(out).filter("left_id >= 0").collect()}
     assert got == {(100, 1, 11), (101, 2, None), (102, 3, None)}, got
@@ -152,17 +148,14 @@ def test_stream_moji_exactly_once_redrain(spark, tmp_path):
     docs = read_testdata(spark, sf, "documents")
     moji_augment(docs).repartition(4).write.parquet(inp)
 
-    def drain() -> None:
+    def drain_input() -> None:
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(inp))
-        q = (stream.writeStream
-             .foreachBatch(lambda b, _i:
-                           moji_repair(b).write.mode("append").parquet(out))
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(600)
+        drain(stream.writeStream.foreachBatch(
+            lambda b, _i: moji_repair(b).write.mode("append").parquet(out)),
+            ck)
 
-    drain()
+    drain_input()
     n_batches = len([f for f in os.listdir(os.path.join(ck, "offsets"))
                      if not f.startswith(".")])
     assert n_batches >= 2, n_batches
@@ -172,5 +165,28 @@ def test_stream_moji_exactly_once_redrain(spark, tmp_path):
              for r in moji_repair(moji_augment(docs)).collect()}
     assert got == batch
     n = len(got)
-    drain()  # checkpoint kept: no new files, nothing appended
+    drain_input()  # checkpoint kept: no new files, nothing appended
     assert spark.read.parquet(out).count() == n
+
+
+def test_drain_timeout_stops_query(spark, tmp_path, monkeypatch):
+    # A drain still running at DRAIN_TIMEOUT_S raises TimeoutError AND
+    # stops its query: the next invocation clears the checkpoint and
+    # sink, which must never race a query that is still writing.
+    import os
+    import time
+
+    import pytest
+
+    import crawspark.streaming as streaming
+
+    inp, ck = str(tmp_path / "in"), str(tmp_path / "ck")
+    spark.range(0, 4, 1, 4).write.parquet(inp)
+    assert len([f for f in os.listdir(inp) if f.endswith(".parquet")]) == 4
+    monkeypatch.setattr(streaming, "DRAIN_TIMEOUT_S", 1)
+    stream = (spark.readStream.schema("id long")
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    with pytest.raises(TimeoutError):
+        drain(stream.writeStream.foreachBatch(lambda _b, _i: time.sleep(3)),
+              ck)
+    assert spark.streams.active == []

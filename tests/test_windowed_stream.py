@@ -27,7 +27,7 @@ def test_windowed_counts_match_batch(spark, sf_dir, tmp_path):
         "value double, props string")
      .coalesce(1).write.mode("append").parquet(inp))
 
-    assert run_windowed_available_now(spark, inp, out, ck)
+    run_windowed_available_now(spark, inp, out, ck)
     got = {(r["window_start"], r["event_type"]): r["n_events"]
            for r in spark.read.parquet(out).collect()}
 
