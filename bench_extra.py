@@ -57,14 +57,12 @@ def main() -> None:
     args = ap.parse_args()
     names = HEADLINE if args.all else args.names
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.registry import load_all
     from crawspark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(master=f"local[{cpus}]", app="crawspark-bench-extra",
                       shuffle_partitions=cpus)
-    ensure_shipped(spark)
     registry = load_all()
 
     if args.plans:

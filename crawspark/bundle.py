@@ -5,7 +5,9 @@ This is the ``spark-submit --py-files crawspark.zip`` story
 via spark-submit (e.g. an external harness created the SparkSession),
 ``ensure_shipped(spark)`` zips the package and registers it with
 ``sc.addPyFile`` so Python workers can unpickle our UDFs regardless of the
-driver's cwd/sys.path.
+driver's cwd/sys.path. ``session.get_spark`` ships every session it
+returns; only a session built elsewhere (``__spark_entry__``'s harness
+session) needs its own call.
 """
 
 from __future__ import annotations

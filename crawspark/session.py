@@ -1,10 +1,14 @@
-"""SparkSession factory with the engine's standard config."""
+"""SparkSession factory with the engine's standard config. The session
+it returns is already shipped (``bundle.ensure_shipped``): every Python
+stage run on it imports ``crawspark`` whatever the driver's cwd."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import SparkSession
+
+from crawspark.bundle import ensure_shipped
 
 
 def _default_driver_mem() -> str:
@@ -49,4 +53,6 @@ def get_spark(master: str | None = None, app: str = "crawspark",
         .config("spark.memory.fraction", "0.7")
         .config("spark.ui.enabled", "false")
     )
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    ensure_shipped(spark)
+    return spark

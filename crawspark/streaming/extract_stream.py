@@ -30,13 +30,6 @@ def run_available_now(spark: SparkSession, input_path: str, output_path: str,
     """Drain all currently-available input files through extraction into
     ``output_path``. Re-invoking after new files land processes only the
     new files (exactly-once via the streaming checkpoint)."""
-    # Ship the package before building the stream: the foreachBatch
-    # extraction stage pickles a mapInArrow UDF whose workers must import
-    # crawspark regardless of the driver's cwd/sys.path (the registry
-    # wrapper also ships, but direct callers get the same guarantee here).
-    from crawspark.bundle import ensure_shipped
-    ensure_shipped(spark)
-
     stream = (spark.readStream
               .schema(DOCUMENTS_INTERLEAVED)
               .parquet(input_path))

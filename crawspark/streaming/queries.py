@@ -47,10 +47,8 @@ def _frontier_drain(spark, sf_dir: str, prefix: str, frontier, fn):
     every microbatch to a parquet sink and read the sink back. ``fn`` is
     per-row pure, so the drain equals ``fn(frontier)`` in batch — the
     parity each caller's oracle checks."""
-    from crawspark.bundle import ensure_shipped
     from crawspark.scratch import scratch_dir
 
-    ensure_shipped(spark)
     base = scratch_dir(prefix, sf_dir, clean=("out", "ck"))
     inp, out, ck = (os.path.join(base, d) for d in ("in", "out", "ck"))
     frontier.repartition(4).write.mode("overwrite").parquet(inp)

@@ -50,9 +50,6 @@ def run_extract_to_snapshot(spark: SparkSession, input_path: str,
     the multi-commit regime a continuous ingest runs in. Re-invocations
     process only new files (streaming checkpoint) and replayed batches
     commit nothing (manifest-props idempotence)."""
-    from crawspark.bundle import ensure_shipped
-    ensure_shipped(spark)
-
     stream = (spark.readStream.schema(DOCUMENTS_INTERLEAVED)
               .option("maxFilesPerTrigger", 1).parquet(input_path))
     drain(stream.writeStream.foreachBatch(

@@ -2,22 +2,26 @@
 fetch-extract-frontier iteration] recomposed as rounds of declarative
 DataFrame waves over a simulated web.
 
-Each round:
+Each round ``r`` (all tables under one ``ParquetBackend(out)``):
   1. the frontier (URLs not yet visited) is gated through the
      from-scratch RFC 9309 robots parser (per-host rules, cached per
      Arrow batch — the same deterministic rule synthesis as the
-     `robots_filter_frontier` registry query);
+     `robots_filter_frontier` registry query) and written as
+     ``frontier_r`` (doc_id, allowed);
   2. allowed URLs are "fetched" (resolved against the documents table
-     — the corpus plays the web) and run through the REAL extraction
-     pipeline (interleave_and_extract), producing span counts;
-  3. outlinks (the deterministic corpus link graph — the
-     `frontier_bfs` edge formula) are canonicalized into the next
-     frontier, anti-joined against everything already visited.
+     — the corpus plays the web), interleaved and run through the REAL
+     extraction pipeline by ``CheckpointedExtraction`` into
+     ``spans_r`` under run_id ``round-r``;
+  3. outlinks of the fetched docs (the deterministic corpus link graph
+     — the `frontier_bfs` edge formula) become the next frontier,
+     anti-joined against ``visited``, the union of the frontier tables.
 
-Every round checkpoints its fetched set + metrics to
-``out/rounds/NNN`` with a commit marker; rerunning the same --out
-resumes AFTER the last committed round (the crawl-loop twin of the
-extraction checkpoint's resume semantics). At 10^12 docs each wave
+A frontier table is a pure function of the earlier rounds, so a rerun
+of the same --out rewrites it identically; every other durable fact is
+a row of the shared ``checkpoint`` table. A rerun therefore re-extracts
+only the partitions whose done row is missing — a kill mid-round costs
+that round's pending partitions, not the round. Round stats read the
+frontier tables and ``report.run_report``. At 10^12 docs each wave
 shuffles only (doc_id) frontier keys and the per-round extraction
 batch — never the accumulated corpus.
 
@@ -86,61 +90,60 @@ def robots_allowed_df(urls):
 
 
 def run(spark, sf_dir: str, out: str, rounds: int, seeds: int) -> dict:
-    from pyspark.sql import functions as F
+    from datetime import datetime, timezone
+    from functools import reduce
 
-    from crawspark.operators.extract import interleave_and_extract
+    from pyspark.sql import DataFrame, functions as F
+
+    from crawspark.checkpoint import CheckpointedExtraction
+    from crawspark.operators.extract import interleave_documents
+    from crawspark.report import run_report
     from crawspark.sources import local_frame, read_testdata
+    from crawspark.sources.tables import ParquetBackend
 
-    out_dir = Path(out)
+    # one completed_ts per invocation: it must grow from one rerun to the
+    # next, since each partition's latest done row wins
+    started = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")
+    backend = ParquetBackend(out)
     docs = read_testdata(spark, sf_dir, "documents")
     total = docs.count()
-    ids = docs.select("doc_id")
-    edges = (ids.select(F.col("doc_id").alias("src"),
-                        ((F.col("doc_id") * 7 + 3) % total).alias("dst"))
-             .union(ids.select(F.col("doc_id").alias("src"),
-                               ((F.col("doc_id") * 3 + 1) % total)
-                               .alias("dst")))
-             .localCheckpoint(eager=True))
-
-    stats: list[dict] = []
-    visited = local_frame(spark, [], "doc_id long")
-    frontier = ids.filter(F.col("doc_id") < seeds)
+    src = F.col("doc_id").cast("long")
+    outlinks = F.explode(F.array((src * 7 + 3) % total, (src * 3 + 1) % total))
+    frontier = docs.select("doc_id").filter(F.col("doc_id") < seeds)
+    gated = []
     for rnd in range(rounds):
-        rdir = out_dir / "rounds" / f"{rnd:03d}"
-        marker = rdir / "_COMMITTED"
-        if marker.exists():
-            # resume: reload the committed round instead of refetching
-            fetched = spark.read.parquet(str(rdir / "fetched"))
-            stats.append(json.loads(marker.read_text()))
-        else:
-            urls = frontier.select(
-                "doc_id", url_for_expr(F.col("doc_id")).alias("url"))
-            gated = robots_allowed_df(urls).localCheckpoint(eager=True)
-            allowed = gated.filter("allowed").select("doc_id")
-            blocked = gated.filter("NOT allowed").count()
-            batch = docs.join(allowed, "doc_id")
-            ext = interleave_and_extract(batch)
-            fetched = (ext.select("doc_id", F.size("spans").alias("n_spans"))
-                       .localCheckpoint(eager=True))
-            (rdir / "fetched").parent.mkdir(parents=True, exist_ok=True)
-            fetched.write.mode("overwrite").parquet(str(rdir / "fetched"))
-            row = {"round": rnd,
-                   "frontier": frontier.count(),
-                   "blocked_by_robots": blocked,
-                   "fetched": fetched.count(),
-                   "spans": (fetched.agg(F.sum("n_spans")).collect()[0][0]
-                             or 0)}
-            stats.append(row)
-            marker.write_text(json.dumps(row))  # commit AFTER the data
-        fetched_ids = fetched.select("doc_id")
-        visited = visited.union(fetched_ids).union(
-            frontier.select("doc_id")).distinct().localCheckpoint(eager=True)
-        frontier = (fetched_ids.join(edges,
-                                     fetched_ids.doc_id == edges.src)
-                    .select(F.col("dst").alias("doc_id")).distinct()
-                    .join(visited, "doc_id", "left_anti")
-                    .localCheckpoint(eager=True))
-    return {"rounds": stats, "visited": visited.count(),
+        urls = frontier.select(
+            "doc_id", url_for_expr(F.col("doc_id")).alias("url"))
+        backend.overwrite(robots_allowed_df(urls).drop("url"),
+                          f"frontier_{rnd:03d}")
+        gated.append(backend.read(spark, f"frontier_{rnd:03d}"))
+        allowed = gated[-1].filter("allowed").select("doc_id")
+        results = f"spans_{rnd:03d}"
+        CheckpointedExtraction(backend, results_table=results).run(
+            spark, interleave_documents(docs.join(allowed, "doc_id")),
+            run_id=f"round-{rnd:03d}", completed_ts=started)
+        if not backend.exists(spark, results):  # nothing was fetched
+            frontier = local_frame(spark, [], "doc_id long")
+            continue
+        visited = reduce(DataFrame.union, gated).select("doc_id")
+        frontier = (backend.read(spark, results)
+                    .select(outlinks.alias("doc_id")).distinct()
+                    .join(visited, "doc_id", "left_anti"))
+
+    done = {}
+    if backend.exists(spark, "checkpoint"):
+        done = {r.run_id: r for r in run_report(spark, backend).collect()}
+    stats = []
+    for rnd, g in enumerate(gated):
+        n, blocked = g.agg(F.count("*"), F.count_if(~F.col("allowed"))).first()
+        r = done.get(f"round-{rnd:03d}")
+        stats.append({"round": rnd, "frontier": n,
+                      "blocked_by_robots": blocked,
+                      "fetched": r.docs_out if r else 0,
+                      "spans": r.spans_out if r else 0})
+    # the frontiers are disjoint: each is anti-joined against the earlier
+    return {"rounds": stats,
+            "visited": sum(s["frontier"] for s in stats),
             "next_frontier": frontier.count()}
 
 
@@ -153,12 +156,9 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.session import get_spark
 
-    spark = get_spark(master=args.master or "local[8]",
-                      shuffle_partitions=8)
-    ensure_shipped(spark)
+    spark = get_spark(master=args.master, app="crawspark-crawl")
     summary = run(spark, args.sf_dir, args.out, args.rounds, args.seeds)
     print(json.dumps(summary))
     spark.stop()

@@ -41,7 +41,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.operators.curate import (
         curate_corpus,
         curate_corpus_v2,
@@ -52,7 +51,6 @@ def main() -> None:
     from crawspark.sources import read_testdata
 
     spark = get_spark(master=args.master, app="crawspark-curate")
-    ensure_shipped(spark)
     n_in = read_testdata(spark, args.sf_dir, "documents").count()
     pipeline = (curate_corpus_v4 if args.v4 else
                 curate_corpus_v3 if args.v3 else

@@ -38,7 +38,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.registry import load_all
     from crawspark.session import get_spark
     from crawspark.sources import read_testdata
@@ -48,7 +47,6 @@ def main() -> None:
              "winnowing": "dedup_winnowing_resolve",
              "incremental": "dedup_incremental_minhash"}[args.strategy]
     spark = get_spark(master=args.master, app="crawspark-dedup")
-    ensure_shipped(spark)
     n_in = read_testdata(spark, args.sf_dir, "documents").count()
     result = load_all()[query].spark(spark, args.sf_dir)
     result.write.mode("overwrite").parquet(args.out)

@@ -40,13 +40,11 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.checkpoint import CheckpointedExtraction
     from crawspark.session import get_spark
     from crawspark.sources.tables import ParquetBackend
 
     spark = get_spark(master=args.master, app=f"crawspark-extract-{args.run_id}")
-    ensure_shipped(spark)
     if args.synthetic:
         from crawspark.operators.extract import synthetic_corpus
         docs = synthetic_corpus(spark, args.synthetic, seed=args.seed)

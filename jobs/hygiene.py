@@ -44,13 +44,11 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.registry import load_all
     from crawspark.session import get_spark
     from crawspark.sources import read_testdata
 
     spark = get_spark(master=args.master, app="crawspark-hygiene")
-    ensure_shipped(spark)
     reg = load_all()
     docs = read_testdata(spark, args.sf_dir, "documents")
     n_in = docs.count()

@@ -39,13 +39,11 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from crawspark.bundle import ensure_shipped
     from crawspark.operators.extraction_queries import _extracted
     from crawspark.operators.relational import surt_exprs
     from crawspark.session import get_spark
 
     spark = get_spark(master=args.master, app="crawspark-index")
-    ensure_shipped(spark)
 
     links = (_extracted(spark, args.sf_dir)
              .select("doc_id", F.explode("outlinks").alias("url")))

@@ -76,14 +76,12 @@ _SPARK_CHILD = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
 from crawspark.session import get_spark
-from crawspark.bundle import ensure_shipped
 from crawspark.operators.extract import extract_documents
 
 cpus = {cpus}
 n_docs = {n_docs}
 spark = get_spark(master=f"local[{{cpus}}]", app=f"scaling-{{cpus}}",
                   shuffle_partitions=cpus * 2)
-ensure_shipped(spark)
 
 def job(tag):
     out = {out_dir!r} + "/spark-" + tag
