@@ -16,6 +16,14 @@ Design:
   invocation of a run_id to the next), each at most ``n_parts``, and
   re-extracts where they differ: after inputs A→B→A, the partitions B
   changed run again. The input is filtered with ``partition_key IN``.
+- A key whose latest done row under this ``run_id`` saw input, but
+  which has no input rows now, is pending too: its results partition is
+  removed (``TableBackend.drop_partitions``; a parquet results table
+  left with no partition is removed whole) and its done row records
+  ``docs_in = docs_out = spans_out = 0`` with a null fingerprint, so
+  later runs skip it until input returns under that key. Without this,
+  the vanished input's old output would stay in the results table and
+  in ``report.run_report``.
 - The extraction runs in ``min(n_parts, defaultParallelism)`` tasks:
   ``n_parts`` sets the resume granularity, not the task count. A Python
   task still costs ≈40 CPU-ms before any work (4-core Xeon, PySpark 4.1,
@@ -33,7 +41,9 @@ Design:
   extracted frame is neither cached nor read twice. The checkpoint rows
   are built on the driver as an Arrow ``LocalRelation``
   (``local_frame``) and never reach a Python worker: a pending resume
-  runs exactly one Python stage, the extraction.
+  runs exactly one Python stage, the extraction. They are appended from
+  one task, so each append adds one data file: the done-row collect
+  lists every file of the checkpoint table.
 
 The reference has no analog — crawtext restarts re-query MongoDB for
 unseen URLs [R: database.py queue semantics]; this is the Spark-native
@@ -117,12 +127,39 @@ class CheckpointedExtraction:
             done = {k: r.input_fingerprint for k, r in collect_by_key(
                 latest_done(ckpt.filter(F.col("run_id") == run_id)),
                 "checkpoint done rows", self.n_parts).items()}
-        pending = sorted(k for k, r in fps.items()
-                         if done.get(k) != r.input_fingerprint)[:max_partitions]
+        now = {k: r.input_fingerprint for k, r in fps.items()}
+        # a done key with no input now differs too (its fingerprint is
+        # None): its output is dropped and a null-fingerprint row recorded
+        pending = sorted(k for k in now.keys() | done.keys()
+                         if done.get(k) != now.get(k))[:max_partitions]
         if not pending:
             return {"run_id": run_id, "partitions_processed": 0,
                     "docs_out": 0, "spans_out": 0}
 
+        present = [k for k in pending if k in now]
+        gone = [k for k in pending if k not in now]
+        metrics = dict.fromkeys(gone, (0, 0))
+        if present:
+            metrics |= self._extract(spark, keyed, present)
+        if gone:
+            self.backend.drop_partitions(spark, self.results_table,
+                                         "partition_key", gone)
+        ckpt_rows = local_frame(spark, [
+            (run_id, k, "done", fps[k].docs_in if k in fps else 0,
+             *metrics[k], now.get(k), None) for k in pending], CHECKPOINT)
+        # one task, so one data file per append
+        self.backend.append(ckpt_rows.coalesce(1).withColumn(
+            "completed_ts", F.lit(completed_ts).cast("timestamp")),
+            self.checkpoint_table)
+
+        return {"run_id": run_id, "partitions_processed": len(pending),
+                "docs_out": sum(m[0] for m in metrics.values()),
+                "spans_out": sum(m[1] for m in metrics.values())}
+
+    def _extract(self, spark: SparkSession, keyed: DataFrame,
+                 pending: list[str]) -> dict[str, tuple[int, int]]:
+        """Extract the ``pending`` keys of ``keyed`` into the results
+        table; return each key's (docs_out, spans_out)."""
         width = min(self.n_parts, spark.sparkContext.defaultParallelism)
         todo = keyed.filter(F.col("partition_key").isin(pending))
         extracted = extract_documents(salted_repartition(todo, partitions=width))
@@ -142,15 +179,5 @@ class CheckpointedExtraction:
         self.backend.overwrite_partitions(written, self.results_table,
                                           "partition_key")
         m = obs.get
-        metrics = {k: (m[f"docs_{i}"], m[f"spans_{i}"] or 0)
-                   for i, k in enumerate(pending)}
-        ckpt_rows = local_frame(spark, [
-            (run_id, k, "done", fps[k].docs_in, *metrics[k],
-             fps[k].input_fingerprint, None) for k in pending], CHECKPOINT)
-        self.backend.append(ckpt_rows.withColumn(
-            "completed_ts", F.lit(completed_ts).cast("timestamp")),
-            self.checkpoint_table)
-
-        return {"run_id": run_id, "partitions_processed": len(pending),
-                "docs_out": sum(m[0] for m in metrics.values()),
-                "spans_out": sum(m[1] for m in metrics.values())}
+        return {k: (m[f"docs_{i}"], m[f"spans_{i}"] or 0)
+                for i, k in enumerate(pending)}

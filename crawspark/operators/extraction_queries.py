@@ -18,6 +18,7 @@ import os
 from pyspark.sql import functions as F
 
 from crawspark.operators.extract import extract_documents, interleave_documents
+from crawspark.operators.perdoc import _docs, _per_doc
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -381,32 +382,17 @@ def jsonld_extract_meta(spark, sf_dir):
     # escaped </script> inside a JSON string, top-level array, author
     # as string/object/list, decoy javascript block) and walks it with
     # the REAL DOM tokenizer — every recovered field driver-hashed.
-    import pandas as pd
+    from crawspark.oracle.jsonld import (
+        extract_jsonld_articles, make_jsonld_page)
 
-    def synth_extract(batches):
-        from crawspark.oracle.jsonld import (
-            extract_jsonld_articles,
-            make_jsonld_page,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "headline": [], "date_published": [],
-                   "author_name": [], "word_count": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                for rec in extract_jsonld_articles(make_jsonld_page(d)):
-                    out["doc_id"].append(d)
-                    out["headline"].append(rec["headline"])
-                    out["date_published"].append(rec["date_published"])
-                    out["author_name"].append(rec["author_name"])
-                    out["word_count"].append(rec["word_count"])
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, r["headline"], r["date_published"], r["author_name"],
+                 r["word_count"])
+                for r in extract_jsonld_articles(make_jsonld_page(d))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 3).select("doc_id"))
-    return docs.mapInPandas(
-        synth_extract, "doc_id long, headline string, "
-                       "date_published string, author_name string, "
-                       "word_count int")
+    return _per_doc(_docs(spark, sf_dir, 10, 3),
+                    "doc_id long, headline string, date_published string, "
+                    "author_name string, word_count int", rows)
 
 
 @register("lang_confusion_matrix", sql=_sf_sql(f"""

@@ -13,17 +13,18 @@ archives, mail, WARC), runs it through its real zero-dependency decoder
 or extractor (oracle/imagemeta.py, oracle/jpegcodec.py,
 oracle/pdfparse.py, ...), and hashes the result against a closed-form
 DuckDB oracle. Each route is a ``rows(d)`` function of the doc_id fed
-to ``_per_doc``, the one mapInPandas loop over a doc_id column.
+to ``perdoc._per_doc``, the one mapInPandas loop over a doc_id column.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from crawspark.operators.perdoc import _docs, _per_doc
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -190,28 +191,6 @@ def multimodal_feature_stats(spark, sf_dir):
 # doc_id, runs its format's real decoder in ``rows(d)`` and hands that to
 # ``_per_doc``, the one mapInPandas loop over a doc_id column.
 # ---------------------------------------------------------------------------
-
-
-def _docs(spark, sf_dir, mod: int, res: int) -> DataFrame:
-    """The doc_id column of `documents` where doc_id % mod == res."""
-    return (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % mod == res).select("doc_id"))
-
-
-def _per_doc(docs: DataFrame, schema: str,
-             rows: Callable[[int], Iterable[tuple]]) -> DataFrame:
-    """One fused Python hop over a doc_id column: ``rows(d)`` returns the
-    tuples, in ``schema`` order, that doc d contributes (zero, one or
-    many)."""
-    names = [c.split()[0] for c in schema.split(",")]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [t for d in pdf["doc_id"] for t in rows(int(d))]
-            cols = list(zip(*out)) if out else [()] * len(names)
-            yield pd.DataFrame({n: list(c) for n, c in zip(names, cols)})
-
-    return docs.mapInPandas(run, schema)
 
 
 def _md5(data: bytes) -> str:

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crawspark.operators.extraction_queries import _sf_sql
+from crawspark.operators.perdoc import _docs, _per_doc
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -645,9 +646,53 @@ def events_json_extract(spark, sf_dir):
                  F.round(F.sum("value"), 2).alias("sum_value")))
 
 
+def robots_gate(urls):
+    """The crawl frontier's robots.txt gate [R: crawtext fetch loop;
+    RFC 9309]: ``urls``, any frame with a ``url`` column, plus the URL's
+    ``host``, whether that host's robots.txt lets crawspark fetch the
+    URL's path (``allowed``) and the host's ``crawl_delay`` (null when
+    it sets none). Each host serves ``synth_robots_txt(host)``; the
+    from-scratch parser reads it once per host per task (user-agent
+    group selection, longest-match Allow/Disallow, empty Disallow,
+    Crawl-delay) and decides every URL's raw path."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    schema = T.StructType(urls.schema.fields + [
+        T.StructField("host", T.StringType()),
+        T.StructField("allowed", T.BooleanType()),
+        T.StructField("crawl_delay", T.DoubleType())])
+
+    def decide(batches):
+        from crawspark.oracle.robots import (
+            parse_robots, robots_allowed, synth_robots_txt)
+        cache: dict = {}
+        for b in batches:
+            allowed, delays = [], []
+            for host, path in zip(b.column("host").to_pylist(),
+                                  b.column("path").to_pylist()):
+                if host not in cache:
+                    cache[host] = parse_robots(synth_robots_txt(host),
+                                               "crawspark")
+                g = cache[host]
+                allowed.append(robots_allowed(g["rules"], path))
+                delays.append(g["crawl_delay"])
+            yield pa.RecordBatch.from_arrays(
+                b.columns[:-1] + [pa.array(allowed, pa.bool_()),
+                                  pa.array(delays, pa.float64())],
+                names=schema.names)
+
+    return (urls
+            .withColumn("host", F.lower(F.regexp_extract(
+                "url", r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)))
+            .withColumn("path", F.regexp_extract(
+                "url", r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1))
+            .mapInArrow(decide, schema))
+
+
 @register("robots_filter_frontier", sql=_sf_sql("""
-    -- closed form of the synthesized per-host robots (see the Spark
-    -- side): len(host)%3==0 → all disallowed; ==1 → /d... disallowed
+    -- closed form of the synthesized per-host robots (oracle/robots
+    -- synth_robots_txt): len(host)%3==0 → all disallowed; ==1 → /d... disallowed
     -- unless /d1... (longest-match); ==2 → crawspark group, empty
     -- Disallow (all allowed) with Crawl-delay 2.
     SELECT host, count(*) AS n_urls,
@@ -668,58 +713,15 @@ def events_json_extract(spark, sf_dir):
 """))
 def robots_filter_frontier(spark, sf_dir):
     """Politeness gate for the crawl frontier [R: crawtext fetch loop;
-    RFC 9309]: every outlink URL from the extraction is decided against
-    its host's robots.txt by the from-scratch parser (user-agent group
-    selection, longest-match Allow/Disallow, empty-Disallow, crawl
-    delay). Robots texts are synthesized deterministically per host so
-    the DuckDB oracle can state the expected decisions in closed form —
-    the PARSER is the thing under test, per-host rows hashed."""
-    from collections.abc import Iterator as _Iter
-
-    import pandas as pd
-
+    RFC 9309]: every outlink URL from the extraction goes through
+    `robots_gate`. The robots texts are synthesized per host so the
+    DuckDB oracle can state the expected decisions in closed form — the
+    PARSER is the thing under test, per-host rows hashed."""
     from crawspark.operators.extraction_queries import _extracted
 
-    def robots_text_for(host: str) -> str:
-        m = len(host) % 3
-        if m == 0:
-            return "User-agent: *\nDisallow: /\n"
-        if m == 1:
-            return ("# tag pages are fine\nUser-agent: googlebot\n"
-                    "Disallow: /\n\nUser-agent: *\nDisallow: /d\n"
-                    "Allow: /d1\n")
-        return ("User-agent: crawspark\nCrawl-delay: 2\nDisallow:\n\n"
-                "User-agent: *\nDisallow: /\n")
-
-    def decide(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        from crawspark.oracle.robots import parse_robots, robots_allowed
-        cache: dict = {}
-        for pdf in batches:
-            allowed, delays = [], []
-            for host, path in zip(pdf["host"], pdf["path"]):
-                if host not in cache:
-                    cache[host] = parse_robots(robots_text_for(host),
-                                               "crawspark")
-                g = cache[host]
-                allowed.append(bool(robots_allowed(g["rules"], path)))
-                delays.append(g["crawl_delay"])
-            yield pd.DataFrame({"host": pdf["host"],
-                                "allowed": allowed,
-                                "crawl_delay": delays})
-
-    ext = _extracted(spark, sf_dir)
-    urls = (ext.select(F.explode("outlinks").alias("link"))
-            .select(
-                F.lower(F.regexp_extract(
-                    "link", r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
-                .alias("host"),
-                F.regexp_extract(
-                    "link", r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-                .alias("path"))
-            .filter(F.col("host") != ""))
-    decided = urls.mapInPandas(
-        decide, "host string, allowed boolean, crawl_delay double")
-    return (decided.groupBy("host")
+    urls = _extracted(spark, sf_dir).select(F.explode("outlinks").alias("url"))
+    return (robots_gate(urls).filter(F.col("host") != "")
+            .groupBy("host")
             .agg(F.count("*").alias("n_urls"),
                  F.sum(F.col("allowed").cast("int")).cast("long")
                  .alias("n_allowed"),
@@ -758,59 +760,16 @@ def frontier_schedule(spark, sf_dir):
     a per-host rate-limited fetcher executes. The decisions come from
     the REAL RFC 9309 parser over the synthesized per-host robots; the
     oracle states allowed-set and delays in closed form. Scale shape:
-    one shuffle on host (the window), per-URL decisions vectorized in
-    batches with a per-host rules cache."""
-    from collections.abc import Iterator as _Iter
-
-    import pandas as pd
-
+    one shuffle on host (the window), per-URL decisions in
+    `robots_gate`."""
     from crawspark.operators.extraction_queries import _extracted
 
-    def robots_text_for(host: str) -> str:
-        m = len(host) % 3
-        if m == 0:
-            return "User-agent: *\nDisallow: /\n"
-        if m == 1:
-            return ("# tag pages are fine\nUser-agent: googlebot\n"
-                    "Disallow: /\n\nUser-agent: *\nDisallow: /d\n"
-                    "Allow: /d1\n")
-        return ("User-agent: crawspark\nCrawl-delay: 2\nDisallow:\n\n"
-                "User-agent: *\nDisallow: /\n")
-
-    def decide(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        from crawspark.oracle.robots import parse_robots, robots_allowed
-        cache: dict = {}
-        for pdf in batches:
-            allowed, delays = [], []
-            for host, path in zip(pdf["host"], pdf["path"]):
-                if host not in cache:
-                    cache[host] = parse_robots(robots_text_for(host),
-                                               "crawspark")
-                g = cache[host]
-                allowed.append(bool(robots_allowed(g["rules"], path)))
-                delays.append(g["crawl_delay"])
-            yield pd.DataFrame({"host": pdf["host"], "url": pdf["url"],
-                                "allowed": allowed,
-                                "crawl_delay": delays})
-
-    ext = _extracted(spark, sf_dir)
-    urls = (ext.select(F.explode("outlinks").alias("link"))
-            .select(
-                F.lower(F.regexp_extract(
-                    "link", r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
-                .alias("host"),
-                F.regexp_extract(
-                    "link", r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-                .alias("path"),
-                F.col("link").alias("url"))
-            .filter(F.col("host") != "")
-            .distinct())
-    decided = urls.mapInPandas(
-        decide, "host string, url string, allowed boolean, "
-                "crawl_delay double")
+    urls = (_extracted(spark, sf_dir)
+            .select(F.explode("outlinks").alias("url")).distinct())
     w = Window.partitionBy("host").orderBy("url")
     rn = F.row_number().over(w)
-    return (decided.filter(F.col("allowed"))
+    return (robots_gate(urls)
+            .filter((F.col("host") != "") & F.col("allowed"))
             .withColumn("fetch_rank", rn.cast("long"))
             .withColumn("offset_sec",
                         F.round((rn - 1)
@@ -904,29 +863,15 @@ def sitemap_frontier_seed(spark, sf_dir):
     Arrow-batched per document; every parsed field is driver-hashed
     against the closed-form oracle. Namespace-agnostic: half the
     synthesized urlsets carry the sitemaps.org namespace, half none."""
-    import pandas as pd
+    from crawspark.oracle.sitemap import make_sitemap, parse_sitemap
 
-    def synth_parse(batches):
-        from crawspark.oracle.sitemap import make_sitemap, parse_sitemap
-        for pdf in batches:
-            out = {"doc_id": [], "idx": [], "kind": [], "loc": [],
-                   "lastmod": [], "priority": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                for j, rec in enumerate(parse_sitemap(make_sitemap(d))):
-                    out["doc_id"].append(d)
-                    out["idx"].append(j)
-                    out["kind"].append(rec["kind"])
-                    out["loc"].append(rec["loc"])
-                    out["lastmod"].append(rec["lastmod"])
-                    out["priority"].append(rec["priority"])
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, j, r["kind"], r["loc"], r["lastmod"], r["priority"])
+                for j, r in enumerate(parse_sitemap(make_sitemap(d)))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 6 == 2).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, idx int, kind string, loc string, "
-                     "lastmod string, priority double")
+    return _per_doc(_docs(spark, sf_dir, 6, 2),
+                    "doc_id long, idx int, kind string, loc string, "
+                    "lastmod string, priority double", rows)
 
 
 @register("feed_frontier_seed", sql="""
@@ -960,29 +905,15 @@ def feed_frontier_seed(spark, sf_dir):
     Atom entries, with rel="self" decoy links the Atom walk must skip)
     and emit one frontier row per entry, every field driver-hashed
     against the closed-form oracle. Arrow-batched per document."""
-    import pandas as pd
+    from crawspark.oracle.feeds import make_feed, parse_feed
 
-    def synth_parse(batches):
-        from crawspark.oracle.feeds import make_feed, parse_feed
-        for pdf in batches:
-            out = {"doc_id": [], "idx": [], "fmt": [], "title": [],
-                   "link": [], "published": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                for j, rec in enumerate(parse_feed(make_feed(d))):
-                    out["doc_id"].append(d)
-                    out["idx"].append(j)
-                    out["fmt"].append(rec["fmt"])
-                    out["title"].append(rec["title"])
-                    out["link"].append(rec["link"])
-                    out["published"].append(rec["published"])
-            yield pd.DataFrame(out)
+    def rows(d):
+        return [(d, j, r["fmt"], r["title"], r["link"], r["published"])
+                for j, r in enumerate(parse_feed(make_feed(d)))]
 
-    docs = (read_testdata(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 7 == 1).select("doc_id"))
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, idx int, fmt string, title string, "
-                     "link string, published string")
+    return _per_doc(_docs(spark, sf_dir, 7, 1),
+                    "doc_id long, idx int, fmt string, title string, "
+                    "link string, published string", rows)
 
 
 @register("crawl_snapshot_diff", sql="""
@@ -1237,7 +1168,7 @@ def robots_sitemap_discovery(spark, sf_dir):
 
     import pandas as pd
 
-    def robots_text_for(host: str) -> str:
+    def sitemap_robots_txt(host: str) -> str:
         if len(host) % 2 == 0:
             # before any group + an exact duplicate inside the group
             return (f"Sitemap: https://{host}/sitemap.xml\n"
@@ -1254,7 +1185,7 @@ def robots_sitemap_discovery(spark, sf_dir):
             out = {"host": [], "ord": [], "sitemap_url": []}
             for host in pdf["host"]:
                 for i, sm in enumerate(
-                        extract_sitemaps(robots_text_for(str(host)))):
+                        extract_sitemaps(sitemap_robots_txt(str(host)))):
                     out["host"].append(host)
                     out["ord"].append(i)
                     out["sitemap_url"].append(sm)

@@ -19,9 +19,9 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import functions as F
 
+from crawspark.operators.perdoc import _per_doc
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -56,36 +56,24 @@ def scan_warc_records(spark, sf_dir):
     Every hop of that chain sits on the driver's hash path via the
     per-record body_md5; the DuckDB oracle replays the synthesis in
     closed form, so a parse bug in any layer flips digests."""
-    def synth_parse(batches):
-        from crawspark.oracle import httpmsg
-        from crawspark.oracle.warc import make_warc_file, parse_warc
-        for pdf in batches:
-            out = {"doc_id": [], "rec_idx": [], "gz": [], "target_uri": [],
-                   "warc_date": [], "status": [], "body_md5": [],
-                   "body_len": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                for j, rec in enumerate(
-                        r for r in parse_warc(make_warc_file(d))
-                        if r["warc_type"] == "response"):
-                    resp = httpmsg.parse_response(rec["block"])
-                    body = b"" if resp is None else resp["body"]
-                    out["doc_id"].append(d)
-                    out["rec_idx"].append(j)
-                    out["gz"].append(d % 2)
-                    out["target_uri"].append(rec["target_uri"])
-                    out["warc_date"].append(rec["date"])
-                    out["status"].append(-1 if resp is None
-                                         else resp["status"])
-                    out["body_md5"].append(hashlib.md5(body).hexdigest())
-                    out["body_len"].append(len(body))
-            yield pd.DataFrame(out)
+    from crawspark.oracle import httpmsg
+    from crawspark.oracle.warc import make_warc_file, parse_warc
+
+    def rows(d):
+        out = []
+        for j, rec in enumerate(r for r in parse_warc(make_warc_file(d))
+                                if r["warc_type"] == "response"):
+            resp = httpmsg.parse_response(rec["block"])
+            body = b"" if resp is None else resp["body"]
+            out.append((d, j, d % 2, rec["target_uri"], rec["date"],
+                        -1 if resp is None else resp["status"],
+                        hashlib.md5(body).hexdigest(), len(body)))
+        return out
 
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, rec_idx int, gz int, target_uri string, "
-                     "warc_date string, status int, body_md5 string, "
-                     "body_len int")
+    return _per_doc(docs, "doc_id long, rec_idx int, gz int, "
+                          "target_uri string, warc_date string, status int, "
+                          "body_md5 string, body_len int", rows)
 
 
 @register("http_decode_responses", sql=f"""
@@ -111,36 +99,27 @@ def http_decode_responses(spark, sf_dir):
     gzip content coding, across the full 2×2 grid per document. The
     decoded body's md5 + the merged trailer value are driver-hashed
     against the closed-form oracle."""
-    def synth_parse(batches):
-        from crawspark.oracle import httpmsg
-        for pdf in batches:
-            out = {"doc_id": [], "variant_seq": [], "variant": [],
-                   "status": [], "transfer": [], "content_coding": [],
-                   "trailer_doc": [], "body_md5": [], "body_len": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                for j in range(4):
-                    resp = httpmsg.parse_response(httpmsg.make_response(d, j))
-                    h = {} if resp is None else resp["headers"]
-                    body = b"" if resp is None else resp["body"]
-                    out["doc_id"].append(d)
-                    out["variant_seq"].append(j)
-                    out["variant"].append((d + j) % 4)
-                    out["status"].append(-1 if resp is None
-                                         else resp["status"])
-                    out["transfer"].append(h.get("transfer-encoding", ""))
-                    out["content_coding"].append(h.get("content-encoding",
-                                                       ""))
-                    out["trailer_doc"].append(int(h.get("x-crawl-doc", -1)))
-                    out["body_md5"].append(hashlib.md5(body).hexdigest())
-                    out["body_len"].append(len(body))
-            yield pd.DataFrame(out)
+    from crawspark.oracle import httpmsg
+
+    def rows(d):
+        out = []
+        for j in range(4):
+            resp = httpmsg.parse_response(httpmsg.make_response(d, j))
+            h = {} if resp is None else resp["headers"]
+            body = b"" if resp is None else resp["body"]
+            out.append((d, j, (d + j) % 4,
+                        -1 if resp is None else resp["status"],
+                        h.get("transfer-encoding", ""),
+                        h.get("content-encoding", ""),
+                        int(h.get("x-crawl-doc", -1)),
+                        hashlib.md5(body).hexdigest(), len(body)))
+        return out
 
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        synth_parse, "doc_id long, variant_seq int, variant int, "
-                     "status int, transfer string, content_coding string, "
-                     "trailer_doc long, body_md5 string, body_len int")
+    return _per_doc(docs, "doc_id long, variant_seq int, variant int, "
+                          "status int, transfer string, "
+                          "content_coding string, trailer_doc long, "
+                          "body_md5 string, body_len int", rows)
 
 
 def _extract_from_warc_sql(sf_dir: str) -> str:

@@ -22,6 +22,23 @@ from __future__ import annotations
 import re
 
 
+def synth_robots_txt(host: str) -> str:
+    """The robots.txt a simulated ``host`` serves: a deterministic grid
+    on ``len(host) % 3`` that the DuckDB oracles restate in closed form.
+    0 → everything disallowed; 1 → ``/d…`` disallowed unless ``/d1…``
+    (longest match), behind a comment line and a decoy googlebot group;
+    2 → a crawspark group with an empty Disallow and Crawl-delay 2."""
+    m = len(host) % 3
+    if m == 0:
+        return "User-agent: *\nDisallow: /\n"
+    if m == 1:
+        return ("# tag pages are fine\nUser-agent: googlebot\n"
+                "Disallow: /\n\nUser-agent: *\nDisallow: /d\n"
+                "Allow: /d1\n")
+    return ("User-agent: crawspark\nCrawl-delay: 2\nDisallow:\n\n"
+            "User-agent: *\nDisallow: /\n")
+
+
 def parse_robots(text: str, user_agent: str = "crawspark") -> dict:
     """Parse robots.txt and select the rule group for ``user_agent``.
     Returns {"rules": [(allow: bool, pattern: str)], "crawl_delay":

@@ -19,7 +19,8 @@ def run_report(spark: SparkSession, backend: TableBackend,
                  F.sum("docs_in").alias("docs_in"),
                  F.sum("docs_out").alias("docs_out"),
                  F.sum("spans_out").alias("spans_out"),
-                 F.round(F.avg(F.col("spans_out") / F.col("docs_out")), 3)
+                 # null for a partition whose input vanished (docs_out 0)
+                 F.round(F.avg(F.try_divide("spans_out", "docs_out")), 3)
                  .alias("avg_spans_per_doc"),
                  F.max("completed_ts").alias("last_completed_ts")))
 

@@ -60,6 +60,12 @@ class TableBackend:
         re-processing unit for resumable runs)."""
         raise NotImplementedError
 
+    def drop_partitions(self, spark: SparkSession, name: str,
+                        partition_col: str, values: list[str]) -> None:
+        """Remove the rows of the partitions ``values`` (a missing table or
+        partition is a no-op), leaving a table that still reads, or none."""
+        raise NotImplementedError
+
     def exists(self, spark: SparkSession, name: str) -> bool:
         raise NotImplementedError
 
@@ -88,6 +94,23 @@ class ParquetBackend(TableBackend):
             "spark.sql.sources.partitionOverwriteMode", "dynamic")
         (df.write.mode("overwrite").partitionBy(partition_col)
          .parquet(self._path(name)))
+
+    def drop_partitions(self, spark: SparkSession, name: str,
+                        partition_col: str, values: list[str]) -> None:
+        import shutil
+        from urllib.parse import unquote
+
+        root, prefix = self._path(name), f"{partition_col}="
+        if not os.path.isdir(root):
+            return
+        parts = [d for d in os.listdir(root) if d.startswith(prefix)]
+        gone = [d for d in parts if unquote(d[len(prefix):]) in values]
+        if len(gone) == len(parts):
+            # a directory with no partition left has no schema to read
+            shutil.rmtree(root)
+            return
+        for d in gone:
+            shutil.rmtree(os.path.join(root, d))
 
     def exists(self, spark: SparkSession, name: str) -> bool:
         return os.path.exists(self._path(name))
@@ -410,6 +433,19 @@ class SnapshotParquetBackend(TableBackend):
         kept = [e for e in prev if e["partition"] not in replaced]
         self._commit(name, kept + new, df.schema.json(), expected_base=base)
 
+    def drop_partitions(self, spark: SparkSession, name: str,
+                        partition_col: str, values: list[str]) -> None:
+        from urllib.parse import unquote
+
+        base = self.current_version(name)
+        prev = self._live_entries(name, base)
+        kept = [e for e in prev if unquote(e["partition"]) not in values]
+        if len(kept) < len(prev):
+            # a commit of no entries reads as an empty scan of its schema
+            self._commit(name, kept,
+                         self._load_manifest(name, base)["schema"],
+                         expected_base=base)
+
     def exists(self, spark: SparkSession, name: str) -> bool:
         return self.current_version(name) > 0
 
@@ -487,6 +523,13 @@ class IcebergBackend(TableBackend):
                              partition_col: str) -> None:
         # Iceberg's dynamic overwrite is an atomic snapshot commit.
         df.writeTo(self._tbl(name)).overwritePartitions()
+
+    def drop_partitions(self, spark: SparkSession, name: str,
+                        partition_col: str, values: list[str]) -> None:
+        if self.exists(spark, name):
+            spark.sql(f"DELETE FROM {self._tbl(name)} WHERE {partition_col}"
+                      f" IN ({', '.join(['?'] * len(values))})",
+                      args=list(values))
 
     def exists(self, spark: SparkSession, name: str) -> bool:
         return spark.catalog.tableExists(self._tbl(name))

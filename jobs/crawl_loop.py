@@ -3,11 +3,12 @@ fetch-extract-frontier iteration] recomposed as rounds of declarative
 DataFrame waves over a simulated web.
 
 Each round ``r`` (all tables under one ``ParquetBackend(out)``):
-  1. the frontier (URLs not yet visited) is gated through the
-     from-scratch RFC 9309 robots parser (per-host rules, cached per
-     Arrow batch — the same deterministic rule synthesis as the
-     `robots_filter_frontier` registry query) and written as
-     ``frontier_r`` (doc_id, allowed);
+  1. the frontier (URLs not yet visited) goes through
+     ``relational.robots_gate``, the one robots.txt gate the
+     `robots_filter_frontier` and `frontier_schedule` registry queries
+     share (the from-scratch RFC 9309 parser over each host's
+     synthesized robots.txt), and is written as ``frontier_r``
+     (doc_id, allowed);
   2. allowed URLs are "fetched" (resolved against the documents table
      — the corpus plays the web), interleaved and run through the REAL
      extraction pipeline by ``CheckpointedExtraction`` into
@@ -19,8 +20,9 @@ Each round ``r`` (all tables under one ``ParquetBackend(out)``):
 A frontier table is a pure function of the earlier rounds, so a rerun
 of the same --out rewrites it identically; every other durable fact is
 a row of the shared ``checkpoint`` table. A rerun therefore re-extracts
-only the partitions whose done row is missing — a kill mid-round costs
-that round's pending partitions, not the round. Round stats read the
+only the partitions whose done row is missing or stale — a kill
+mid-round costs that round's pending partitions, not the round — and
+drops the output of partitions whose documents left the frontier. Round stats read the
 frontier tables and ``report.run_report``. At 10^12 docs each wave
 shuffles only (doc_id) frontier keys and the per-round extraction
 batch — never the accumulated corpus.
@@ -48,47 +50,6 @@ def url_for_expr(col):
                     F.lit(".example.com/p/"), col.cast("string"))
 
 
-def robots_text_for(host: str) -> str:
-    # deterministic per-host rules — the robots_filter_frontier grid:
-    # len%3==0 all-disallow, ==1 /d-prefix rules, ==2 crawspark group
-    m = len(host) % 3
-    if m == 0:
-        return "User-agent: *\nDisallow: /\n"
-    if m == 1:
-        return ("User-agent: googlebot\nDisallow: /\n\n"
-                "User-agent: *\nDisallow: /d\nAllow: /d1\n")
-    return ("User-agent: crawspark\nCrawl-delay: 2\nDisallow:\n\n"
-            "User-agent: *\nDisallow: /\n")
-
-
-def robots_allowed_df(urls):
-    """urls(doc_id, url) -> + allowed boolean, via the real parser."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    host = F.lower(F.regexp_extract(
-        "url", r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
-    path = F.regexp_extract(
-        "url", r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-    with_hp = urls.withColumn("host", host).withColumn("path", path)
-
-    def decide(batches):
-        from crawspark.oracle.robots import parse_robots, robots_allowed
-        cache: dict = {}
-        for pdf in batches:
-            flags = []
-            for h, p in zip(pdf["host"], pdf["path"]):
-                if h not in cache:
-                    cache[h] = parse_robots(robots_text_for(h), "crawspark")
-                flags.append(bool(robots_allowed(cache[h]["rules"],
-                                                 p or "/")))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "url": pdf["url"], "allowed": flags})
-
-    return with_hp.select("doc_id", "url", "host", "path").mapInPandas(
-        decide, "doc_id long, url string, allowed boolean")
-
-
 def run(spark, sf_dir: str, out: str, rounds: int, seeds: int) -> dict:
     from datetime import datetime, timezone
     from functools import reduce
@@ -97,6 +58,7 @@ def run(spark, sf_dir: str, out: str, rounds: int, seeds: int) -> dict:
 
     from crawspark.checkpoint import CheckpointedExtraction
     from crawspark.operators.extract import interleave_documents
+    from crawspark.operators.relational import robots_gate
     from crawspark.report import run_report
     from crawspark.sources import local_frame, read_testdata
     from crawspark.sources.tables import ParquetBackend
@@ -114,7 +76,7 @@ def run(spark, sf_dir: str, out: str, rounds: int, seeds: int) -> dict:
     for rnd in range(rounds):
         urls = frontier.select(
             "doc_id", url_for_expr(F.col("doc_id")).alias("url"))
-        backend.overwrite(robots_allowed_df(urls).drop("url"),
+        backend.overwrite(robots_gate(urls).select("doc_id", "allowed"),
                           f"frontier_{rnd:03d}")
         gated.append(backend.read(spark, f"frontier_{rnd:03d}"))
         allowed = gated[-1].filter("allowed").select("doc_id")

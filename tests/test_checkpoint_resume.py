@@ -253,3 +253,90 @@ def test_checkpoint_done_rows_bounded_by_n_parts(spark, docs_df, tmp_path,
                 completed_ts="2026-01-01 01:00:00")
     assert "input fingerprint rows: 4 rows collected (bound 4)" in caplog.text
     assert "checkpoint done rows: 8 rows collected (bound 4)" in caplog.text
+
+
+def _backend(kind, root):
+    from crawspark.sources.tables import SnapshotParquetBackend
+
+    return (ParquetBackend if kind == "parquet"
+            else SnapshotParquetBackend)(str(root))
+
+
+@pytest.mark.parametrize("backend", ["parquet", "snapshot"])
+def test_vanished_partition_a_b_a(spark, docs_df, tmp_path, backend):
+    # B drops every document of one logical partition. Dynamic overwrite
+    # alone would keep that partition's A output, so B's run must remove
+    # it and record the key as empty; A again re-extracts it.
+    from crawspark.checkpoint import with_partition_key
+    from crawspark.report import run_report
+
+    keyed = with_partition_key(docs_df, 8)
+    gone = keyed.agg(F.min("partition_key")).first()[0]
+    b_df = keyed.filter(F.col("partition_key") != gone).drop("partition_key")
+    n_b = b_df.count()
+    assert 0 < n_b < 60
+
+    def single(df, name):
+        ck = CheckpointedExtraction(_backend(backend, tmp_path / name),
+                                    n_parts=8)
+        ck.run(spark, df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+        return _rows(spark, ck.backend)
+
+    ck = CheckpointedExtraction(_backend(backend, tmp_path / "aba"),
+                                n_parts=8)
+    ck.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+    b = ck.run(spark, b_df, run_id="r1", completed_ts="2026-01-01 01:00:00")
+    assert b == {"run_id": "r1", "partitions_processed": 1, "docs_out": 0,
+                 "spans_out": 0}
+    assert _rows(spark, ck.backend) == single(b_df, "b")
+    row = [c for c in ck.backend.read(spark, "checkpoint").collect()
+           if c["partition_key"] == gone][-1]
+    assert (row["docs_in"], row["docs_out"], row["spans_out"],
+            row["input_fingerprint"]) == (0, 0, 0, None)
+    rep = run_report(spark, ck.backend).first()
+    assert rep["partitions_done"] == 8
+    assert rep["docs_in"] == rep["docs_out"] == n_b
+    # the empty done row matches the absent input: nothing is pending
+    again = ck.run(spark, b_df, run_id="r1",
+                   completed_ts="2026-01-01 02:00:00")
+    assert again["partitions_processed"] == 0
+    a = ck.run(spark, docs_df, run_id="r1",
+               completed_ts="2026-01-01 03:00:00")
+    assert a["partitions_processed"] == 1 and a["docs_out"] == 60 - n_b
+    assert _rows(spark, ck.backend) == single(docs_df, "a")
+
+
+@pytest.mark.parametrize("backend", ["parquet", "snapshot"])
+def test_every_partition_vanishing_leaves_no_rows(spark, docs_df, tmp_path,
+                                                  backend):
+    be = _backend(backend, tmp_path / backend)
+    ck = CheckpointedExtraction(be, n_parts=8)
+    ck.run(spark, docs_df, run_id="r1", completed_ts="2026-01-01 00:00:00")
+    r = ck.run(spark, docs_df.limit(0), run_id="r1",
+               completed_ts="2026-01-01 01:00:00")
+    assert r["partitions_processed"] == 8 and r["docs_out"] == 0
+    # a parquet table with no partition left is gone; a snapshot table
+    # reads as an empty scan
+    assert (not be.exists(spark, "extracted_spans")
+            or be.read(spark, "extracted_spans").count() == 0)
+    assert be.exists(spark, "extracted_spans") == (backend == "snapshot")
+
+
+def test_each_run_appends_one_checkpoint_file(spark, docs_df, tmp_path):
+    from crawspark.checkpoint import with_partition_key
+
+    root = tmp_path / "files"
+    ck = CheckpointedExtraction(ParquetBackend(str(root)), n_parts=8)
+    gone = with_partition_key(docs_df, 8).agg(
+        F.min("partition_key")).first()[0]
+    shrunk = with_partition_key(docs_df, 8).filter(
+        F.col("partition_key") != gone).drop("partition_key")
+    files = []
+    for i, (df, cap) in enumerate([(docs_df, 3), (docs_df, None),
+                                   (shrunk, None)]):
+        r = ck.run(spark, df, run_id="r1",
+                   completed_ts=f"2026-01-01 0{i}:00:00", max_partitions=cap)
+        assert r["partitions_processed"] == [3, 5, 1][i]
+        files.append(len(list((root / "checkpoint.parquet").glob(
+            "*.parquet"))))
+    assert files == [1, 2, 3]

@@ -51,7 +51,7 @@ def clean(spark, tmp_path_factory):
 
 
 def test_crawl_loop_semantics(clean):
-    from jobs.crawl_loop import robots_text_for
+    from crawspark.oracle.robots import synth_robots_txt
 
     summary = clean[1]
     rounds = summary["rounds"]
@@ -69,7 +69,7 @@ def test_crawl_loop_semantics(clean):
     hosts = [f"h{k}.example.com" for k in range(37)]
     kinds = {len(h) % 3 for h in hosts}
     assert 0 in kinds and 2 in kinds
-    assert "Disallow: /" in robots_text_for("h10.example.com")
+    assert "Disallow: /" in synth_robots_txt("h10.example.com")
 
 
 def test_crawl_loop_fetched_sets_are_deterministic(spark, clean, tmp_path):
@@ -141,6 +141,29 @@ def test_crawl_loop_resumes_inside_a_round(spark, clean, tmp_path,
     assert {r.partition_key for r in rows} == keys
     assert resumed == clean[1]
     assert _fetched(spark, out, 0) == FETCHED[0]
+
+
+def test_crawl_loop_rerun_with_fewer_seeds_drops_vanished_output(spark,
+                                                                 tmp_path):
+    # Partitions whose documents left a round's input are removed from
+    # its results, so a rerun with fewer seeds reports what a clean run
+    # with those seeds reports.
+    out = tmp_path / "shrink"
+    _run(spark, out, rounds=2, seeds=8)
+    assert _run(spark, out, rounds=2, seeds=4) == {
+        "rounds": [
+            {"round": 0, "frontier": 4, "blocked_by_robots": 0, "fetched": 4,
+             "spans": 23},
+            {"round": 1, "frontier": 5, "blocked_by_robots": 3, "fetched": 2,
+             "spans": 8}],
+        "visited": 9, "next_frontier": 4}
+    assert _fetched(spark, out, 0) == [0, 1, 2, 3]
+    zero = {"frontier": 0, "blocked_by_robots": 0, "fetched": 0, "spans": 0}
+    assert _run(spark, out, rounds=2, seeds=0) == {
+        "rounds": [{"round": r, **zero} for r in range(2)],
+        "visited": 0, "next_frontier": 0}
+    assert not (out / "spans_000.parquet").exists()
+    assert not (out / "spans_001.parquet").exists()
 
 
 def test_crawl_loop_exhausted_frontier(spark, tmp_path):

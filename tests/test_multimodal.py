@@ -7,11 +7,11 @@ from pyspark.sql import functions as F
 
 from crawspark.operators.multimodal import (
     N_FRAMES,
-    _per_doc,
     decode_media,
     extract_media_features,
     media_table,
 )
+from crawspark.operators.perdoc import _per_doc
 
 SF = "/root/testdata/sf0.001"
 
@@ -57,7 +57,7 @@ def test_frame_sample_fanout(spark):
 
 
 def test_per_doc_zero_one_many_rows(spark):
-    # Every format route emits its rows through _per_doc. A doc may emit
+    # Every synthetic route emits its rows through _per_doc. A doc may emit
     # none, one or several rows; docs 0-3 emit none, so range()'s first
     # partition is a batch with no output at all.
     schema = "doc_id long, k int, tag string, x double"
