@@ -196,75 +196,90 @@ def quality_lm_perplexity(spark, sf_dir):
                  F.round(F.avg(nl), 4).alias("avg_neg_logp")))
 
 
-def _doc_lines(docs):
-    """(doc_id, j, line): the Spark-side pseudo-line decomposition — the
-    twin of the _lines_ctes SQL fragment. j is the 0-based line position
-    (ordering only — never value-compared across engines)."""
-    return (docs
-            .select("doc_id", F.split("text", " ").alias("ts"))
-            .filter(F.size("ts") >= _LINE_W)
-            .select("doc_id", F.posexplode(F.expr(
-                f"transform(sequence(0, (size(ts) div {_LINE_W}) - 1),"
-                f" j -> array_join(slice(ts, j * {_LINE_W} + 1,"
-                f" {_LINE_W}), ' '))")).alias("j", "line")))
-
-
-def _line_arrays_and_boiler(docs):
-    """(withla, boiler_arr): per-doc pseudo-line ARRAYS + sub-line tail,
-    and the corpus boilerplate SET collected into one broadcastable row
-    — the r6 array-side twin of _lines_and_boiler. Per-doc work never
-    shuffles: the only exchange left in the line queries is the
-    line-frequency aggregation itself (per-doc lines are array_distinct
-    BEFORE the explode, so count(*) per line == count(DISTINCT doc_id)
-    without the two-phase distinct). The token array is bound through a
-    Generate barrier (see quality_repetition_stats: a plain alias would
-    be re-inlined at every reference site)."""
+def _line_arrays(docs):
+    """(doc_id, la, tail): per-doc pseudo-line ARRAY + sub-line token
+    tail for every doc with at least one full line — the ONE Spark-side
+    twin of the _lines_ctes decomposition (and of _REBUILD_SQL's rem).
+    Per-doc work never shuffles: it is a pure per-row expression, so
+    every line query's only exchange is the line-frequency aggregation
+    in _boiler_set. The token array is bound through a Generate barrier
+    (see quality_repetition_stats: a plain alias would be re-inlined at
+    every reference site)."""
     withts = (ensure_parallelism(docs)
               .select("doc_id", F.explode(F.array(F.split("text", " ")))
                       .alias("ts"))
               .filter(F.size("ts") >= _LINE_W))
-    withla = (withts
-              .select("doc_id", F.explode(F.array(F.expr(f"""named_struct(
-                  'la', transform(sequence(0, (size(ts) div {_LINE_W}) - 1),
-                        j -> array_join(slice(ts, j * {_LINE_W} + 1,
-                                              {_LINE_W}), ' ')),
-                  'tail', array_join(slice(ts,
-                          (size(ts) div {_LINE_W}) * {_LINE_W} + 1,
-                          size(ts)), ' '))"""))).alias("a"))
-              .select("doc_id", "a.la", "a.tail"))
+    return (withts
+            .select("doc_id", F.explode(F.array(F.expr(f"""named_struct(
+                'la', transform(sequence(0, (size(ts) div {_LINE_W}) - 1),
+                      j -> array_join(slice(ts, j * {_LINE_W} + 1,
+                                            {_LINE_W}), ' ')),
+                'tail', array_join(slice(ts,
+                        (size(ts) div {_LINE_W}) * {_LINE_W} + 1,
+                        size(ts)), ' '))"""))).alias("a"))
+            .select("doc_id", "a.la", "a.tail"))
+
+
+def _boiler_set(withla):
+    """The corpus-relative boilerplate SET of a _line_arrays frame,
+    collected into ONE broadcastable row ``boiler`` — the twin of the
+    _BOILER_CTES freq/thr pass. Per-doc lines are array_distinct BEFORE
+    the explode, so count(*) per line == count(DISTINCT doc_id) without
+    the two-phase distinct. freq feeds BOTH the scalar threshold and the
+    boiler filter; Spark has no common-subplan elimination across those
+    branches, so without the lineage cut the line-frequency shuffle runs
+    twice: materialize it once, both consumers read the result."""
     freq = (withla.select(F.explode(F.array_distinct("la")).alias("line"))
             .groupBy("line").agg(F.count("*").alias("ndocs"))
             .localCheckpoint())
     thr = freq.agg(F.greatest(
         F.lit(_BOILER_MIN_DOCS).cast("long"),
         F.ceil(_BOILER_FREQ_MULT * F.avg("ndocs"))).alias("thr"))
-    boiler_arr = (freq.crossJoin(F.broadcast(thr))
-                  .filter(F.col("ndocs") >= F.col("thr"))
-                  .agg(F.collect_list("line").alias("boiler")))  # 1 row
-    return withla, boiler_arr
+    return (freq.crossJoin(F.broadcast(thr))
+            .filter(F.col("ndocs") >= F.col("thr"))
+            .agg(F.collect_list("line").alias("boiler")))  # 1 row
 
 
-def _lines_and_boiler(docs):
-    """(lines(doc_id, j, line), boiler(line, ndocs)) — the ONE Spark-side
-    pseudo-line decomposition + corpus-relative boilerplate set, the twin
-    of the _BOILER_CTES SQL fragment. j is the 0-based line position
-    (ordering only — never value-compared across engines). freq feeds
-    BOTH the scalar threshold and the boiler filter; Spark has no
-    common-subplan elimination across those branches, so without the
-    lineage cut the full line-frequency shuffle runs twice (observed in
-    the plan audit: 3 -> 6 exchanges). Same fix as the HITS matvec:
-    materialize once, both consumers read the checkpointed result."""
-    lines = _doc_lines(docs)
-    freq = (lines.groupBy("line")
-            .agg(F.countDistinct("doc_id").alias("ndocs"))
-            .localCheckpoint())
-    thr = freq.agg(F.greatest(
-        F.lit(_BOILER_MIN_DOCS).cast("long"),
-        F.ceil(_BOILER_FREQ_MULT * F.avg("ndocs"))).alias("thr"))
-    boiler = (freq.crossJoin(F.broadcast(thr))
-              .filter(F.col("ndocs") >= F.col("thr"))
-              .select("line", "ndocs"))
-    return lines, boiler
+def _rebuild(docs, withla, kept):
+    """The rewrite output frame (doc_id, n_lines, n_dropped, cleaned_len,
+    cleaned_md5): ``kept`` (an array expression over ``la``, in line
+    order) rejoined + the sub-line token tail, md5-pinned; docs shorter
+    than one full line pass through whole. The ONE Spark-side twin of
+    _REBUILD_SQL, shared by every line-level rewrite, and map-only: per
+    doc it is one array filter + rejoin (kept is bound through a
+    Generate barrier so it is computed once)."""
+    cleaned = F.trim(F.concat(
+        F.array_join("s.kept", " "), F.lit(" "),
+        F.coalesce(F.col("s.tail"), F.lit(""))))
+    long_docs = (withla
+                 .select("doc_id", F.explode(F.array(F.struct(
+                     F.size("la").alias("nl"), kept.alias("kept"),
+                     "tail"))).alias("s"))
+                 .select("doc_id",
+                         F.col("s.nl").cast("int").alias("n_lines"),
+                         (F.col("s.nl") - F.size("s.kept")).cast("int")
+                         .alias("n_dropped"),
+                         F.length(cleaned).cast("int").alias("cleaned_len"),
+                         F.md5(cleaned.cast("binary")).alias("cleaned_md5")))
+    short_docs = (docs
+                  .filter(F.size(F.split("text", " ")) < _LINE_W)
+                  .select("doc_id",
+                          F.lit(0).cast("int").alias("n_lines"),
+                          F.lit(0).cast("int").alias("n_dropped"),
+                          F.length("text").cast("int").alias("cleaned_len"),
+                          F.md5(F.col("text").cast("binary"))
+                          .alias("cleaned_md5")))
+    return long_docs.unionByName(short_docs)
+
+
+def drop_boilerplate(docs, boiler):
+    """docs(doc_id, text) rewritten with every line of the one-row
+    ``boiler`` set (a _boiler_set frame) dropped — CCNet's paragraph
+    dedup applied to any batch of docs. The set broadcasts, so this is
+    map-only."""
+    withla = _line_arrays(docs).crossJoin(F.broadcast(boiler))
+    return _rebuild(docs, withla, F.filter(
+        "la", lambda ln: ~F.array_contains("boiler", ln)))
 
 
 @register("boilerplate_corpus_lines", sql=f"""
@@ -296,11 +311,10 @@ def boilerplate_corpus_lines(spark, sf_dir):
     # boilerplate set — the r5 shape exploded every line row, joined the
     # boiler table and re-aggregated by doc_id (one full line-table
     # exchange); now the only exchange is the frequency pass inside
-    # _line_arrays_and_boiler. Identical values: counting occurrences of
-    # boiler membership over the line array == summing the join flags.
-    docs = read_testdata(spark, sf_dir, "documents")
-    withla, boiler_arr = _line_arrays_and_boiler(docs)
-    return (withla.crossJoin(F.broadcast(boiler_arr))
+    # _boiler_set. Identical values: counting occurrences of boiler
+    # membership over the line array == summing the join flags.
+    withla = _line_arrays(read_testdata(spark, sf_dir, "documents"))
+    return (withla.crossJoin(F.broadcast(_boiler_set(withla)))
             .select("doc_id", F.explode(F.array(F.expr(
                 "named_struct("
                 " 'nl', size(la),"
@@ -1098,69 +1112,7 @@ def rewrite_drop_boilerplate(spark, sf_dir):
     aggregation: two more exchanges of every line string). filter()
     preserves array order, so the rebuilt text is identical."""
     docs = read_testdata(spark, sf_dir, "documents")
-    withla, boiler_arr = _line_arrays_and_boiler(docs)
-    cleaned = F.trim(F.concat(
-        F.array_join("s.kept", " "), F.lit(" "),
-        F.coalesce(F.col("s.tail"), F.lit(""))))
-    long_docs = (withla.crossJoin(F.broadcast(boiler_arr))
-                 .select("doc_id", F.explode(F.array(F.expr(
-                     "named_struct("
-                     " 'nl', size(la),"
-                     " 'kept', filter(la,"
-                     "          l -> NOT array_contains(boiler, l)),"
-                     " 'tail', tail)"))).alias("s"))
-                 .select("doc_id",
-                         F.col("s.nl").cast("int").alias("n_lines"),
-                         (F.col("s.nl") - F.size("s.kept")).cast("int")
-                         .alias("n_dropped"),
-                         F.length(cleaned).cast("int").alias("cleaned_len"),
-                         F.md5(cleaned.cast("binary")).alias("cleaned_md5")))
-    short_docs = (docs
-                  .filter(F.size(F.split("text", " ")) < _LINE_W)
-                  .select("doc_id",
-                          F.lit(0).cast("int").alias("n_lines"),
-                          F.lit(0).cast("int").alias("n_dropped"),
-                          F.length("text").cast("int").alias("cleaned_len"),
-                          F.md5(F.col("text").cast("binary"))
-                          .alias("cleaned_md5")))
-    return long_docs.unionByName(short_docs)
-
-
-def _rebuild_from_marked(docs, marked):
-    """marked(doc_id, j, line, drop) -> the rewrite output frame
-    (doc_id, n_lines, n_dropped, cleaned_len, cleaned_md5): surviving
-    lines rejoined in original order + the sub-line token tail; short
-    docs pass through whole. The ONE Spark-side twin of _REBUILD_SQL,
-    shared by every line-level rewrite query."""
-    agg = (marked.groupBy("doc_id")
-           .agg(F.count("*").cast("int").alias("n_lines"),
-                F.sum(F.col("drop").cast("int")).cast("int")
-                .alias("n_dropped"),
-                F.array_join(F.transform(
-                    F.array_sort(F.collect_list(
-                        F.when(~F.col("drop"),
-                               F.struct("j", "line")))),
-                    lambda s: s["line"]), " ").alias("kept")))
-    toks = docs.select("doc_id", "text", F.split("text", " ").alias("ts"))
-    rem = (toks.filter(F.size("ts") >= _LINE_W)
-           .select("doc_id", F.expr(
-               f"array_join(slice(ts, (size(ts) div {_LINE_W})"
-               f" * {_LINE_W} + 1, size(ts)), ' ')").alias("tail")))
-    cleaned = F.trim(F.concat(F.coalesce(F.col("kept"), F.lit("")),
-                              F.lit(" "),
-                              F.coalesce(F.col("tail"), F.lit(""))))
-    long_docs = (agg.join(rem, "doc_id")
-                 .select("doc_id", "n_lines", "n_dropped",
-                         F.length(cleaned).cast("int").alias("cleaned_len"),
-                         F.md5(cleaned.cast("binary")).alias("cleaned_md5")))
-    short_docs = (toks.filter(F.size("ts") < _LINE_W)
-                  .select("doc_id",
-                          F.lit(0).cast("int").alias("n_lines"),
-                          F.lit(0).cast("int").alias("n_dropped"),
-                          F.length("text").cast("int").alias("cleaned_len"),
-                          F.md5(F.col("text").cast("binary"))
-                          .alias("cleaned_md5")))
-    return long_docs.unionByName(short_docs)
+    return drop_boilerplate(docs, _boiler_set(_line_arrays(docs)))
 
 
 @register("rewrite_dedup_doc_lines", sql=f"""
@@ -1201,11 +1153,10 @@ def _rebuild_from_marked(docs, marked):
 def rewrite_dedup_doc_lines(spark, sf_dir):
     """Intra-document line dedup (CCNet runs this before the corpus
     pass): first occurrence of each pseudo-line survives, later repeats
-    drop, text rebuilt in order. 100 TB: the window partitions by
-    (doc_id, line) — per-document state only, no corpus-wide table at
-    all; the rebuild is the shared per-doc aggregation."""
-    from pyspark.sql.window import Window
-
+    drop, text rebuilt in order. 100 TB: map-only — array_distinct keeps
+    each line's first occurrence in order, exactly the oracle's
+    row_number() OVER (PARTITION BY doc_id, line ORDER BY i) = 1, so no
+    window, regroup or join; the rebuild is the shared _rebuild."""
     docs = read_testdata(spark, sf_dir, "documents")
     ts2 = F.split("text", " ")
     plants = (docs.filter((F.col("doc_id") % 13 == 0)
@@ -1220,7 +1171,4 @@ def rewrite_dedup_doc_lines(spark, sf_dir):
                           F.array_join(F.slice(ts2, 1, _LINE_W), " "))
                       .alias("text")))
     aug = docs.select("doc_id", "text").unionByName(plants)
-    w = Window.partitionBy("doc_id", "line").orderBy("j")
-    marked = (_doc_lines(aug)
-              .withColumn("drop", F.row_number().over(w) > 1))
-    return _rebuild_from_marked(aug, marked)
+    return _rebuild(aug, _line_arrays(aug), F.array_distinct("la"))

@@ -575,16 +575,11 @@ def ivf_assign(spark, sf_dir, with_embedding: bool = False,
             .mapInPandas(assign, schema))
 
 
-@register("ann_ivf_buckets")  # rows-only (centroid assignment is engine-specific)
-def ann_ivf_buckets(spark, sf_dir):
-    # Per-cell occupancy (one row per cell — richer than one aggregate).
-    assigned = ivf_assign(spark, sf_dir)
-    return (assigned.groupBy("cell").agg(F.count("*").alias("n_vectors"))
-            .orderBy("cell"))
-
-
-@register("ann_search_ivf", sql=f"""
-    WITH {_kmeans_ctes()},
+def _ivf_assign_cte() -> str:
+    """_kmeans_ctes + ``assign(vec_id, cell)``: every vector's
+    nearest trained centroid, round-6 cosine with lowest-cid ties — the
+    DuckDB replay of ivf_assign."""
+    return f"""{_kmeans_ctes()},
     cent AS (SELECT cid, cvec FROM cent{KMEANS_ITERS}),
     assign AS (
       SELECT vec_id, cell FROM (
@@ -594,7 +589,23 @@ def ann_ivf_buckets(spark, sf_dir):
                        6) DESC, c.cid) AS rn
         FROM embeddings e CROSS JOIN cent c
       ) WHERE rn = 1
-    ), probes AS (
+    )"""
+
+
+@register("ann_ivf_buckets", sql=f"""
+    WITH {_ivf_assign_cte()}
+    SELECT CAST(cell AS INT) AS cell, count(*) AS n_vectors
+    FROM assign GROUP BY cell ORDER BY cell
+""")
+def ann_ivf_buckets(spark, sf_dir):
+    # Per-cell occupancy (one row per cell — richer than one aggregate).
+    assigned = ivf_assign(spark, sf_dir)
+    return (assigned.groupBy("cell").agg(F.count("*").alias("n_vectors"))
+            .orderBy("cell"))
+
+
+@register("ann_search_ivf", sql=f"""
+    WITH {_ivf_assign_cte()}, probes AS (
       SELECT vec_id AS query_id, cell FROM (
         SELECT e.vec_id, c.cid AS cell,
                row_number() OVER (PARTITION BY e.vec_id ORDER BY

@@ -377,23 +377,17 @@ def stream_rewrite_boilerplate(spark, sf_dir):
     batch rewrite SQL: streamed rewrites must hash-equal batch rewrites
     row for row."""
     from crawspark.operators.lmquality import (
-        _doc_lines,
-        _lines_and_boiler,
-        _rebuild_from_marked,
+        _boiler_set,
+        _line_arrays,
+        drop_boilerplate,
     )
     from crawspark.sources import read_testdata
 
     docs = read_testdata(spark, sf_dir, "documents")
-    # offline pass: the corpus-global boilerplate set (localCheckpointed
-    # inside the helper, so microbatches reuse the materialized table)
-    _, boiler = _lines_and_boiler(docs)
-
-    def rewrite(batch):
-        marked = (_doc_lines(batch)
-                  .join(F.broadcast(boiler), "line", "left")
-                  .select("doc_id", "j", "line",
-                          F.col("ndocs").isNotNull().alias("drop")))
-        return _rebuild_from_marked(batch, marked)
-
+    # offline pass: the corpus-global boilerplate set (its line-frequency
+    # table is localCheckpointed inside _boiler_set, so microbatches reuse
+    # the materialized table)
+    boiler = _boiler_set(_line_arrays(docs))
     return _frontier_drain(spark, sf_dir, "srewrite",
-                           docs.select("doc_id", "text"), rewrite)
+                           docs.select("doc_id", "text"),
+                           lambda batch: drop_boilerplate(batch, boiler))

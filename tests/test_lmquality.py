@@ -478,7 +478,7 @@ def test_curate_v4_classifier_gate_composes(spark):
 
 def test_rewrite_drop_boilerplate_semantics(spark, sf_dir):
     # The rewrite must agree with the flag query doc by doc (same
-    # boilerplate definition — shared _BOILER_CTES / _lines_and_boiler),
+    # boilerplate definition — shared _BOILER_CTES / _boiler_set),
     # touch exactly the docs with boilerplate, and only ever shrink.
     import hashlib
 
@@ -537,3 +537,64 @@ def test_rewrite_dedup_doc_lines_semantics(spark, sf_dir):
                 text.encode()).hexdigest(), doc_id
         else:
             assert r.cleaned_len < len(text), doc_id
+
+
+# Docs the testdata never has: zero tokens, short docs, exactly one and
+# two full lines, repeated lines (adjacent and not), space-padded text
+# (empty tokens) and a null text. "nav home menu" recurs across docs so
+# the corpus boilerplate pass has a line to drop; the first doc's id is
+# a multiple of 13, so rewrite_dedup_doc_lines plants its twin.
+_HOSTILE_TEXTS = [
+    "nav home menu nav home menu nav home menu",
+    "",
+    "alpha",
+    "alpha beta",
+    "alpha beta gamma",
+    "alpha beta gamma delta epsilon zeta",
+    "nav home menu one two three nav home menu four five six",
+    "one two three nav home menu one two three",
+    "nav home menu tail",
+    "x y z nav home menu",
+    "alpha  beta gamma delta",
+    " alpha beta gamma",
+    "alpha beta gamma ",
+    None,
+]
+
+_LINE_ROWS = ["boilerplate_corpus_lines", "rewrite_drop_boilerplate",
+              "rewrite_dedup_doc_lines", "stream_rewrite_boilerplate"]
+
+
+def test_line_rows_match_oracle_on_hostile_docs(spark, tmp_path):
+    # Every pseudo-line row (decomposition, boilerplate set, rebuild,
+    # short-doc pass-through) must equal its registry SQL in DuckDB on
+    # the hostile docs, not only on the well-formed testdata.
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crawspark.registry import check_query, load_all
+    from crawspark.sources.tables import TESTDATA_TABLES
+
+    load_all()
+    src = pq.read_table(f"{SF}/documents.parquet").sort_by("doc_id")
+    rows = src.slice(0, 60).to_pylist()
+    for i, text in enumerate(_HOSTILE_TEXTS):
+        rows.append({"doc_id": 1001 + i, "text": text, "lang": "en",
+                     "source": "src1",
+                     "n_chars": None if text is None else len(text)})
+    pq.write_table(pa.Table.from_pylist(rows, schema=src.schema),
+                   tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        if t != "documents":
+            shutil.copy(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{tmp_path}/{t}.parquet')")
+    results = {name: check_query(spark, con, name, str(tmp_path))
+               for name in _LINE_ROWS}
+    con.close()
+    for name, r in results.items():
+        assert r["hash_match"], (name, r)

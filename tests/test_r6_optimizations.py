@@ -4,6 +4,7 @@ EQUIVALENCE or plan property of an operator whose internals changed
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawspark.plans import executed_plan
@@ -79,18 +80,21 @@ def test_bpe_driver_loop_matches_distributed_loop(spark, monkeypatch):
             == {tuple(r) for r in slow_words.collect()})
 
 
-def test_repetition_stats_plan_is_map_only(spark):
-    # Both Gopher signals are per-doc array expressions now: no
-    # exchange, no join anywhere in the plan.
+@pytest.mark.parametrize("name", ["quality_repetition_stats",
+                                  "rewrite_dedup_doc_lines"])
+def test_repetition_stats_plan_is_map_only(spark, name):
+    # Both Gopher signals and the intra-doc line dedup (array_distinct
+    # over the pseudo-line array) are per-doc array expressions: no
+    # exchange, join or window anywhere in the plan.
     from crawspark.registry import load_all
 
-    plan = executed_plan(
-        load_all()["quality_repetition_stats"].spark(spark, SF))
+    plan = executed_plan(load_all()[name].spark(spark, SF))
     # the guarded ensure_parallelism round-robin (inputs reading fewer
     # files than defaultParallelism) is the one allowed exchange; never
     # a hash/agg one
     assert "hashpartitioning" not in plan, plan[:1200]
     assert "Join" not in plan, plan[:1200]
+    assert "Window" not in plan, plan[:1200]
 
 
 def test_window_dedup_first_plan_has_no_window(spark):
